@@ -17,19 +17,31 @@ semantics provably agree (tested in tests/test_streaming.py).
 State layout — PK-hash-bucketed versioned parquet with an atomic
 manifest commit:
 
-    <target>/_sb=<b>/_sv=<n>/part-*.parquet
+    <target>/_sb=<b>/_sv=<n>/part-*.parquet   ← ONE data file per version
     <target>/_manifest.json        ← bucket→version map, os.replace'd
                                      once per batch (the commit point)
 
-A micro-batch rewrites ONLY the buckets whose keys changed: the
-changed-bucket set comes off the compacted batch (≤ num_buckets
-values), the base read prunes to those buckets' committed versions,
-and the merge stages each changed bucket's next version — then one
-manifest replace flips all of them atomically (readers see the whole
-batch or none of it; a crash mid-batch leaves only invisible orphan
-dirs that the retry skips past and later retention reaps). Unchanged
-buckets are never read or written — per-trigger write amplification
-is O(|changed buckets|), not O(|base|). On a cluster you'd swap this
+Per-batch job chain (per table) — one fold, one pass over the base,
+one file per bucket version, like bireme's one RowCache fold + one
+DELETE+COPY per LoadTask:
+
+    1. fold: an eager local checkpoint of the compacted batch; the same
+       job observes the changed-bucket set (≤ num_buckets values), so
+       neither the compaction nor a bucket collect runs again;
+    2. merge + write: the base read prunes to the changed buckets'
+       committed versions, the pessimistic anti-join broadcasts the
+       (small) compacted side, and the only shuffle clusters the result
+       by ``_sb`` so each changed bucket's next version is one task and
+       one file, staged under ``.staging-<batch>``;
+    3. commit: renames slot the staged dirs in, then one manifest replace
+       flips all of them atomically (readers see the whole batch or none
+       of it; a crash mid-batch leaves only invisible orphan dirs that
+       the retry skips past and later retention reaps).
+
+A batch with no rows for a table has no changed buckets and commits
+nothing — there is no separate emptiness probe. Unchanged buckets are
+never read or written — per-trigger write amplification is
+O(|changed buckets|), not O(|base|). On a cluster you'd swap this
 sink for Delta/Iceberg MERGE (same bucket-pruned plan with atomic
 commit) or a Greenplum/JDBC DELETE+COPY writer; versioned bucket dirs
 keep the test environment dependency-free while exercising the same
@@ -55,7 +67,7 @@ import os
 import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -66,74 +78,35 @@ from bireme_spark.sources.debezium import parse_debezium
 from bireme_spark.sources.maxwell import parse_maxwell
 
 
-# Reserved layout dir prefixes. Writes use _sb=/_sv= (collision-proof:
-# user tables may have columns named "bucket"/"v"); reads ALSO accept
-# the pre-rename names so an existing target is never read as empty,
-# and the writer migrates legacy dirs in place before its first merge.
-_LEGACY_BUCKET, _LEGACY_VERSION = "bucket", "v"
-
-
-def _dir_int(d: str, names: tuple[str, ...]) -> int | None:
-    for n in names:
-        if d.startswith(n + "="):
-            s = d.split("=", 1)[1]
-            if s.isdigit():
-                return int(s)
+# Layout dir prefixes are _sb=/_sv= (reserved, collision-proof names:
+# user tables may have columns named "bucket"/"v").
+def _dir_int(d: str, prefix: str) -> int | None:
+    if d.startswith(prefix + "="):
+        s = d.split("=", 1)[1]
+        if s.isdigit():
+            return int(s)
     return None
 
 
-def _latest_version(bucket_dir: str) -> int | None:
+def _bucket_dir(target_dir: str, b: int) -> str:
+    return f"{target_dir}/_sb={b}"
+
+
+def _version_dir(target_dir: str, b: int, v: int) -> str:
+    return f"{target_dir}/_sb={b}/_sv={v}"
+
+
+def _versions(bucket_dir: str) -> list[int]:
+    """Every version dir present under one bucket, ascending."""
     if not os.path.isdir(bucket_dir):
-        return None
-    versions = [
-        v
-        for d in os.listdir(bucket_dir)
-        if (v := _dir_int(d, ("_sv", _LEGACY_VERSION))) is not None
-    ]
-    return max(versions) if versions else None
+        return []
+    return sorted(v for d in os.listdir(bucket_dir) if (v := _dir_int(d, "_sv")) is not None)
 
 
 def _bucket_ids(target_dir: str) -> list[int]:
     if not os.path.isdir(target_dir):
         return []
-    return sorted(
-        b
-        for d in os.listdir(target_dir)
-        if (b := _dir_int(d, ("_sb", _LEGACY_BUCKET))) is not None
-    )
-
-
-def _bucket_dir(target_dir: str, b: int) -> str:
-    legacy = f"{target_dir}/{_LEGACY_BUCKET}={b}"
-    new = f"{target_dir}/_sb={b}"
-    return legacy if os.path.isdir(legacy) and not os.path.isdir(new) else new
-
-
-def _version_dir(bucket_dir: str, v: int) -> str:
-    legacy = f"{bucket_dir}/{_LEGACY_VERSION}={v}"
-    new = f"{bucket_dir}/_sv={v}"
-    return legacy if os.path.isdir(legacy) and not os.path.isdir(new) else new
-
-
-def _migrate_legacy_layout(target_dir: str) -> None:
-    """One-time in-place rename of pre-rename layout dirs
-    (bucket=/v= → _sb=/_sv=). Metadata-only and idempotent; called by
-    the single writer before a merge so post-upgrade state is uniform
-    (read paths tolerate both conventions regardless)."""
-    if not os.path.isdir(target_dir):
-        return
-    for d in list(os.listdir(target_dir)):
-        b = _dir_int(d, (_LEGACY_BUCKET,))
-        if b is not None:
-            os.rename(os.path.join(target_dir, d), os.path.join(target_dir, f"_sb={b}"))
-    for b in _bucket_ids(target_dir):
-        bdir = f"{target_dir}/_sb={b}"
-        if not os.path.isdir(bdir):
-            continue
-        for d in list(os.listdir(bdir)):
-            v = _dir_int(d, (_LEGACY_VERSION,))
-            if v is not None:
-                os.rename(os.path.join(bdir, d), os.path.join(bdir, f"_sv={v}"))
+    return sorted(b for d in os.listdir(target_dir) if (b := _dir_int(d, "_sb")) is not None)
 
 
 _MANIFEST = "_manifest.json"
@@ -141,8 +114,8 @@ _MANIFEST = "_manifest.json"
 
 def _read_manifest(target_dir: str) -> dict[int, int] | None:
     """Committed bucket→version map; None ONLY when no manifest file
-    exists (legacy/new target — max-version-dir fallback is then
-    safe: nothing was ever committed through a manifest). A manifest
+    exists (a target never committed through a manifest — the
+    max-version-dir fallback is then safe). A manifest
     that EXISTS but cannot be parsed raises: silently downgrading to
     the dir scan would adopt uncommitted orphan v-dirs as committed
     state — the exact exposure the manifest prevents."""
@@ -209,30 +182,27 @@ def _write_manifest(target_dir: str, versions: dict[int, int], batch_id: int) ->
     os.replace(tmp, os.path.join(target_dir, _MANIFEST))
 
 
-def _latest_paths(target_dir: str, buckets: Sequence[int] | None = None) -> list[str]:
-    """Paths of the COMMITTED version of each bucket: the manifest
-    when present (crash-consistent snapshot), else the max version
-    dir (legacy layout). An orphan v-dir from a crashed batch is
-    invisible until a later batch supersedes and reaps it."""
+def _committed_versions(target_dir: str) -> dict[int, int]:
+    """The committed bucket→version map: the manifest when present
+    (crash-consistent snapshot), else the max version dir of each
+    bucket (a target never committed through a manifest)."""
     manifest = _read_manifest(target_dir)
     if manifest is not None:
-        out = []
-        for b, v in sorted(manifest.items()):
-            if buckets is not None and b not in buckets:
-                continue
-            p = _version_dir(_bucket_dir(target_dir, b), v)
-            if os.path.isdir(p):
-                out.append(p)
-        return out
-    paths = []
-    for b in _bucket_ids(target_dir):
-        if buckets is not None and b not in buckets:
-            continue
-        bdir = _bucket_dir(target_dir, b)
-        v = _latest_version(bdir)
-        if v is not None:
-            paths.append(_version_dir(bdir, v))
-    return paths
+        return manifest
+    return {
+        b: vs[-1] for b in _bucket_ids(target_dir) if (vs := _versions(_bucket_dir(target_dir, b)))
+    }
+
+
+def _latest_paths(target_dir: str, buckets: Sequence[int] | None = None) -> list[str]:
+    """Paths of the COMMITTED version of each bucket. An orphan v-dir
+    from a crashed batch is invisible until a later batch supersedes
+    and reaps it."""
+    return [
+        p
+        for b, v in sorted(_committed_versions(target_dir).items())
+        if (buckets is None or b in buckets) and os.path.isdir(p := _version_dir(target_dir, b, v))
+    ]
 
 
 def vacuum_versions(target_dir: str, keep: int = 1) -> dict[str, int]:
@@ -260,25 +230,20 @@ def vacuum_versions(target_dir: str, keep: int = 1) -> dict[str, int]:
         "superseded_removed": 0,
     }
     for b in _bucket_ids(target_dir):
-        bdir = _bucket_dir(target_dir, b)
         committed = manifest.get(b)
-        vs = sorted(
-            v
-            for d in os.listdir(bdir)
-            if (v := _dir_int(d, ("_sv", _LEGACY_VERSION))) is not None
-        )
+        vs = _versions(_bucket_dir(target_dir, b))
         stats["n_buckets"] += 1
         stats["versions_before"] += len(vs)
-        if committed is None:  # legacy / unmanifested: treat max as committed
+        if committed is None:  # unmanifested: treat max as committed
             committed = vs[-1] if vs else 0
         retained_floor_idx = max(0, len([v for v in vs if v <= committed]) - keep)
         retained = set(vs[retained_floor_idx:])
         for v in vs:
             if v > committed:
-                shutil.rmtree(_version_dir(bdir, v), ignore_errors=True)
+                shutil.rmtree(_version_dir(target_dir, b, v), ignore_errors=True)
                 stats["orphans_removed"] += 1
             elif v not in retained:
-                shutil.rmtree(_version_dir(bdir, v), ignore_errors=True)
+                shutil.rmtree(_version_dir(target_dir, b, v), ignore_errors=True)
                 stats["superseded_removed"] += 1
             else:
                 stats["versions_after"] += 1
@@ -363,17 +328,11 @@ def shallow_clone(src_dir: str, dst_dir: str, batch_id: int = 1) -> dict[str, in
     Spark job — cloning a 100 TB sink is a filesystem pass. Returns
     exact counts so a caller can assert zero-copy (files_copied ==
     0 on one device)."""
-    manifest = _read_manifest(src_dir)
-    if manifest is None:  # legacy layout: adopt visible dirs
-        manifest = {
-            b: v
-            for b in _bucket_ids(src_dir)
-            if (v := _latest_version(_bucket_dir(src_dir, b))) is not None
-        }
+    manifest = _committed_versions(src_dir)
     stats = {"n_buckets": len(manifest), "files_linked": 0, "files_copied": 0, "bytes_shared": 0}
     for b, v in sorted(manifest.items()):
-        src_v = _version_dir(_bucket_dir(src_dir, b), v)
-        dst_v = f"{dst_dir}/_sb={b}/_sv={v}"
+        src_v = _version_dir(src_dir, b, v)
+        dst_v = _version_dir(dst_dir, b, v)
         os.makedirs(dst_v, exist_ok=True)
         for name in os.listdir(src_v):
             s, d = os.path.join(src_v, name), os.path.join(dst_v, name)
@@ -400,12 +359,7 @@ def read_state(spark: SparkSession, target_dir: str) -> DataFrame | None:
     paths = _latest_paths(target_dir)
     if not paths:
         return None
-    # drop whichever partition columns the dir convention injected —
-    # NEVER the legacy names on a new-layout target, where "v" could
-    # legitimately be a user data column
-    legacy = any(f"/{_LEGACY_BUCKET}=" in p for p in paths)
-    drop_cols = (_LEGACY_BUCKET, _LEGACY_VERSION) if legacy else ("_sb", "_sv")
-    return spark.read.option("basePath", target_dir).parquet(*paths).drop(*drop_cols)
+    return spark.read.option("basePath", target_dir).parquet(*paths).drop("_sb", "_sv")
 
 
 def kafka_reader_options(source: SourceConfig, max_events: int | None = None) -> dict[str, str]:
@@ -489,20 +443,23 @@ def _write_changed_buckets(
     batch_id: int,
     fence: bool = False,
 ) -> None:
-    """One job writes every changed bucket's rows; renames slot each
-    bucket dir in as its next version (empty buckets — all keys
-    deleted — get an explicit empty version so stale state clears);
-    then ONE atomic manifest replace commits the whole batch
-    (``_write_manifest``). Retention keeps (committed, next): readers
-    holding the old manifest keep their snapshot, anything older —
-    including orphan versions from a crashed batch that never reached
-    its manifest commit — is garbage.
+    """One job writes every changed bucket's rows, clustered by
+    ``_sb`` before ``partitionBy`` so each bucket's rows land in one
+    task: every committed ``_sv=`` version holds exactly ONE data file
+    (a reader opens ``|buckets|`` files, not tasks × buckets). This
+    clustering is the write's only shuffle. Renames slot each bucket
+    dir in as its next version (empty buckets — all keys deleted — get
+    an explicit empty version so stale state clears); then ONE atomic
+    manifest replace commits the whole batch (``_write_manifest``).
+    Retention keeps (committed, next): readers holding the old
+    manifest keep their snapshot, anything older — including orphan
+    versions from a crashed batch that never reached its manifest
+    commit — is garbage.
 
     Crash/retry safety: a batch that dies after some renames leaves
     orphan v-dirs but the manifest still points at the committed
     state, so the foreachBatch re-run reads the SAME base it read the
     first time (``next_v`` skips past orphans to avoid collisions)."""
-    _migrate_legacy_layout(target_dir)  # idempotent; writer-side only
     # OPT-IN writer fencing (Delta txn-version twin): with fence=True a
     # batch_id BELOW the committed one is treated as a zombie — a
     # superseded writer epoch racing a newer one — and refused. EQUAL
@@ -519,33 +476,41 @@ def _write_changed_buckets(
                 f"stale writer fenced: batch {batch_id} < committed {committed_batch}"
                 f" at {target_dir!r}"
             )
-    versions = _read_manifest(target_dir)
-    if versions is None:  # legacy target: adopt the visible dirs
-        versions = {
-            b: v
-            for b in _bucket_ids(target_dir)
-            if (v := _latest_version(f"{target_dir}/_sb={b}")) is not None
-        }
+    versions = _committed_versions(target_dir)
     staging = f"{target_dir}/.staging-{batch_id}"
-    merged.write.partitionBy("_sb").mode("overwrite").parquet(staging)
+    merged.repartition("_sb").write.partitionBy("_sb").mode("overwrite").parquet(staging)
     for b in changed:
-        bdir = f"{target_dir}/_sb={b}"
+        bdir = _bucket_dir(target_dir, b)
         committed = versions.get(b)
+        present = _versions(bdir)
         # past any orphan dirs a crashed attempt left behind
-        next_v = max(_latest_version(bdir) or 0, committed or 0) + 1
+        next_v = max([*present, committed or 0]) + 1
         os.makedirs(bdir, exist_ok=True)
         src = f"{staging}/_sb={b}"
         if os.path.isdir(src):
-            os.rename(src, f"{bdir}/_sv={next_v}")
+            os.rename(src, _version_dir(target_dir, b, next_v))
         else:
             empty = bspark.createDataFrame([], merged.drop("_sb").schema)
-            empty.write.parquet(f"{bdir}/_sv={next_v}")
-        for d in os.listdir(bdir):
-            if d.startswith("_sv=") and int(d.split("=", 1)[1]) < (committed or next_v):
-                shutil.rmtree(f"{bdir}/{d}", ignore_errors=True)
+            empty.write.parquet(_version_dir(target_dir, b, next_v))
+        for v in present:
+            if v < (committed or next_v):
+                shutil.rmtree(_version_dir(target_dir, b, v), ignore_errors=True)
         versions[b] = next_v
     _write_manifest(target_dir, versions, batch_id)
     shutil.rmtree(staging, ignore_errors=True)
+
+
+def _checkpoint_buckets(df: DataFrame, key_col: str, nb: int) -> tuple[DataFrame, list[int]]:
+    """Materialize ``df`` with one eager local checkpoint and return it
+    with the sorted PK-hash buckets its ``key_col`` values fall in,
+    observed by that same job — the fold runs once and the
+    changed-bucket set costs no extra scan. An eager checkpoint, not
+    ``persist()``: readers of the cached AQE plan ran at the full
+    shuffle-partition width and lost the gain. An empty ``df`` yields
+    no buckets."""
+    seen = Observation()
+    df = df.observe(seen, F.collect_set(_bucket_col(key_col, nb)).alias("b")).localCheckpoint()
+    return df, sorted(seen.get["b"])
 
 
 def run_cdc_pipeline(
@@ -577,14 +542,12 @@ def run_cdc_pipeline(
     nb = config.num_buckets
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # persist: the merge scans the micro-batch several times
-        # (compact fold, changed-bucket collect, per-bucket writes) —
-        # uncached, every scan re-reads the SOURCE (re-polls Kafka)
-        # and re-derives monotonically_increasing_id offsets, which
-        # must be stable within the batch (same pattern as
-        # multi_batch below)
+        # persist: the fold scans the micro-batch twice (its key-change
+        # union) — uncached, each scan re-reads the SOURCE (re-polls
+        # Kafka), re-parses the envelopes and re-derives the
+        # monotonically_increasing_id offsets. Each sink then
+        # materializes the compacted result once before reading it
+        # again, so the fold itself never re-runs.
         batch_df = batch_df.persist()
         try:
             compacted = _compact_parsed(batch_df, payload_cols)
@@ -601,7 +564,7 @@ def run_cdc_pipeline(
                     payload_cols=("key", *payload_cols),
                     properties=config.jdbc_properties,
                 )
-                sink(compacted.withColumnRenamed("final_op", "op"), batch_id)
+                sink(compacted.localCheckpoint().withColumnRenamed("final_op", "op"), batch_id)
                 return
             _merge_compacted_versioned(
                 batch_df.sparkSession,
@@ -671,11 +634,18 @@ def _merge_compacted_versioned(
     batch_id: int,
 ) -> None:
     """Merge one table's compacted batch into its bucket-versioned
-    parquet state (changed-bucket pruning + atomic manifest commit)."""
-    _migrate_legacy_layout(target_dir)  # before the base read
+    parquet state: one fold, one pass over the changed buckets' base,
+    one file per bucket version, one atomic manifest commit.
+
+    The compacted batch is checkpointed once and the changed buckets
+    are observed in that job. It is the small side of the pessimistic
+    anti-join and is broadcast there, so the base is shuffled once, by
+    ``_sb``, inside the write. A batch with no rows for this table has
+    no changed buckets and commits nothing."""
     key_col = key_fields[0]
-    compacted = compacted.withColumn("_sb", _bucket_col("key", nb))
-    changed = sorted(r._sb for r in compacted.select("_sb").distinct().collect())
+    compacted, changed = _checkpoint_buckets(compacted, "key", nb)
+    if not changed:
+        return
 
     base_paths = _latest_paths(target_dir, changed)
     if base_paths:
@@ -689,7 +659,7 @@ def _merge_compacted_versioned(
         )
     merged = apply_changes(
         base,
-        compacted,
+        F.broadcast(compacted),
         base_key_cols=(base_columns[0],),
         compact_key_cols=("key",),
         payload_map={c: c for c in base_columns[1:]},
@@ -753,8 +723,6 @@ def run_multi_table_pipeline(
         by_target.setdefault(target, []).append(origin)
 
     def multi_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_df = batch_df.persist()
         try:
             for target, spec in tables.items():
@@ -783,9 +751,8 @@ def run_multi_table_pipeline(
                         sub, "value", spec.data_schema, spec.key_fields, source=source.name
                     )
                 # routing already happened on the raw envelope; tables
-                # without a mapping entry were never parsed at all
-                if parsed.isEmpty():
-                    continue
+                # without a mapping entry were never parsed at all, and
+                # a table with no rows in this batch commits nothing
                 payload_cols = [
                     f.name
                     for f in spec.data_schema.fields
@@ -860,8 +827,6 @@ def run_scd2_pipeline(
     )
 
     def scd2_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         bspark = batch_df.sparkSession
         changes = batch_df.select(
             "key",
@@ -873,6 +838,11 @@ def run_scd2_pipeline(
             ),
             *[F.col(f"data.{c}").alias(c) for c in payload_cols],
         )
+        # the version fold, the first-change agg and the retry
+        # anti-join all read the parsed batch: parse it once
+        changes, changed = _checkpoint_buckets(changes, "key", nb)
+        if not changed:
+            return
         hist = scd2(
             changes,
             key_cols=("key",),
@@ -882,10 +852,6 @@ def run_scd2_pipeline(
             "key", *payload_cols, "valid_from", "valid_to", "is_current"
         )
         firsts = changes.groupBy("key").agg(F.min("produce_time_ms").alias("first_ts"))
-        firsts = firsts.withColumn("_sb", _bucket_col("key", nb))
-        changed = sorted(r._sb for r in firsts.select("_sb").distinct().collect())
-
-        _migrate_legacy_layout(config.target_dir)  # before the base read
         base_paths = _latest_paths(config.target_dir, changed)
         if base_paths:
             base = (
@@ -912,7 +878,7 @@ def run_scd2_pipeline(
             & (F.col("valid_from") < F.col("first_ts"))
         )
         closed = (
-            base.join(firsts.select("key", "first_ts"), "key", "left")
+            base.join(firsts, "key", "left")
             .select(
                 "key",
                 *payload_cols,
