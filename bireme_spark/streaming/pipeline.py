@@ -29,14 +29,19 @@ DELETE+COPY per LoadTask:
        job observes the changed-bucket set (≤ num_buckets values), so
        neither the compaction nor a bucket collect runs again;
     2. merge + write: the base read prunes to the changed buckets'
-       committed versions, the pessimistic anti-join broadcasts the
-       (small) compacted side, and the only shuffle clusters the result
-       by ``_sb`` so each changed bucket's next version is one task and
-       one file, staged under ``.staging-<batch>``;
+       committed versions; the checkpoint keeps the fold's size
+       statistics, so the planner's broadcast threshold and AQE pick
+       the pessimistic anti-join's strategy (a small batch is
+       broadcast); the write clusters the result by ``_sb`` so each
+       changed bucket's next version is one task and one file, staged
+       under ``.staging-<batch>``;
     3. commit: renames slot the staged dirs in, then one manifest replace
        flips all of them atomically (readers see the whole batch or none
        of it; a crash mid-batch leaves only invisible orphan dirs that
-       the retry skips past and later retention reaps).
+       the retry skips past and later retention reaps);
+    4. release: the checkpoint's blocks are dropped once the manifest is
+       committed (or the batch fails), so a sync that runs without end
+       holds no storage from past batches.
 
 A batch with no rows for a table has no changed buckets and commits
 nothing — there is no separate emptiness probe. Unchanged buckets are
@@ -507,10 +512,20 @@ def _checkpoint_buckets(df: DataFrame, key_col: str, nb: int) -> tuple[DataFrame
     changed-bucket set costs no extra scan. An eager checkpoint, not
     ``persist()``: readers of the cached AQE plan ran at the full
     shuffle-partition width and lost the gain. An empty ``df`` yields
-    no buckets."""
+    no buckets. The caller frees the checkpoint with
+    ``_release_checkpoint`` once it is done with the frame."""
     seen = Observation()
     df = df.observe(seen, F.collect_set(_bucket_col(key_col, nb)).alias("b")).localCheckpoint()
     return df, sorted(seen.get["b"])
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a frame returned by ``localCheckpoint()``.
+    Left alone they are freed only when the JVM garbage-collects the
+    RDD, and a live sync checkpoints every table of every batch (see
+    ``bireme_spark/util.py`` for what leaked blocks cost). The frame
+    cannot be read afterwards: the checkpoint cut its lineage."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def run_cdc_pipeline(
@@ -545,9 +560,8 @@ def run_cdc_pipeline(
         # persist: the fold scans the micro-batch twice (its key-change
         # union) — uncached, each scan re-reads the SOURCE (re-polls
         # Kafka), re-parses the envelopes and re-derives the
-        # monotonically_increasing_id offsets. Each sink then
-        # materializes the compacted result once before reading it
-        # again, so the fold itself never re-runs.
+        # monotonically_increasing_id offsets, which must be stable
+        # within the batch.
         batch_df = batch_df.persist()
         try:
             compacted = _compact_parsed(batch_df, payload_cols)
@@ -564,7 +578,7 @@ def run_cdc_pipeline(
                     payload_cols=("key", *payload_cols),
                     properties=config.jdbc_properties,
                 )
-                sink(compacted.localCheckpoint().withColumnRenamed("final_op", "op"), batch_id)
+                sink(compacted.withColumnRenamed("final_op", "op"), batch_id)
                 return
             _merge_compacted_versioned(
                 batch_df.sparkSession,
@@ -638,39 +652,40 @@ def _merge_compacted_versioned(
     one file per bucket version, one atomic manifest commit.
 
     The compacted batch is checkpointed once and the changed buckets
-    are observed in that job. It is the small side of the pessimistic
-    anti-join and is broadcast there, so the base is shuffled once, by
-    ``_sb``, inside the write. A batch with no rows for this table has
-    no changed buckets and commits nothing."""
+    are observed in that job; the checkpoint is released after the
+    commit. A batch with no rows for this table has no changed buckets
+    and commits nothing."""
     key_col = key_fields[0]
     compacted, changed = _checkpoint_buckets(compacted, "key", nb)
-    if not changed:
-        return
-
-    base_paths = _latest_paths(target_dir, changed)
-    if base_paths:
-        base = (
-            bspark.read.option("basePath", target_dir).parquet(*base_paths).drop("_sb", "_sv")
-        )
-    else:
-        base = bspark.createDataFrame(
-            [],
-            ", ".join(f"{c} {_ddl(data_schema, c, key_fields, key_col)}" for c in base_columns),
-        )
-    merged = apply_changes(
-        base,
-        F.broadcast(compacted),
-        base_key_cols=(base_columns[0],),
-        compact_key_cols=("key",),
-        payload_map={c: c for c in base_columns[1:]},
-        # pessimistic ALWAYS: a foreachBatch retry after a partial
-        # bucket write re-applies the same batch against state that
-        # already contains its inserts — only the unconditional
-        # anti-join keeps that idempotent (parquet has no PK
-        # constraint to catch a wrong optimistic guess).
-        mode="pessimistic",
-    ).withColumn("_sb", _bucket_col(base_columns[0], nb))
-    _write_changed_buckets(bspark, target_dir, merged, changed, batch_id)
+    try:
+        if not changed:
+            return
+        base_paths = _latest_paths(target_dir, changed)
+        if base_paths:
+            base = (
+                bspark.read.option("basePath", target_dir).parquet(*base_paths).drop("_sb", "_sv")
+            )
+        else:
+            ddl = ", ".join(
+                f"{c} {_ddl(data_schema, c, key_fields, key_col)}" for c in base_columns
+            )
+            base = bspark.createDataFrame([], ddl)
+        merged = apply_changes(
+            base,
+            compacted,
+            base_key_cols=(base_columns[0],),
+            compact_key_cols=("key",),
+            payload_map={c: c for c in base_columns[1:]},
+            # pessimistic ALWAYS: a foreachBatch retry after a partial
+            # bucket write re-applies the same batch against state that
+            # already contains its inserts — only the unconditional
+            # anti-join keeps that idempotent (parquet has no PK
+            # constraint to catch a wrong optimistic guess).
+            mode="pessimistic",
+        ).withColumn("_sb", _bucket_col(base_columns[0], nb))
+        _write_changed_buckets(bspark, target_dir, merged, changed, batch_id)
+    finally:
+        _release_checkpoint(compacted)
 
 
 class TableSpec:
@@ -841,61 +856,64 @@ def run_scd2_pipeline(
         # the version fold, the first-change agg and the retry
         # anti-join all read the parsed batch: parse it once
         changes, changed = _checkpoint_buckets(changes, "key", nb)
-        if not changed:
-            return
-        hist = scd2(
-            changes,
-            key_cols=("key",),
-            order_cols=("produce_time_ms", "src_partition", "src_offset"),
-            payload_cols=tuple(payload_cols),
-        ).select(
-            "key", *payload_cols, "valid_from", "valid_to", "is_current"
-        )
-        firsts = changes.groupBy("key").agg(F.min("produce_time_ms").alias("first_ts"))
-        base_paths = _latest_paths(config.target_dir, changed)
-        if base_paths:
-            base = (
-                bspark.read.option("basePath", config.target_dir)
-                .parquet(*base_paths)
-                .drop("_sb", "_sv")
+        try:
+            if not changed:
+                return
+            hist = scd2(
+                changes,
+                key_cols=("key",),
+                order_cols=("produce_time_ms", "src_partition", "src_offset"),
+                payload_cols=tuple(payload_cols),
+            ).select(
+                "key", *payload_cols, "valid_from", "valid_to", "is_current"
             )
-        else:
-            base = bspark.createDataFrame([], hist_schema)
-        # Close the open version of every touched key at the batch's
-        # first change time; untouched keys in the bucket pass through.
-        # RETRY IDEMPOTENCY (the post-manifest-commit, pre-checkpoint-
-        # commit window: Structured Streaming re-runs the batch against
-        # state that already contains it):
-        #  * only close versions that OPENED BEFORE this batch
-        #    (valid_from < first_ts) — a replay sees the batch's own
-        #    open version (valid_from ≥ first_ts) and leaves it alone;
-        #  * anti-join the batch's version rows against the base on the
-        #    SCD2 version identity (key, valid_from) so already-applied
-        #    rows are not appended twice.
-        closing = (
-            F.col("is_current")
-            & F.col("first_ts").isNotNull()
-            & (F.col("valid_from") < F.col("first_ts"))
-        )
-        closed = (
-            base.join(firsts, "key", "left")
-            .select(
-                "key",
-                *payload_cols,
-                "valid_from",
-                F.when(closing, F.col("first_ts")).otherwise(F.col("valid_to")).alias(
-                    "valid_to"
-                ),
-                (F.col("is_current") & (F.col("first_ts").isNull() | ~closing)).alias(
-                    "is_current"
-                ),
+            firsts = changes.groupBy("key").agg(F.min("produce_time_ms").alias("first_ts"))
+            base_paths = _latest_paths(config.target_dir, changed)
+            if base_paths:
+                base = (
+                    bspark.read.option("basePath", config.target_dir)
+                    .parquet(*base_paths)
+                    .drop("_sb", "_sv")
+                )
+            else:
+                base = bspark.createDataFrame([], hist_schema)
+            # Close the open version of every touched key at the batch's
+            # first change time; untouched keys in the bucket pass through.
+            # RETRY IDEMPOTENCY (the post-manifest-commit, pre-checkpoint-
+            # commit window: Structured Streaming re-runs the batch against
+            # state that already contains it):
+            #  * only close versions that OPENED BEFORE this batch
+            #    (valid_from < first_ts) — a replay sees the batch's own
+            #    open version (valid_from ≥ first_ts) and leaves it alone;
+            #  * anti-join the batch's version rows against the base on the
+            #    SCD2 version identity (key, valid_from) so already-applied
+            #    rows are not appended twice.
+            closing = (
+                F.col("is_current")
+                & F.col("first_ts").isNotNull()
+                & (F.col("valid_from") < F.col("first_ts"))
             )
-        )
-        fresh = hist.join(
-            base.select("key", "valid_from"), ["key", "valid_from"], "left_anti"
-        )
-        merged = closed.unionByName(fresh).withColumn("_sb", _bucket_col("key", nb))
-        _write_changed_buckets(bspark, config.target_dir, merged, changed, batch_id)
+            closed = (
+                base.join(firsts, "key", "left")
+                .select(
+                    "key",
+                    *payload_cols,
+                    "valid_from",
+                    F.when(closing, F.col("first_ts")).otherwise(F.col("valid_to")).alias(
+                        "valid_to"
+                    ),
+                    (F.col("is_current") & (F.col("first_ts").isNull() | ~closing)).alias(
+                        "is_current"
+                    ),
+                )
+            )
+            fresh = hist.join(
+                base.select("key", "valid_from"), ["key", "valid_from"], "left_anti"
+            )
+            merged = closed.unionByName(fresh).withColumn("_sb", _bucket_col("key", nb))
+            _write_changed_buckets(bspark, config.target_dir, merged, changed, batch_id)
+        finally:
+            _release_checkpoint(changes)
 
     writer = (
         parsed.writeStream.foreachBatch(scd2_batch)

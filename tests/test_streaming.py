@@ -170,6 +170,47 @@ def test_each_committed_version_is_one_data_file(spark, two_batch_sink, tmp_path
     assert {r.k for r in read_state(spark, target).collect()} == {k for k in _KEYS if k % 2}
 
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    jvm, sc = spark.sparkContext._jvm, spark.sparkContext._jsc.sc()
+    return set(jvm.scala.collection.JavaConverters.mapAsJavaMap(sc.getPersistentRDDs()).keySet())
+
+
+def test_merge_releases_its_batch_checkpoint(spark, tmp_path):
+    """Each merge checkpoints its compacted batch; a sync that never
+    stops must not keep those blocks. Inserts, updates and an empty
+    batch all leave the set of persisted RDDs as they found it."""
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.sources.maxwell import parse_maxwell
+    from bireme_spark.streaming import pipeline as pl
+
+    schema = StructType().add("k", "long").add("price", "double")
+    target = str(tmp_path / "target")
+
+    def merge(batch_id, changes):
+        raw = spark.createDataFrame(
+            [
+                ('{"database": "d", "table": "t", "type": "%s", "ts": %d, '
+                 '"data": {"k": %d, "price": %s}}' % (op, batch_id + 1, k, k + batch_id), 0, i)
+                for i, (k, op) in enumerate(changes)
+            ],
+            "value string, src_partition long, src_offset long",
+        )
+        compacted = pl._compact_parsed(parse_maxwell(raw, "value", schema, ("k",)), ["price"])
+        pl._merge_compacted_versioned(
+            spark, target, compacted, schema, ("k",), ("k", "price"), 4, batch_id
+        )
+
+    before = _persistent_rdd_ids(spark)
+    merge(0, [(k, "insert") for k in range(20)])
+    merge(1, [(k, "update") for k in range(5)])
+    merge(2, [])
+    assert _persistent_rdd_ids(spark) - before == set()
+    assert pl._read_committed_batch(target) == 1
+    got = {(r.k, r.price) for r in pl.read_state(spark, target).collect()}
+    assert got == {(k, float(k + (1 if k < 5 else 0))) for k in range(20)}
+
+
 def test_multi_table_batch_without_mapped_rows_commits_nothing(spark, tmp_path):
     """A micro-batch whose lines are all unmapped-table changes or
     malformed runs the per-table merge with no emptiness probe: it has
