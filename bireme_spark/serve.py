@@ -41,7 +41,11 @@ def serve(
     from pyspark.sql.types import _parse_datatype_string
 
     from bireme_spark.session import get_spark
-    from bireme_spark.streaming.pipeline import run_cdc_pipeline
+    from bireme_spark.streaming.pipeline import (
+        TableSpec,
+        run_cdc_pipeline,
+        run_multi_table_pipeline,
+    )
     from bireme_spark.streaming.state_server import StateServer
     from bireme_spark.streaming.stats import PipelineStatListener
 
@@ -59,6 +63,12 @@ def serve(
         )
         return 2
 
+    def table_spec(ddl: str, keys) -> TableSpec:
+        schema = _parse_datatype_string(f"struct<{ddl}>")
+        keys = tuple(keys)  # base column order: key first
+        payload = tuple(f.name for f in schema.fields if f.name not in keys)
+        return TableSpec(schema, keys, keys + payload)
+
     spark = get_spark(app_name="bireme-serve")
     listener = PipelineStatListener()
     spark.streams.addListener(listener)
@@ -73,31 +83,20 @@ def serve(
     if multi:
         # one streaming query syncs EVERY mapped table of the source —
         # bireme's deployment shape (a whole database binlog topic)
-        from bireme_spark.streaming.pipeline import TableSpec, run_multi_table_pipeline
-
-        tables = {}
-        for target, (ddl, keys) in cfg.table_schemas.items():
-            schema = _parse_datatype_string(f"struct<{ddl}>")
-            base_columns = tuple(keys) + tuple(
-                f.name for f in schema.fields if f.name not in keys
-            )
-            tables[target] = TableSpec(schema, keys, base_columns)
+        tables = {t: table_spec(ddl, keys) for t, (ddl, keys) in cfg.table_schemas.items()}
         query = run_multi_table_pipeline(spark, cfg, tables, available_now=available_now)
         _print(
             f"serve: multi-table pipeline started ({cfg.sources[0].name} → "
             f"{sorted(tables)} under {cfg.target_dir})"
         )
     else:
-        schema = _parse_datatype_string(f"struct<{cfg.target_schema_ddl}>")
-        base_columns = tuple(cfg.key_fields) + tuple(
-            f.name for f in schema.fields if f.name not in cfg.key_fields
-        )
+        spec = table_spec(cfg.target_schema_ddl, cfg.key_fields)
         query = run_cdc_pipeline(
             spark,
             cfg,
-            schema,
-            key_fields=tuple(cfg.key_fields),
-            base_columns=base_columns,
+            spec.data_schema,
+            key_fields=spec.key_fields,
+            base_columns=spec.base_columns,
             available_now=available_now,
         )
         _print(

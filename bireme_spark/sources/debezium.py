@@ -10,7 +10,7 @@ payload are dropped (``DebeziumPipeLine.java:91-95``).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,22 +28,19 @@ def debezium_envelope_schema(data_schema: StructType) -> StructType:
     return StructType().add("payload", payload)
 
 
-def parse_debezium(
-    df: DataFrame,
+def _parser(
     json_col: str,
-    data_schema: StructType,
+    envelope: StructType,
+    decode: Callable[[Column], Column],
     key_fields: Sequence[str],
-    source: str = "debezium",
-    topic_col: str | None = None,
-) -> DataFrame:
-    """Parse Debezium JSON into ChangeRow columns ``source,
-    origin_table, op, produce_time_ms, key, data (struct)``.
-
-    The effective tuple is ``after`` for c/r/u and ``before`` for d
-    (DebeziumRecord constructor, ``DebeziumPipeLine.java:206-229``).
-    """
-    env = F.from_json(F.col(json_col), debezium_envelope_schema(data_schema))
-    parsed = df.withColumn("_env", env).where(F.col("_env.payload").isNotNull())
+    source: str,
+) -> Callable[[DataFrame], DataFrame]:
+    """The Debezium parse as a function of the input frame, shared by
+    the relational and MongoDB envelopes: ``envelope`` types the outer
+    JSON and ``decode`` turns the op's before/after field into the
+    data struct."""
+    env = F.from_json(F.col(json_col), envelope)
+    has_payload = F.col("_env.payload").isNotNull()
 
     op_raw = F.col("_env.payload.op")
     op = (
@@ -52,26 +49,53 @@ def parse_debezium(
         .when(op_raw == "d", "D")
         .otherwise(F.lit(None).cast("string"))
     )
-    data: Column = F.when(op_raw == "d", F.col("_env.payload.before")).otherwise(
-        F.col("_env.payload.after")
+    data: Column = decode(
+        F.when(op_raw == "d", F.col("_env.payload.before")).otherwise(F.col("_env.payload.after"))
     )
-    origin = (
-        F.col(topic_col)
-        if topic_col
-        else F.lit(source)
-    )
-
-    parsed = parsed.withColumn("_data", data)
     key = F.concat_ws("", *[F.col(f"_data.{k}").cast("string") for k in key_fields])
-    return parsed.select(
-        *df.columns,
+    change_cols = [
         F.lit(source).alias("source"),
-        origin.alias("origin_table"),
+        F.lit(source).alias("origin_table"),
         op.alias("op"),
         F.col("_env.payload.ts_ms").alias("produce_time_ms"),
         key.alias("key"),
         F.col("_data").alias("data"),
-    ).where(F.col("op").isNotNull())
+    ]
+    is_change = F.col("op").isNotNull()
+
+    def parse(df: DataFrame) -> DataFrame:
+        parsed = df.withColumn("_env", env).where(has_payload).withColumn("_data", data)
+        return parsed.select(*df.columns, *change_cols).where(is_change)
+
+    return parse
+
+
+def debezium_parser(
+    json_col: str,
+    data_schema: StructType,
+    key_fields: Sequence[str],
+    source: str = "debezium",
+) -> Callable[[DataFrame], DataFrame]:
+    """:func:`parse_debezium`, built once and applied per frame (see
+    :func:`bireme_spark.sources.maxwell.maxwell_parser`)."""
+    envelope = debezium_envelope_schema(data_schema)
+    return _parser(json_col, envelope, lambda tuple_col: tuple_col, key_fields, source)
+
+
+def parse_debezium(
+    df: DataFrame,
+    json_col: str,
+    data_schema: StructType,
+    key_fields: Sequence[str],
+    source: str = "debezium",
+) -> DataFrame:
+    """Parse Debezium JSON into ChangeRow columns ``source,
+    origin_table, op, produce_time_ms, key, data (struct)``.
+
+    The effective tuple is ``after`` for c/r/u and ``before`` for d
+    (DebeziumRecord constructor, ``DebeziumPipeLine.java:206-229``).
+    """
+    return debezium_parser(json_col, data_schema, key_fields, source)(df)
 
 
 def mongo_envelope_schema() -> StructType:
@@ -117,7 +141,6 @@ def parse_debezium_mongo(
     data_schema: StructType,
     key_fields: Sequence[str],
     source: str = "debezium-mongo",
-    topic_col: str | None = None,
 ) -> DataFrame:
     """Debezium *MongoDB* envelope → canonical ChangeRow columns.
 
@@ -132,29 +155,8 @@ def parse_debezium_mongo(
     Both passes are JVM-side; at 100 TB this is a pure map stage with
     zero shuffle.
     """
-    env = F.from_json(F.col(json_col), mongo_envelope_schema())
-    parsed = df.withColumn("_env", env).where(F.col("_env.payload").isNotNull())
 
-    op_raw = F.col("_env.payload.op")
-    op = (
-        F.when(op_raw.isin("c", "r"), "I")
-        .when(op_raw == "u", "U")
-        .when(op_raw == "d", "D")
-        .otherwise(F.lit(None).cast("string"))
-    )
-    doc = F.when(op_raw == "d", F.col("_env.payload.before")).otherwise(
-        F.col("_env.payload.after")
-    )
-    origin = F.col(topic_col) if topic_col else F.lit(source)
+    def decode(doc: Column) -> Column:
+        return F.from_json(_strip_extended_json(doc), data_schema)
 
-    parsed = parsed.withColumn("_data", F.from_json(_strip_extended_json(doc), data_schema))
-    key = F.concat_ws("", *[F.col(f"_data.{k}").cast("string") for k in key_fields])
-    return parsed.select(
-        *df.columns,
-        F.lit(source).alias("source"),
-        origin.alias("origin_table"),
-        op.alias("op"),
-        F.col("_env.payload.ts_ms").alias("produce_time_ms"),
-        key.alias("key"),
-        F.col("_data").alias("data"),
-    ).where(F.col("op").isNotNull())
+    return _parser(json_col, mongo_envelope_schema(), decode, key_fields, source)(df)

@@ -14,7 +14,7 @@ from ``Table.java``. No per-row Python.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -46,24 +46,16 @@ def _op_col(type_col: Column) -> Column:
     return m[type_col]
 
 
-def parse_maxwell(
-    df: DataFrame,
+def maxwell_parser(
     json_col: str,
     data_schema: StructType,
     key_fields: Sequence[str],
     source: str = "maxwell",
-) -> DataFrame:
-    """Parse a column of Maxwell JSON strings into ChangeRow columns:
-    ``source, origin_table, op, produce_time_ms, key, old_key, data
-    (struct), old (struct)`` plus passthrough of the input columns.
-
-    ``key`` / ``old_key`` are the concatenated PK fields (bireme
-    formats keys as a delimited string tuple, ``Row.java:keys``);
-    ``old_key`` is null unless the update changed the PK
-    (``MaxwellPipeLine.java:107-111``).
-    """
+) -> Callable[[DataFrame], DataFrame]:
+    """:func:`parse_maxwell`, built once and applied per frame: a
+    streaming runner that parses every micro-batch builds the column
+    expressions (hundreds of py4j round trips) only once."""
     env = F.from_json(F.col(json_col), maxwell_envelope_schema(data_schema))
-    parsed = df.withColumn("_env", env)
 
     def key_of(struct_col: str) -> Column:
         return F.concat_ws("", *[F.col(f"{struct_col}.{k}").cast("string") for k in key_fields])
@@ -80,8 +72,7 @@ def parse_maxwell(
     for k in key_fields:
         pk_changed = pk_changed | F.col(f"_env.old.{k}").isNotNull()
 
-    out = parsed.select(
-        *df.columns,
+    change_cols = [
         F.lit(source).alias("source"),
         F.concat_ws(".", F.lit(source), F.col("_env.database"), F.col("_env.table")).alias(
             "origin_table"
@@ -96,10 +87,34 @@ def parse_maxwell(
         F.coalesce(F.col("_env.commit"), F.lit(False)).alias("commit_flag"),
         F.col("_env.data").alias("data"),
         F.col("_env.old").alias("old"),
-    )
+    ]
     # Only DML rows become ChangeRows: the reference's type switch
     # (MaxwellPipeLine.java:141-153) has no branch for bootstrap-*/ddl
     # messages, so they never reach the merge — drop them here (op is
     # null for unmapped types, and for unparseable JSON the whole
     # envelope struct is null).
-    return out.where(F.col("op").isNotNull())
+    is_dml = F.col("op").isNotNull()
+
+    def parse(df: DataFrame) -> DataFrame:
+        return df.withColumn("_env", env).select(*df.columns, *change_cols).where(is_dml)
+
+    return parse
+
+
+def parse_maxwell(
+    df: DataFrame,
+    json_col: str,
+    data_schema: StructType,
+    key_fields: Sequence[str],
+    source: str = "maxwell",
+) -> DataFrame:
+    """Parse a column of Maxwell JSON strings into ChangeRow columns:
+    ``source, origin_table, op, produce_time_ms, key, old_key, data
+    (struct), old (struct)`` plus passthrough of the input columns.
+
+    ``key`` / ``old_key`` are the concatenated PK fields (bireme
+    formats keys as a delimited string tuple, ``Row.java:keys``);
+    ``old_key`` is null unless the update changed the PK
+    (``MaxwellPipeLine.java:107-111``).
+    """
+    return maxwell_parser(json_col, data_schema, key_fields, source)(df)

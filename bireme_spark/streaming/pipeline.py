@@ -3,11 +3,20 @@ bireme's PipeLine → RowCache → ChangeLoader chain
 (``pipeline/PipeLine.java:60-200``, ``RowCache.java``,
 ``ChangeLoader.java``).
 
-Shape:
+Shape — one runner (``_run``) behind every entry point, one query per
+source:
+
     readStream (kafka | file) of envelope JSON
-      → parse (Maxwell/Debezium from_json)
-      → table routing (table_map filter)
-      → foreachBatch: per-table compact → DELETE+COPY merge
+      → foreachBatch: persist the raw batch, then for each table route
+          → route (pre-parse database/table match on the envelope)
+          → parse (Maxwell/Debezium from_json, the table's schema)
+          → the entry point's apply step
+
+The entry points differ only in their routes and apply step:
+``run_cdc_pipeline`` is one route into ``target_dir`` (compact →
+DELETE+COPY merge, or the JDBC merge sink), ``run_multi_table_pipeline``
+one route per mapped target into ``target_dir/<target>``, and
+``run_scd2_pipeline`` one route whose step appends version history.
 
 Each micro-batch IS bireme's LoadTask: the batch compaction and the
 anti-join merge are exactly the batch operators
@@ -70,17 +79,16 @@ from __future__ import annotations
 import errno
 import os
 import shutil
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bireme_spark.config import PipelineConfig, SourceConfig
-from bireme_spark.operators.cdc import apply_changes, compact
-from bireme_spark.operators.mapping import apply_table_mapping
-from bireme_spark.sources.debezium import parse_debezium
-from bireme_spark.sources.maxwell import parse_maxwell
+from bireme_spark.operators.cdc import apply_changes, compact, scd2
+from bireme_spark.sources.debezium import debezium_parser
+from bireme_spark.sources.maxwell import maxwell_parser
 
 
 # Layout dir prefixes are _sb=/_sv= (reserved, collision-proof names:
@@ -117,9 +125,10 @@ def _bucket_ids(target_dir: str) -> list[int]:
 _MANIFEST = "_manifest.json"
 
 
-def _read_manifest(target_dir: str) -> dict[int, int] | None:
-    """Committed bucket→version map; None ONLY when no manifest file
-    exists (a target never committed through a manifest — the
+def _read_commit(target_dir: str) -> tuple[dict[int, int] | None, int | None]:
+    """The last manifest commit: its bucket→version map and the
+    batch_id that wrote it. ``(None, None)`` ONLY when no manifest
+    file exists (a target never committed through a manifest — the
     max-version-dir fallback is then safe). A manifest
     that EXISTS but cannot be parsed raises: silently downgrading to
     the dir scan would adopt uncommitted orphan v-dirs as committed
@@ -128,14 +137,18 @@ def _read_manifest(target_dir: str) -> dict[int, int] | None:
 
     path = os.path.join(target_dir, _MANIFEST)
     if not os.path.exists(path):
-        return None
+        return None, None
     try:
         with open(path, encoding="utf-8") as f:
             doc = json.load(f)
         versions = doc["versions"] if isinstance(doc, dict) else None
         if not isinstance(versions, dict):
             raise ValueError("manifest body is not {versions: {...}}")
-        return {int(k): int(v) for k, v in versions.items()}
+        batch = doc.get("committed_batch")
+        return (
+            {int(k): int(v) for k, v in versions.items()},
+            int(batch) if batch is not None else None,
+        )
     except (OSError, ValueError, KeyError, TypeError) as e:
         raise ValueError(
             f"corrupt sink manifest {path!r}: {e} — refusing to fall back to "
@@ -144,21 +157,15 @@ def _read_manifest(target_dir: str) -> dict[int, int] | None:
         ) from e
 
 
+def _read_manifest(target_dir: str) -> dict[int, int] | None:
+    """Committed bucket→version map; None when no manifest exists."""
+    return _read_commit(target_dir)[0]
+
+
 def _read_committed_batch(target_dir: str) -> int | None:
     """batch_id recorded by the last manifest commit (None when no
     manifest exists)."""
-    import json
-
-    path = os.path.join(target_dir, _MANIFEST)
-    if not os.path.exists(path):
-        return None
-    try:
-        with open(path, encoding="utf-8") as f:
-            doc = json.load(f)
-        b = doc.get("committed_batch") if isinstance(doc, dict) else None
-        return int(b) if b is not None else None
-    except (OSError, ValueError, TypeError):
-        return None
+    return _read_commit(target_dir)[1]
 
 
 class StaleWriterError(RuntimeError):
@@ -187,16 +194,17 @@ def _write_manifest(target_dir: str, versions: dict[int, int], batch_id: int) ->
     os.replace(tmp, os.path.join(target_dir, _MANIFEST))
 
 
-def _committed_versions(target_dir: str) -> dict[int, int]:
-    """The committed bucket→version map: the manifest when present
-    (crash-consistent snapshot), else the max version dir of each
-    bucket (a target never committed through a manifest)."""
-    manifest = _read_manifest(target_dir)
+def _committed_versions(target_dir: str) -> tuple[dict[int, int], int | None]:
+    """The committed bucket→version map and the batch_id that committed
+    it: the manifest when present (crash-consistent snapshot), else the
+    max version dir of each bucket and no batch (a target never
+    committed through a manifest)."""
+    manifest, batch = _read_commit(target_dir)
     if manifest is not None:
-        return manifest
+        return manifest, batch
     return {
         b: vs[-1] for b in _bucket_ids(target_dir) if (vs := _versions(_bucket_dir(target_dir, b)))
-    }
+    }, None
 
 
 def _latest_paths(target_dir: str, buckets: Sequence[int] | None = None) -> list[str]:
@@ -205,7 +213,7 @@ def _latest_paths(target_dir: str, buckets: Sequence[int] | None = None) -> list
     and reaps it."""
     return [
         p
-        for b, v in sorted(_committed_versions(target_dir).items())
+        for b, v in sorted(_committed_versions(target_dir)[0].items())
         if (buckets is None or b in buckets) and os.path.isdir(p := _version_dir(target_dir, b, v))
     ]
 
@@ -333,7 +341,7 @@ def shallow_clone(src_dir: str, dst_dir: str, batch_id: int = 1) -> dict[str, in
     Spark job — cloning a 100 TB sink is a filesystem pass. Returns
     exact counts so a caller can assert zero-copy (files_copied ==
     0 on one device)."""
-    manifest = _committed_versions(src_dir)
+    manifest = _committed_versions(src_dir)[0]
     stats = {"n_buckets": len(manifest), "files_linked": 0, "files_copied": 0, "bytes_shared": 0}
     for b, v in sorted(manifest.items()):
         src_v = _version_dir(src_dir, b, v)
@@ -420,7 +428,7 @@ def _open_stream(spark: SparkSession, source: SourceConfig, max_files: int | Non
         # File replay's offset twin: file mtime orders across files
         # (the replay batch order); within a file the text source has
         # no row index (_metadata.row_index is parquet-only), so
-        # src_offset stays null and merge_batch falls back to a
+        # src_offset stays null and the fold falls back to a
         # batch-local id — the documented file-source fallback.
         return reader.load(source.path).select(
             F.col("value"),
@@ -474,14 +482,12 @@ def _write_changed_buckets(
     # checkpoint loss re-presents old batch ids by design
     # (tests/test_streaming.py replay-idempotence contract) — fence
     # only when writer epochs are externally managed.
-    if fence:
-        committed_batch = _read_committed_batch(target_dir)
-        if committed_batch is not None and batch_id < committed_batch:
-            raise StaleWriterError(
-                f"stale writer fenced: batch {batch_id} < committed {committed_batch}"
-                f" at {target_dir!r}"
-            )
-    versions = _committed_versions(target_dir)
+    versions, committed_batch = _committed_versions(target_dir)
+    if fence and committed_batch is not None and batch_id < committed_batch:
+        raise StaleWriterError(
+            f"stale writer fenced: batch {batch_id} < committed {committed_batch}"
+            f" at {target_dir!r}"
+        )
     staging = f"{target_dir}/.staging-{batch_id}"
     merged.repartition("_sb").write.partitionBy("_sb").mode("overwrite").parquet(staging)
     for b in changed:
@@ -528,90 +534,6 @@ def _release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def run_cdc_pipeline(
-    spark: SparkSession,
-    config: PipelineConfig,
-    data_schema: StructType,
-    key_fields: Sequence[str],
-    base_columns: Sequence[str],
-    available_now: bool = False,
-):
-    """Launch the CDC sync for one source (the multi-source case runs
-    one query per source, like bireme's one PipeLine per partition).
-
-    ``base_columns``: target-table column order (key first); payload
-    columns are taken from the parsed ``data`` struct.
-    """
-    source = config.sources[0]
-    raw = _open_stream(spark, source, config.max_events_per_trigger)
-
-    if source.kind == "debezium":
-        parsed = parse_debezium(raw, "value", data_schema, key_fields, source=source.name)
-    else:
-        parsed = parse_maxwell(raw, "value", data_schema, key_fields, source=source.name)
-    if source.table_map:
-        parsed = apply_table_mapping(parsed, source.table_map)
-
-    key_col = key_fields[0]
-    payload_cols = [f.name for f in data_schema.fields if f.name not in key_fields]
-    nb = config.num_buckets
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: the fold scans the micro-batch twice (its key-change
-        # union) — uncached, each scan re-reads the SOURCE (re-polls
-        # Kafka), re-parses the envelopes and re-derives the
-        # monotonically_increasing_id offsets, which must be stable
-        # within the batch.
-        batch_df = batch_df.persist()
-        try:
-            compacted = _compact_parsed(batch_df, payload_cols)
-            if config.target_jdbc_url:
-                # Greenplum/warehouse path: DELETE+COPY merge through
-                # the staged-key JDBC transaction (ChangeLoader
-                # semantics).
-                from bireme_spark.sinks.jdbc import JdbcMergeSink
-
-                sink = JdbcMergeSink(
-                    url=config.target_jdbc_url,
-                    target_table=config.target_table or "public.target",
-                    key_cols=("key",),
-                    payload_cols=("key", *payload_cols),
-                    properties=config.jdbc_properties,
-                )
-                sink(compacted.withColumnRenamed("final_op", "op"), batch_id)
-                return
-            _merge_compacted_versioned(
-                batch_df.sparkSession,
-                config.target_dir,
-                compacted,
-                data_schema,
-                key_fields,
-                base_columns,
-                nb,
-                batch_id,
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        parsed.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", config.checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=config.trigger_interval)
-    return writer.start()
-
-
-def _ddl(schema: StructType, col: str, key_fields: Sequence[str], key_col: str) -> str:
-    if col in {f.name for f in schema.fields}:
-        return schema[col].dataType.simpleString()
-    # key column of the base table keeps the parsed-string key type
-    return "string"
-
-
 def _compact_parsed(batch_df: DataFrame, payload_cols: Sequence[str]) -> DataFrame:
     """Parsed ChangeRow micro-batch → compacted delete/insert sets
     (the per-batch RowBatchMerger fold, shared by every sink)."""
@@ -655,7 +577,6 @@ def _merge_compacted_versioned(
     are observed in that job; the checkpoint is released after the
     commit. A batch with no rows for this table has no changed buckets
     and commits nothing."""
-    key_col = key_fields[0]
     compacted, changed = _checkpoint_buckets(compacted, "key", nb)
     try:
         if not changed:
@@ -666,9 +587,9 @@ def _merge_compacted_versioned(
                 bspark.read.option("basePath", target_dir).parquet(*base_paths).drop("_sb", "_sv")
             )
         else:
-            ddl = ", ".join(
-                f"{c} {_ddl(data_schema, c, key_fields, key_col)}" for c in base_columns
-            )
+            types = {f.name: f.dataType.simpleString() for f in data_schema.fields}
+            # key column of the base table keeps the parsed-string key type
+            ddl = ", ".join(f"{c} {types.get(c, 'string')}" for c in base_columns)
             base = bspark.createDataFrame([], ddl)
         merged = apply_changes(
             base,
@@ -689,7 +610,7 @@ def _merge_compacted_versioned(
 
 
 class TableSpec:
-    """Per-table sync spec for the multi-table pipeline."""
+    """Per-table sync spec: one route of the streaming runner."""
 
     def __init__(
         self,
@@ -700,6 +621,152 @@ class TableSpec:
         self.data_schema = data_schema
         self.key_fields = tuple(key_fields)
         self.base_columns = tuple(base_columns)
+        self.payload_cols = tuple(
+            f.name for f in data_schema.fields if f.name not in self.key_fields
+        )
+
+
+def _run(
+    spark: SparkSession,
+    config: PipelineConfig,
+    routes: Sequence[tuple[str, Sequence[str] | None, TableSpec]],
+    apply: Callable[[DataFrame, str, TableSpec, int], None],
+    available_now: bool,
+):
+    """The one streaming runner behind every entry point: ONE query per
+    source, like bireme's one PipeLine per source whose Transformers
+    route each change to its table's RowCache/loader (``PipeLine.java``
+    / per-table caches in ``RowCache.java``).
+
+    Routing happens BEFORE JSON payload typing: the envelope's
+    database/table fields — Maxwell's top-level ``database``/``table``,
+    Debezium's ``payload.source.db``/``payload.source.table`` — are
+    extracted with ``get_json_object`` (one cheap JVM projection) so
+    each table's ``from_json`` parse runs only over its own rows — N
+    small typed parses, not N full-batch parses. Each route is
+    ``(target_dir, origins, spec)``: ``origins`` are table_map keys
+    (``"<source>.<database>.<table>"``), ``None`` takes every row. Rows
+    of unmapped tables are never parsed, which is exactly bireme's
+    filter() semantics. Each route's parsed rows go to
+    ``apply(parsed, target_dir, spec, batch_id)``, the entry point's
+    per-table step; it commits through an idempotent sink, so the
+    batch may replay after a crash before Spark's checkpoint commit.
+    """
+    source = config.sources[0]
+    if source.kind == "debezium":
+        parser = debezium_parser
+        db_path, tbl_path = "$.payload.source.db", "$.payload.source.table"
+    else:
+        parser = maxwell_parser
+        db_path, tbl_path = "$.database", "$.table"
+
+    def router(origins, spec):
+        """The route's step from the raw batch to its parsed changes."""
+        parse = parser("value", spec.data_schema, spec.key_fields, source=source.name)
+        if origins is None:
+            return parse
+        # bireme's table_map is many-to-one (sharded sources consolidate
+        # into one target table), so routing ORs across every origin
+        cond = None
+        for origin in origins:
+            _, db, tbl = origin.split(".", 2)
+            c = (F.get_json_object("value", db_path) == db) & (
+                F.get_json_object("value", tbl_path) == tbl
+            )
+            cond = c if cond is None else cond | c
+        return lambda rows: parse(rows.where(cond))
+
+    # built once, not per batch: building a parse costs hundreds of
+    # py4j round trips
+    routed = [(target_dir, spec, router(origins, spec)) for target_dir, origins, spec in routes]
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # persist: every route re-reads the micro-batch, and the fold
+        # scans it twice (its key-change union) — uncached, each scan
+        # re-reads the SOURCE (re-polls Kafka) and re-derives the
+        # monotonically_increasing_id offsets, which must be stable
+        # within the batch.
+        batch_df = batch_df.persist()
+        try:
+            for target_dir, spec, route in routed:
+                apply(route(batch_df), target_dir, spec, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    writer = (
+        _open_stream(spark, source, config.max_events_per_trigger)
+        .writeStream.foreachBatch(run_batch)
+        .option("checkpointLocation", config.checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    else:
+        writer = writer.trigger(processingTime=config.trigger_interval)
+    return writer.start()
+
+
+def _single_route(config: PipelineConfig, spec: TableSpec):
+    """A single-table sync: every mapped origin of the source (every row
+    when it has no table_map) into ``target_dir`` itself."""
+    return [(config.target_dir, list(config.sources[0].table_map or ()) or None, spec)]
+
+
+def _merge_step(nb: int):
+    """The latest-state apply step: compact the batch, then the
+    DELETE+COPY merge into the table's bucket-versioned state."""
+
+    def apply(parsed: DataFrame, target_dir: str, spec: TableSpec, batch_id: int) -> None:
+        compacted = _compact_parsed(parsed, spec.payload_cols)
+        _merge_compacted_versioned(
+            parsed.sparkSession,
+            target_dir,
+            compacted,
+            spec.data_schema,
+            spec.key_fields,
+            spec.base_columns,
+            nb,
+            batch_id,
+        )
+
+    return apply
+
+
+def run_cdc_pipeline(
+    spark: SparkSession,
+    config: PipelineConfig,
+    data_schema: StructType,
+    key_fields: Sequence[str],
+    base_columns: Sequence[str],
+    available_now: bool = False,
+):
+    """Launch the CDC sync for one source (the multi-source case runs
+    one query per source, like bireme's one PipeLine per partition).
+
+    ``base_columns``: target-table column order (key first); payload
+    columns are taken from the parsed ``data`` struct.
+    """
+    spec = TableSpec(data_schema, key_fields, base_columns)
+    if config.target_jdbc_url:
+        # Greenplum/warehouse path: DELETE+COPY merge through the
+        # staged-key JDBC transaction (ChangeLoader semantics).
+        from bireme_spark.sinks.jdbc import JdbcMergeSink
+
+        sink = JdbcMergeSink(
+            url=config.target_jdbc_url,
+            target_table=config.target_table or "public.target",
+            key_cols=("key",),
+            payload_cols=("key", *spec.payload_cols),
+            properties=config.jdbc_properties,
+        )
+
+        def apply(parsed: DataFrame, _target_dir: str, _spec: TableSpec, batch_id: int) -> None:
+            compacted = _compact_parsed(parsed, spec.payload_cols)
+            sink(compacted.withColumnRenamed("final_op", "op"), batch_id)
+
+    else:
+        apply = _merge_step(config.num_buckets)
+    return _run(spark, config, _single_route(config, spec), apply, available_now)
 
 
 def run_multi_table_pipeline(
@@ -710,93 +777,20 @@ def run_multi_table_pipeline(
 ):
     """ONE streaming query syncs EVERY mapped table of a source —
     bireme's actual deployment shape (a pipeline consumes a whole
-    database's binlog topic; Transformers route each change to its
-    table's RowCache/loader — ``PipeLine.java`` / per-table caches in
-    ``RowCache.java``). ``tables`` maps the mapped target name (the
-    table_map right-hand side) to its :class:`TableSpec`; each target
-    syncs into ``<target_dir>/<target>/`` with the same changed-bucket
-    pruning + atomic manifest commit as the single-table pipeline.
-
-    Routing happens BEFORE JSON payload typing: the envelope's
-    database/table fields — Maxwell's top-level ``database``/``table``,
-    Debezium's ``payload.source.db``/``payload.source.table`` — are
-    extracted with ``get_json_object`` (one cheap JVM projection) so
-    each table's ``from_json`` parse runs only over its own rows — N
-    small typed parses, not N full-batch parses. Unmapped tables are
-    dropped by construction (no mapping entry → no parse), which is
-    exactly bireme's filter() semantics. The raw batch is persisted
-    across the per-table loop and released after.
+    database's binlog topic). ``tables`` maps the mapped target name
+    (the table_map right-hand side) to its :class:`TableSpec`; each
+    target syncs into ``<target_dir>/<target>/`` with the same
+    changed-bucket pruning + atomic manifest commit as the
+    single-table pipeline. A target with no mapping entry is skipped,
+    and a table with no rows in a batch commits nothing.
     """
-    source = config.sources[0]
-    raw = _open_stream(spark, source, config.max_events_per_trigger)
-    # target → ALL of its origins ("maxwell.db.table"): bireme's
-    # table_map is many-to-one (sharded sources consolidate into one
-    # target table), so routing must OR across every mapped origin
-    mapping = source.table_map or {}
-    by_target: dict[str, list[str]] = {}
-    for origin, target in mapping.items():
-        by_target.setdefault(target, []).append(origin)
-
-    def multi_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            for target, spec in tables.items():
-                origins = by_target.get(target)
-                if not origins:
-                    continue
-                if source.kind == "debezium":
-                    db_path, tbl_path = "$.payload.source.db", "$.payload.source.table"
-                else:
-                    db_path, tbl_path = "$.database", "$.table"
-                cond = None
-                for origin in origins:
-                    # origin = "<source>.<database>.<table>"
-                    _, db, tbl = origin.split(".", 2)
-                    c = (F.get_json_object("value", db_path) == db) & (
-                        F.get_json_object("value", tbl_path) == tbl
-                    )
-                    cond = c if cond is None else cond | c
-                sub = batch_df.where(cond)
-                if source.kind == "debezium":
-                    parsed = parse_debezium(
-                        sub, "value", spec.data_schema, spec.key_fields, source=source.name
-                    )
-                else:
-                    parsed = parse_maxwell(
-                        sub, "value", spec.data_schema, spec.key_fields, source=source.name
-                    )
-                # routing already happened on the raw envelope; tables
-                # without a mapping entry were never parsed at all, and
-                # a table with no rows in this batch commits nothing
-                payload_cols = [
-                    f.name
-                    for f in spec.data_schema.fields
-                    if f.name not in spec.key_fields
-                ]
-                compacted = _compact_parsed(parsed, payload_cols)
-                _merge_compacted_versioned(
-                    batch_df.sparkSession,
-                    f"{config.target_dir}/{target}",
-                    compacted,
-                    spec.data_schema,
-                    spec.key_fields,
-                    spec.base_columns,
-                    config.num_buckets,
-                    batch_id,
-                )
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        raw.writeStream.foreachBatch(multi_batch)
-        .option("checkpointLocation", config.checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=config.trigger_interval)
-    return writer.start()
+    table_map = config.sources[0].table_map or {}
+    routes = [
+        (f"{config.target_dir}/{target}", origins, spec)
+        for target, spec in tables.items()
+        if (origins := [o for o, t in table_map.items() if t == target])
+    ]
+    return _run(spark, config, routes, _merge_step(config.num_buckets), available_now)
 
 
 def run_scd2_pipeline(
@@ -822,18 +816,9 @@ def run_scd2_pipeline(
     would have seen (tested; the gate query hash-matches the batch
     oracle).
     """
-    source = config.sources[0]
-    raw = _open_stream(spark, source, config.max_events_per_trigger)
-    if source.kind == "debezium":
-        parsed = parse_debezium(raw, "value", data_schema, key_fields, source=source.name)
-    else:
-        parsed = parse_maxwell(raw, "value", data_schema, key_fields, source=source.name)
-    if source.table_map:
-        parsed = apply_table_mapping(parsed, source.table_map)
-
-    from bireme_spark.operators.cdc import scd2
-
-    payload_cols = [f.name for f in data_schema.fields if f.name not in key_fields]
+    # the history layout (key, payload, validity) is fixed: no base columns
+    spec = TableSpec(data_schema, key_fields, ())
+    payload_cols = spec.payload_cols
     nb = config.num_buckets
     hist_schema = (
         "key string, "
@@ -841,9 +826,9 @@ def run_scd2_pipeline(
         + ", valid_from long, valid_to long, is_current boolean"
     )
 
-    def scd2_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bspark = batch_df.sparkSession
-        changes = batch_df.select(
+    def apply(parsed: DataFrame, target_dir: str, _spec: TableSpec, batch_id: int) -> None:
+        bspark = parsed.sparkSession
+        changes = parsed.select(
             "key",
             "op",
             "produce_time_ms",
@@ -863,15 +848,15 @@ def run_scd2_pipeline(
                 changes,
                 key_cols=("key",),
                 order_cols=("produce_time_ms", "src_partition", "src_offset"),
-                payload_cols=tuple(payload_cols),
+                payload_cols=payload_cols,
             ).select(
                 "key", *payload_cols, "valid_from", "valid_to", "is_current"
             )
             firsts = changes.groupBy("key").agg(F.min("produce_time_ms").alias("first_ts"))
-            base_paths = _latest_paths(config.target_dir, changed)
+            base_paths = _latest_paths(target_dir, changed)
             if base_paths:
                 base = (
-                    bspark.read.option("basePath", config.target_dir)
+                    bspark.read.option("basePath", target_dir)
                     .parquet(*base_paths)
                     .drop("_sb", "_sv")
                 )
@@ -911,17 +896,8 @@ def run_scd2_pipeline(
                 base.select("key", "valid_from"), ["key", "valid_from"], "left_anti"
             )
             merged = closed.unionByName(fresh).withColumn("_sb", _bucket_col("key", nb))
-            _write_changed_buckets(bspark, config.target_dir, merged, changed, batch_id)
+            _write_changed_buckets(bspark, target_dir, merged, changed, batch_id)
         finally:
             _release_checkpoint(changes)
 
-    writer = (
-        parsed.writeStream.foreachBatch(scd2_batch)
-        .option("checkpointLocation", config.checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=config.trigger_interval)
-    return writer.start()
+    return _run(spark, config, _single_route(config, spec), apply, available_now)

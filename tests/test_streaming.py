@@ -13,8 +13,9 @@ import pytest
 
 # Deep recompute / e2e tests are marked slow and deselected from the
 # default pytest path (`pytest -m ""` runs everything). The sink's
-# commit contract runs by default: tiny inputs, and it guards the
-# write path every runner shares.
+# commit contract and each runner entry point's tiny-input tests run
+# by default: they guard the write path and the router every runner
+# shares.
 
 
 @pytest.mark.slow
@@ -265,6 +266,82 @@ def test_multi_table_batch_without_mapped_rows_commits_nothing(spark, tmp_path):
     }
 
 
+def test_runners_route_before_parse_through_the_module_hooks(spark, tmp_path, monkeypatch):
+    """The single- and multi-table runners share one router: from a file
+    that mixes a mapped table's rows, another table's rows on the same
+    keys and a malformed line, only the mapped rows land (at target_dir
+    for run_cdc_pipeline, at target_dir/<target> for the multi-table
+    runner). Both reach the sink through the module globals that
+    perfbench's tracer and CommitClock wrap, with batch_id at the
+    positions they read."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.streaming import pipeline as pl
+    from bireme_spark.streaming.replay import stamp_batch_mtime
+
+    def env(table, k, v):
+        return json.dumps(
+            {"database": "d", "table": table, "type": "insert", "ts": 100,
+             "data": {"k": k, "v": v}}
+        )
+
+    src = tmp_path / "in"
+    src.mkdir()
+    lines = [env("t", k, float(k)) for k in range(6)]
+    lines += [env("audit", k, -1.0) for k in range(3)] + ["{not json"]
+    (src / "b0.txt").write_text("\n".join(lines))
+    stamp_batch_mtime(str(src), 0, set())
+
+    batch_arg = {
+        "_compact_parsed": None,
+        "_merge_compacted_versioned": 7,
+        "_write_changed_buckets": 4,
+        "_write_manifest": 2,
+    }
+    calls: dict[str, list] = {}
+    for name, pos in batch_arg.items():
+        def counting(*args, _orig=getattr(pl, name), _name=name, _pos=pos, **kw):
+            calls[_name].append(None if _pos is None else args[_pos])
+            return _orig(*args, **kw)
+
+        monkeypatch.setattr(pl, name, counting)
+
+    def cfg(name):
+        return PipelineConfig(
+            sources=[SourceConfig(name="m", kind="file", path=str(src),
+                                  table_map={"m.d.t": "public.t"})],
+            target_dir=str(tmp_path / name),
+            checkpoint_dir=str(tmp_path / f"ckpt_{name}"),
+            num_buckets=2,
+        )
+
+    schema = StructType().add("k", "long").add("v", "double")
+    want = {(k, float(k)) for k in range(6)}
+    runs = {
+        "single": lambda c: pl.run_cdc_pipeline(
+            spark, c, schema, ("k",), ("k", "v"), available_now=True
+        ),
+        "multi": lambda c: pl.run_multi_table_pipeline(
+            spark, c, {"public.t": pl.TableSpec(schema, ("k",), ("k", "v"))}, available_now=True
+        ),
+    }
+    for name, run in runs.items():
+        calls.update({n: [] for n in batch_arg})
+        c = cfg(name)
+        run(c).awaitTermination(120)
+        target = c.target_dir if name == "single" else f"{c.target_dir}/public.t"
+        assert {(r.k, r.v) for r in pl.read_state(spark, target).collect()} == want, name
+        assert calls == {
+            "_compact_parsed": [None],
+            "_merge_compacted_versioned": [0],
+            "_write_changed_buckets": [0],
+            "_write_manifest": [0],
+        }, name
+
+
 @pytest.mark.slow
 def test_same_timestamp_fold_is_deterministic(spark, tmp_path):
     """Two same-key changes in one batch with the SAME seconds-level
@@ -419,7 +496,6 @@ def test_manifest_commit_is_atomic_and_crash_safe(spark, tmp_path):
     assert "_sv=2" not in left and "_sv=1" not in left, left
 
 
-@pytest.mark.slow
 def test_scd2_pipeline_batch_replay_is_idempotent(spark, tmp_path):
     """The post-manifest-commit / pre-checkpoint-commit retry window:
     re-running the SAME batches against already-committed SCD2 state
@@ -508,7 +584,6 @@ def test_corrupt_manifest_raises_not_falls_back(spark, tmp_path):
     assert _latest_paths(target) == [f"{target}/_sb=0/_sv=2"]
 
 
-@pytest.mark.slow
 def test_multi_table_pipeline_debezium_envelopes(spark, tmp_path):
     """Whole-database sync with DEBEZIUM envelopes: routing reads
     payload.source.db/table (the real Debezium shape), each table
@@ -582,7 +657,6 @@ def test_multi_table_pipeline_debezium_envelopes(spark, tmp_path):
     assert t2 == {(i, "a") for i in range(4)}  # id=4 deleted via `before`
 
 
-@pytest.mark.slow
 def test_multi_table_pipeline_consolidates_sharded_origins(spark, tmp_path):
     """Many-to-one table_map (sharded source tables t_0/t_1 → one
     target): BOTH origins' changes must land — routing ORs across
@@ -764,7 +838,6 @@ def test_vacuum_versions_retention_and_orphans(spark, tmp_path):
     }
 
 
-@pytest.mark.slow
 def test_crash_after_sink_commit_resumes_and_stays_idempotent(spark, tmp_path, monkeypatch):
     """Reference restart semantics (`AbstractCommitCallback` persists
     the commit bookkeeping; `KafkaPipeLine` resumes from the last
