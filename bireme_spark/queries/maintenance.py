@@ -350,7 +350,7 @@ ORACLE["orders_zorder_layout"] = ORDERS_ZORDER_SQL
 def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sink VACUUM end-to-end (Delta VACUUM / Iceberg
     expire_snapshots twin for the manifest parquet sink,
-    streaming/pipeline.py): build a bucketed sink carrying THREE
+    sinks/versioned.py): build a bucketed sink carrying THREE
     version generations — v1 superseded, v2 committed (the manifest
     points at it), v3 an orphan of a crashed batch that never reached
     its manifest commit (only half the buckets got their rename) —
@@ -364,11 +364,13 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-listing, not IO."""
     import shutil
 
-    from bireme_spark.streaming.pipeline import (
-        _bucket_col,
-        _write_manifest,
+    from bireme_spark.sinks.versioned import (
+        bucket_col,
+        bucket_dir,
         read_state,
         vacuum_versions,
+        version_dir,
+        write_manifest,
     )
 
     n_buckets = 8
@@ -378,7 +380,7 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("string").alias("key"),
         F.col("o_totalprice").alias("price"),
     )
-    bucketed = o.withColumn("_sb", _bucket_col("key", n_buckets))
+    bucketed = o.withColumn("_sb", bucket_col("key", n_buckets))
 
     def write_version(df, version, buckets=None):
         staging = os.path.join(work, f"stage-v{version}")
@@ -386,12 +388,11 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
         for b in range(n_buckets):
             if buckets is not None and b not in buckets:
                 continue
-            src = os.path.join(staging, f"_sb={b}")
+            src = bucket_dir(staging, b)
             if not os.path.isdir(src):
                 continue
-            bdir = os.path.join(target, f"_sb={b}")
-            os.makedirs(bdir, exist_ok=True)
-            os.rename(src, os.path.join(bdir, f"_sv={version}"))
+            os.makedirs(bucket_dir(target, b), exist_ok=True)
+            os.rename(src, version_dir(target, b, version))
         shutil.rmtree(staging, ignore_errors=True)
 
     write_version(bucketed.withColumn("price", F.col("price") - 1), 1)
@@ -399,7 +400,7 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_version(
         bucketed.withColumn("price", F.col("price") + 99), 3, buckets={0, 2, 4, 6}
     )
-    _write_manifest(target, {b: 2 for b in range(n_buckets)}, batch_id=2)
+    write_manifest(target, {b: 2 for b in range(n_buckets)}, batch_id=2)
 
     stats = vacuum_versions(target, keep=1)
     state = read_state(spark, target)
@@ -446,11 +447,13 @@ def sink_erase_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; phase 2 re-reads ONLY affected buckets (dir-pruned on
     ``_sb``) — erase cost tracks the affected data, and the atomic
     manifest flip means readers never see a half-erased sink."""
-    from bireme_spark.streaming.pipeline import (
-        _bucket_col,
-        _read_manifest,
+    from bireme_spark.sinks.versioned import (
+        bucket_col,
         erase_predicate,
         read_state,
+        snapshot,
+        stage,
+        write_manifest,
     )
 
     n_buckets = 8
@@ -461,16 +464,14 @@ def sink_erase_predicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("custkey"),
         F.col("o_totalprice").alias("price"),
     )
-    bucketed = o.withColumn("_sb", _bucket_col("key", n_buckets))
-    from bireme_spark.streaming.pipeline import _write_changed_buckets
-
-    _write_changed_buckets(spark, target, bucketed, list(range(n_buckets)), batch_id=1)
-    v1 = _read_manifest(target)
+    bucketed = o.withColumn("_sb", bucket_col("key", n_buckets))
+    write_manifest(target, stage(spark, target, bucketed, range(n_buckets), 1), 1)
+    v1 = snapshot(target).versions
 
     stats = erase_predicate(
         spark, target, F.col("custkey") % 89 == 0, batch_id=2
     )
-    v2 = _read_manifest(target)
+    v2 = snapshot(target).versions
     bumped = sorted(b for b in v2 if v2[b] != v1[b])
     affected_ok = len(bumped) == stats["buckets_rewritten"]
     untouched_ok = all(v2[b] == v1[b] == 1 for b in v2 if b not in bumped)
@@ -511,7 +512,7 @@ ORACLE["sink_erase_predicate"] = SINK_ERASE_SQL
 
 def sink_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zero-copy snapshot clone end-to-end (Delta ``SHALLOW CLONE``
-    twin — streaming/pipeline.py ``shallow_clone``): commit an orders
+    twin — sinks/versioned.py ``shallow_clone``): commit an orders
     snapshot, clone it metadata-only (hardlinks + one manifest write,
     no Spark job), then ERASE rows from the ORIGIN and prove the
     clone is a stable snapshot: (a) the clone still holds every
@@ -523,13 +524,14 @@ def sink_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the clone is O(#files) link() metadata calls — cloning a
     100 TB sink costs a directory walk, which is exactly why shallow
     clones are the dev/test/branching verb warehouses reach for; the
-    immutable ``_sv=`` version dirs make shared bytes safe."""
-    from bireme_spark.streaming.pipeline import (
-        _bucket_col,
-        _write_changed_buckets,
+    sink's immutable version dirs make shared bytes safe."""
+    from bireme_spark.sinks.versioned import (
+        bucket_col,
         erase_predicate,
         read_state,
         shallow_clone,
+        stage,
+        write_manifest,
     )
 
     n_buckets = 8
@@ -541,8 +543,8 @@ def sink_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_custkey").alias("custkey"),
         F.col("o_totalprice").alias("price"),
     )
-    bucketed = o.withColumn("_sb", _bucket_col("key", n_buckets))
-    _write_changed_buckets(spark, origin, bucketed, list(range(n_buckets)), batch_id=1)
+    bucketed = o.withColumn("_sb", bucket_col("key", n_buckets))
+    write_manifest(origin, stage(spark, origin, bucketed, range(n_buckets), 1), 1)
 
     stats = shallow_clone(origin, clone)
     erased = erase_predicate(spark, origin, F.col("custkey") % 97 == 0, batch_id=2)

@@ -18,8 +18,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bireme_spark.config import PipelineConfig, SourceConfig
+from bireme_spark.sinks.versioned import read_state
 from bireme_spark.sources.tables import load_table
-from bireme_spark.streaming.pipeline import read_state, run_cdc_pipeline
+from bireme_spark.streaming.pipeline import run_cdc_pipeline
 
 DATA_SCHEMA = (
     StructType()

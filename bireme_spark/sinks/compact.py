@@ -1,6 +1,6 @@
 """Small-file compaction for parquet targets.
 
-A CDC sink that commits every micro-batch (streaming/pipeline.py
+A CDC sink that commits every micro-batch (sinks/versioned.py
 writes per-batch bucket files; the reference commits per
 `ChangeLoader.java` round) accretes many small files per partition —
 and at 100 TB, scan cost is dominated by file-open overhead and

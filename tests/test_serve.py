@@ -26,7 +26,7 @@ def _envelope(k: int, v: str, op: str, ts: int) -> str:
 
 def test_serve_lifecycle_available_now(spark, tmp_path):
     from bireme_spark.serve import serve
-    from bireme_spark.streaming.pipeline import read_state
+    from bireme_spark.sinks.versioned import read_state
     from bireme_spark.streaming.replay import stamp_batch_mtime
 
     input_dir = tmp_path / "input"
@@ -120,7 +120,7 @@ def test_serve_multi_table_lifecycle(spark, tmp_path):
     import json
 
     from bireme_spark.serve import serve
-    from bireme_spark.streaming.pipeline import read_state
+    from bireme_spark.sinks.versioned import read_state
     from bireme_spark.streaming.replay import stamp_batch_mtime
 
     def env(table, data, op, ts):

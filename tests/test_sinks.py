@@ -299,10 +299,17 @@ def test_streaming_pipeline_into_jdbc_warehouse(spark, tmp_path):
     assert os.path.isdir(cfg.checkpoint_dir)  # progress tracked for restart
 
 
+def _commit(spark, target, rows, changed, batch_id, fence=False):
+    """One sink commit: stage the changed buckets, then the manifest."""
+    from bireme_spark.sinks.versioned import stage, write_manifest
+
+    write_manifest(target, stage(spark, target, rows, changed, batch_id, fence), batch_id)
+
+
 def _build_sink(spark, tmp_path, n_buckets=4):
     from pyspark.sql import functions as F
 
-    from bireme_spark.streaming.pipeline import _bucket_col, _write_changed_buckets
+    from bireme_spark.sinks.versioned import bucket_col
 
     target = str(tmp_path / "erase_sink")
     df = spark.range(0, 200).select(
@@ -310,13 +317,13 @@ def _build_sink(spark, tmp_path, n_buckets=4):
         (F.col("id") % 7).alias("grp"),
         (F.col("id") * 3).alias("val"),
     )
-    bucketed = df.withColumn("_sb", _bucket_col("key", n_buckets))
-    _write_changed_buckets(spark, target, bucketed, list(range(n_buckets)), batch_id=1)
+    bucketed = df.withColumn("_sb", bucket_col("key", n_buckets))
+    _commit(spark, target, bucketed, list(range(n_buckets)), batch_id=1)
     return target
 
 
 def test_erase_predicate_removes_only_matches(spark, tmp_path):
-    from bireme_spark.streaming.pipeline import erase_predicate, read_state
+    from bireme_spark.sinks.versioned import erase_predicate, read_state
 
     target = _build_sink(spark, tmp_path)
     stats = erase_predicate(spark, target, "grp = 3", batch_id=2)
@@ -332,31 +339,31 @@ def test_erase_predicate_removes_only_matches(spark, tmp_path):
 def test_erase_predicate_bumps_only_affected_buckets(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from bireme_spark.streaming.pipeline import _read_manifest, erase_predicate
+    from bireme_spark.sinks.versioned import erase_predicate, snapshot
 
     target = _build_sink(spark, tmp_path)
-    v1 = dict(_read_manifest(target))
+    v1 = snapshot(target).versions
     # erase exactly ONE key → exactly one bucket rewritten
     stats = erase_predicate(spark, target, F.col("key") == "42", batch_id=2)
     assert stats["rows_erased"] == 1
     assert stats["buckets_rewritten"] == 1
-    v2 = _read_manifest(target)
+    v2 = snapshot(target).versions
     bumped = [b for b in v2 if v2[b] != v1[b]]
     assert len(bumped) == 1
     assert all(v2[b] == v1[b] for b in v2 if b not in bumped)
 
 
 def test_erase_predicate_idempotent_and_null_safe(spark, tmp_path):
-    from bireme_spark.streaming.pipeline import _read_manifest, erase_predicate, read_state
+    from bireme_spark.sinks.versioned import erase_predicate, read_state, snapshot
 
     target = _build_sink(spark, tmp_path)
     erase_predicate(spark, target, "grp = 1", batch_id=2)
-    v_after = dict(_read_manifest(target))
+    v_after = snapshot(target).versions
     # re-run: zero matches left, nothing rewritten, manifest untouched
     stats2 = erase_predicate(spark, target, "grp = 1", batch_id=3)
     assert stats2["rows_erased"] == 0
     assert stats2["buckets_rewritten"] == 0
-    assert _read_manifest(target) == v_after
+    assert snapshot(target).versions == v_after
     # NULL predicate keeps the row (DELETE fires only on TRUE)
     stats3 = erase_predicate(
         spark, target, "CASE WHEN grp = 2 THEN NULL ELSE grp = 0 END", batch_id=4
@@ -368,7 +375,7 @@ def test_erase_predicate_idempotent_and_null_safe(spark, tmp_path):
 
 
 def test_erase_predicate_empties_bucket_with_all_matches(spark, tmp_path):
-    from bireme_spark.streaming.pipeline import erase_predicate, read_state
+    from bireme_spark.sinks.versioned import erase_predicate, read_state
 
     target = _build_sink(spark, tmp_path, n_buckets=2)
     # erase everything: both buckets rewritten to explicit empty versions
@@ -382,7 +389,7 @@ def test_erase_predicate_empties_bucket_with_all_matches(spark, tmp_path):
 
 
 def test_shallow_clone_snapshot_survives_origin_erase(spark, tmp_path):
-    from bireme_spark.streaming.pipeline import erase_predicate, read_state, shallow_clone
+    from bireme_spark.sinks.versioned import erase_predicate, read_state, shallow_clone
 
     origin = _build_sink(spark, tmp_path)
     clone = str(tmp_path / "the_clone")
@@ -400,19 +407,22 @@ def test_shallow_clone_snapshot_survives_origin_erase(spark, tmp_path):
 def test_shallow_clone_is_hardlinked_and_manifest_equal(spark, tmp_path):
     import os
 
-    from bireme_spark.streaming.pipeline import _latest_paths, _read_manifest, shallow_clone
+    from bireme_spark.sinks.versioned import shallow_clone, snapshot, version_dir
+
+    def committed_dirs(target):
+        return [version_dir(target, b, v) for b, v in snapshot(target).versions.items()]
 
     origin = _build_sink(spark, tmp_path)
     clone = str(tmp_path / "clone2")
     shallow_clone(origin, clone)
-    assert _read_manifest(clone) == _read_manifest(origin)
+    assert snapshot(clone).versions == snapshot(origin).versions
     src_inodes = {
         (os.path.relpath(p, origin), n): os.stat(os.path.join(p, n)).st_ino
-        for p in _latest_paths(origin)
+        for p in committed_dirs(origin)
         for n in os.listdir(p)
         if os.path.isfile(os.path.join(p, n))
     }
-    for p in _latest_paths(clone):
+    for p in committed_dirs(clone):
         for n in os.listdir(p):
             fp = os.path.join(p, n)
             if os.path.isfile(fp):
@@ -424,7 +434,7 @@ def test_shallow_clone_is_hardlinked_and_manifest_equal(spark, tmp_path):
 def test_shallow_clone_then_write_divergence(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from bireme_spark.streaming.pipeline import erase_predicate, read_state, shallow_clone
+    from bireme_spark.sinks.versioned import erase_predicate, read_state, shallow_clone
 
     origin = _build_sink(spark, tmp_path)
     clone = str(tmp_path / "clone3")
@@ -439,38 +449,52 @@ def test_stale_writer_is_fenced(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
-    from bireme_spark.streaming.pipeline import (
-        StaleWriterError,
-        _bucket_col,
-        _read_manifest,
-        _write_changed_buckets,
-        read_state,
-    )
+    from bireme_spark.sinks.versioned import StaleWriterError, bucket_col, read_state, snapshot
 
     target = _build_sink(spark, tmp_path)  # commits batch_id=1
     df = spark.range(500, 510).select(
         F.col("id").cast("string").alias("key"),
         (F.col("id") % 7).alias("grp"),
         (F.col("id") * 3).alias("val"),
-    ).withColumn("_sb", _bucket_col("key", 4))
-    _write_changed_buckets(spark, target, df, list(range(4)), batch_id=5)
-    v_after = dict(_read_manifest(target))
+    ).withColumn("_sb", bucket_col("key", 4))
+    _commit(spark, target, df, list(range(4)), batch_id=5)
+    v_after = snapshot(target).versions
     rows_after = read_state(spark, target).count()
 
     # zombie epoch: batch 3 < committed 5 must refuse and change nothing
     with pytest.raises(StaleWriterError):
-        _write_changed_buckets(spark, target, df, list(range(4)), batch_id=3, fence=True)
-    assert _read_manifest(target) == v_after
+        _commit(spark, target, df, list(range(4)), batch_id=3, fence=True)
+    assert snapshot(target).versions == v_after
     assert read_state(spark, target).count() == rows_after
 
     # equal batch_id is a foreachBatch RETRY and must be allowed even fenced
-    _write_changed_buckets(spark, target, df, list(range(4)), batch_id=5, fence=True)
+    _commit(spark, target, df, list(range(4)), batch_id=5, fence=True)
     assert read_state(spark, target).count() == rows_after
 
     # UNfenced lower batch_id stays allowed: deliberate full replay
     # after checkpoint loss re-presents old ids (value-idempotent)
-    _write_changed_buckets(spark, target, df, list(range(4)), batch_id=3)
+    _commit(spark, target, df, list(range(4)), batch_id=3)
     assert read_state(spark, target).count() == rows_after
+
+
+def test_sink_layout_is_spelled_only_in_the_sink_module():
+    """The on-disk layout belongs to sinks/versioned.py: no other
+    package module spells a layout dir or the manifest name, so every
+    reader and writer goes through that module's snapshot and commit."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "bireme_spark"
+    owner = pkg / "sinks" / "versioned.py"
+    literals = ("_sb=", "_sv=", "_manifest.json")
+    assert all(lit in owner.read_text(encoding="utf-8") for lit in literals)
+    hits = [
+        f"{path.relative_to(pkg)}: {lit}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != owner
+        for lit in literals
+        if lit in path.read_text(encoding="utf-8")
+    ]
+    assert not hits, hits
 
 
 def test_shallow_clone_refuses_dirty_destination(spark, tmp_path):
@@ -479,7 +503,7 @@ def test_shallow_clone_refuses_dirty_destination(spark, tmp_path):
     the cross-device case and copy2'd over the dirty dst)."""
     import pytest
 
-    from bireme_spark.streaming.pipeline import shallow_clone
+    from bireme_spark.sinks.versioned import shallow_clone
 
     origin = _build_sink(spark, tmp_path)
     clone = str(tmp_path / "dirty_clone")

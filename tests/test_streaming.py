@@ -116,14 +116,14 @@ def test_incremental_sink_rewrites_only_changed_buckets(spark, two_batch_sink):
 
     from pyspark.sql import functions as F
 
-    from bireme_spark.streaming.pipeline import _bucket_col, read_state
+    from bireme_spark.sinks.versioned import bucket_col, read_state
 
     keys, upd, cfg = _KEYS, _UPD, two_batch_sink
 
     expected_changed = {
         r.b
         for r in spark.createDataFrame([(str(k),) for k in upd], "key string")
-        .select(_bucket_col("key", cfg.num_buckets).alias("b"))
+        .select(bucket_col("key", cfg.num_buckets).alias("b"))
         .collect()
     }
     versions = {}
@@ -150,22 +150,35 @@ def _data_files(version_dir: str) -> list[str]:
     return sorted(f for f in os.listdir(version_dir) if f.endswith(".parquet"))
 
 
+def _committed_dirs(target: str) -> list[str]:
+    from bireme_spark.sinks.versioned import snapshot, version_dir
+
+    return [version_dir(target, b, v) for b, v in sorted(snapshot(target).versions.items())]
+
+
+def _commit(spark, target, rows, changed, batch_id):
+    """One sink commit: stage the changed buckets, then the manifest."""
+    from bireme_spark.sinks.versioned import stage, write_manifest
+
+    write_manifest(target, stage(spark, target, rows, changed, batch_id), batch_id)
+
+
 def test_each_committed_version_is_one_data_file(spark, two_batch_sink, tmp_path):
     """The writer clusters rows by bucket before partitionBy, so every
     committed _sv= dir holds exactly one parquet data file — after
     streaming batches and after an erase rewrites some buckets."""
     import shutil
 
-    from bireme_spark.streaming.pipeline import _latest_paths, erase_predicate, read_state
+    from bireme_spark.sinks.versioned import erase_predicate, read_state
 
     target = str(tmp_path / "target")
     shutil.copytree(two_batch_sink.target_dir, target)
-    files = {p: _data_files(p) for p in _latest_paths(target)}
+    files = {p: _data_files(p) for p in _committed_dirs(target)}
     assert files and all(len(f) == 1 for f in files.values()), files
 
     stats = erase_predicate(spark, target, "k % 2 = 0", batch_id=2)
     assert stats["buckets_rewritten"] > 0
-    files = {p: _data_files(p) for p in _latest_paths(target)}
+    files = {p: _data_files(p) for p in _committed_dirs(target)}
     assert len(files) == two_batch_sink.num_buckets
     assert all(len(f) == 1 for f in files.values()), files
     assert {r.k for r in read_state(spark, target).collect()} == {k for k in _KEYS if k % 2}
@@ -182,6 +195,7 @@ def test_merge_releases_its_batch_checkpoint(spark, tmp_path):
     batch all leave the set of persisted RDDs as they found it."""
     from pyspark.sql.types import StructType
 
+    from bireme_spark.sinks.versioned import snapshot
     from bireme_spark.sources.maxwell import parse_maxwell
     from bireme_spark.streaming import pipeline as pl
 
@@ -207,7 +221,7 @@ def test_merge_releases_its_batch_checkpoint(spark, tmp_path):
     merge(1, [(k, "update") for k in range(5)])
     merge(2, [])
     assert _persistent_rdd_ids(spark) - before == set()
-    assert pl._read_committed_batch(target) == 1
+    assert snapshot(target).batch_id == 1
     got = {(r.k, r.price) for r in pl.read_state(spark, target).collect()}
     assert got == {(k, float(k + (1 if k < 5 else 0))) for k in range(20)}
 
@@ -223,7 +237,8 @@ def test_multi_table_batch_without_mapped_rows_commits_nothing(spark, tmp_path):
     from pyspark.sql.types import StructType
 
     from bireme_spark.config import PipelineConfig, SourceConfig
-    from bireme_spark.streaming.pipeline import TableSpec, read_state, run_multi_table_pipeline
+    from bireme_spark.sinks.versioned import read_state
+    from bireme_spark.streaming.pipeline import TableSpec, run_multi_table_pipeline
     from bireme_spark.streaming.replay import stamp_batch_mtime
 
     def env(table, k, ts):
@@ -351,7 +366,8 @@ def test_same_timestamp_fold_is_deterministic(spark, tmp_path):
     import os
 
     from bireme_spark.config import PipelineConfig, SourceConfig
-    from bireme_spark.streaming.pipeline import read_state, run_cdc_pipeline
+    from bireme_spark.sinks.versioned import read_state
+    from bireme_spark.streaming.pipeline import run_cdc_pipeline
     from pyspark.sql.types import StructType
 
     for run in range(2):
@@ -454,34 +470,29 @@ def test_manifest_commit_is_atomic_and_crash_safe(spark, tmp_path):
     but died before its manifest write must be invisible to readers,
     and the retry must (a) read the committed base, (b) version past
     the orphan dirs, (c) reap them once superseded."""
-    from bireme_spark.streaming.pipeline import (
-        _latest_paths,
-        _read_manifest,
-        _write_changed_buckets,
-        read_state,
-    )
+    from bireme_spark.sinks.versioned import read_state, snapshot, version_dir
 
     target = str(tmp_path / "target")
     b0 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, val string").withColumn(
         "_sb", F.lit(0)
     )
-    _write_changed_buckets(spark, target, b0, [0], batch_id=0)
-    assert _read_manifest(target) == {0: 1}
+    _commit(spark, target, b0, [0], batch_id=0)
+    assert snapshot(target).versions == {0: 1}
     assert {(r.k, r.val) for r in read_state(spark, target).collect()} == {(1, "a"), (2, "b")}
 
     # crash simulation: a later attempt staged bucket 0 at v=2 (with
     # rows that must NOT appear) but died before the manifest commit
     orphan = spark.createDataFrame([(9, "ORPHAN")], "k long, val string")
-    orphan.write.parquet(f"{target}/_sb=0/_sv=2")
-    assert _latest_paths(target) == [f"{target}/_sb=0/_sv=1"]
+    orphan.write.parquet(version_dir(target, 0, 2))
+    assert _committed_dirs(target) == [version_dir(target, 0, 1)]
     assert {(r.k, r.val) for r in read_state(spark, target).collect()} == {(1, "a"), (2, "b")}
 
     # retry of the batch: versions past the orphan, commits v=3
     b1 = spark.createDataFrame([(1, "a2"), (2, "b")], "k long, val string").withColumn(
         "_sb", F.lit(0)
     )
-    _write_changed_buckets(spark, target, b1, [0], batch_id=1)
-    assert _read_manifest(target) == {0: 3}
+    _commit(spark, target, b1, [0], batch_id=1)
+    assert snapshot(target).versions == {0: 3}
     assert {(r.k, r.val) for r in read_state(spark, target).collect()} == {(1, "a2"), (2, "b")}
 
     # one more batch: retention reaps everything below the old commit,
@@ -489,7 +500,7 @@ def test_manifest_commit_is_atomic_and_crash_safe(spark, tmp_path):
     b2 = spark.createDataFrame([(1, "a3")], "k long, val string").withColumn(
         "_sb", F.lit(0)
     )
-    _write_changed_buckets(spark, target, b2, [0], batch_id=2)
+    _commit(spark, target, b2, [0], batch_id=2)
     import os
 
     left = sorted(os.listdir(f"{target}/_sb=0"))
@@ -508,7 +519,8 @@ def test_scd2_pipeline_batch_replay_is_idempotent(spark, tmp_path):
     from pyspark.sql.types import StructType
 
     from bireme_spark.config import PipelineConfig, SourceConfig
-    from bireme_spark.streaming.pipeline import read_state, run_scd2_pipeline
+    from bireme_spark.sinks.versioned import read_state
+    from bireme_spark.streaming.pipeline import run_scd2_pipeline
     from bireme_spark.streaming.replay import stamp_batch_mtime
 
     def env(op, k, price, ts):
@@ -562,26 +574,64 @@ def test_corrupt_manifest_raises_not_falls_back(spark, tmp_path):
     uncommitted orphan versions as committed state."""
     import pytest
 
-    from bireme_spark.streaming.pipeline import _latest_paths, _write_changed_buckets
+    from bireme_spark.sinks.versioned import read_state, snapshot, version_dir
 
     target = str(tmp_path / "t")
     b0 = spark.createDataFrame([(1, "a")], "k long, val string").withColumn(
         "_sb", F.lit(0)
     )
-    _write_changed_buckets(spark, target, b0, [0], batch_id=0)
+    _commit(spark, target, b0, [0], batch_id=0)
     # orphan from a crashed batch + corrupted manifest
     spark.createDataFrame([(9, "ORPHAN")], "k long, val string").write.parquet(
-        f"{target}/_sb=0/_sv=2"
+        version_dir(target, 0, 2)
     )
     with open(f"{target}/_manifest.json", "w") as f:
         f.write("{truncated")
     with pytest.raises(Exception, match="corrupt sink manifest"):
-        _latest_paths(target)
-    # a target with no manifest at all still falls back to the dir scan
-    import os
+        snapshot(target)
+    with pytest.raises(Exception, match="corrupt sink manifest"):
+        read_state(spark, target)
 
-    os.remove(f"{target}/_manifest.json")
-    assert _latest_paths(target) == [f"{target}/_sb=0/_sv=2"]
+
+def test_first_batch_crash_before_manifest_commits_nothing(spark, tmp_path, monkeypatch):
+    """A first batch that renamed its bucket dirs into a fresh target
+    but died before the manifest write committed nothing: readers see
+    no state, vacuum reaps its dirs as orphans, and the retried batch
+    commits exactly its rows."""
+    import os
+    import shutil
+
+    from bireme_spark.sinks.versioned import bucket_col, read_state, snapshot, vacuum_versions
+    from bireme_spark.streaming import pipeline as pl
+
+    target = str(tmp_path / "t")
+    rows = spark.createDataFrame(
+        [(k, f"v{k}") for k in range(8)], "k long, val string"
+    ).withColumn("_sb", bucket_col("k", 4))
+    want = {(k, f"v{k}") for k in range(8)}
+
+    def crash(*_):
+        raise RuntimeError("simulated crash before the manifest commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(pl, "_write_manifest", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            pl._write_changed_buckets(spark, target, rows, list(range(4)), 0)
+    buckets = sorted(d for d in os.listdir(target) if d.startswith("_sb="))
+    assert len(buckets) == 4  # the renames happened
+
+    assert read_state(spark, target) is None
+
+    reaped = str(tmp_path / "reaped")
+    shutil.copytree(target, reaped)
+    stats = vacuum_versions(reaped)
+    assert stats["orphans_removed"] == 4 and stats["versions_after"] == 0, stats
+    assert not [v for b in buckets for v in os.listdir(f"{reaped}/{b}")]
+
+    pl._write_changed_buckets(spark, target, rows, list(range(4)), 0)
+    assert snapshot(target) == ({b: 2 for b in range(4)}, 0)
+    assert {(r.k, r.val) for r in read_state(spark, target).collect()} == want
+    assert sorted(os.listdir(f"{target}/{buckets[0]}")) == ["_sv=2"]  # orphan reaped
 
 
 def test_multi_table_pipeline_debezium_envelopes(spark, tmp_path):
@@ -594,11 +644,8 @@ def test_multi_table_pipeline_debezium_envelopes(spark, tmp_path):
     from pyspark.sql.types import StructType
 
     from bireme_spark.config import PipelineConfig, SourceConfig
-    from bireme_spark.streaming.pipeline import (
-        TableSpec,
-        read_state,
-        run_multi_table_pipeline,
-    )
+    from bireme_spark.sinks.versioned import read_state
+    from bireme_spark.streaming.pipeline import TableSpec, run_multi_table_pipeline
     from bireme_spark.streaming.replay import stamp_batch_mtime
 
     def env(db, table, op, ts, before, after):
@@ -666,11 +713,8 @@ def test_multi_table_pipeline_consolidates_sharded_origins(spark, tmp_path):
     from pyspark.sql.types import StructType
 
     from bireme_spark.config import PipelineConfig, SourceConfig
-    from bireme_spark.streaming.pipeline import (
-        TableSpec,
-        read_state,
-        run_multi_table_pipeline,
-    )
+    from bireme_spark.sinks.versioned import read_state
+    from bireme_spark.streaming.pipeline import TableSpec, run_multi_table_pipeline
     from bireme_spark.streaming.replay import stamp_batch_mtime
 
     def env(table, k, v, ts):
@@ -794,11 +838,7 @@ def test_vacuum_versions_retention_and_orphans(spark, tmp_path):
     with keep=1, and (d) leave read_state's answer unchanged."""
     import os
 
-    from bireme_spark.streaming.pipeline import (
-        _write_manifest,
-        read_state,
-        vacuum_versions,
-    )
+    from bireme_spark.sinks.versioned import read_state, vacuum_versions, write_manifest
 
     target = str(tmp_path / "t")
     for b in (0, 1):
@@ -810,7 +850,7 @@ def test_vacuum_versions_retention_and_orphans(spark, tmp_path):
     spark.createDataFrame([(99, "ORPHAN")], "k long, val string").write.parquet(
         f"{target}/_sb=0/_sv=4"
     )
-    _write_manifest(target, {0: 3, 1: 3}, batch_id=0)
+    write_manifest(target, {0: 3, 1: 3}, batch_id=0)
 
     # keep=2: committed + one prior survive; orphan goes
     stats = vacuum_versions(target, keep=2)
@@ -855,6 +895,7 @@ def test_crash_after_sink_commit_resumes_and_stays_idempotent(spark, tmp_path, m
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.sinks.versioned import snapshot
     from bireme_spark.streaming import pipeline as pl
     from bireme_spark.streaming.replay import stamp_batch_mtime
     from pyspark.sql.types import StructType
@@ -908,7 +949,7 @@ def test_crash_after_sink_commit_resumes_and_stays_idempotent(spark, tmp_path, m
         q.awaitTermination(120)
     # the sink DID commit batch 1 before the crash
     assert merged_batches == [0, 1]
-    assert pl._read_committed_batch(cfg.target_dir) == 1
+    assert snapshot(cfg.target_dir).batch_id == 1
 
     # restart from the same checkpoint, crash injector removed
     monkeypatch.setattr(pl, "_merge_compacted_versioned", real_merge)
@@ -1038,6 +1079,7 @@ def test_scd2_crash_after_commit_resumes_correct_history(spark, tmp_path, monkey
     from pyspark.sql.types import StructType
 
     from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.sinks.versioned import snapshot
     from bireme_spark.streaming import pipeline as pl
     from bireme_spark.streaming.replay import stamp_batch_mtime
 
@@ -1100,7 +1142,7 @@ def test_scd2_crash_after_commit_resumes_correct_history(spark, tmp_path, monkey
     q = pl.run_scd2_pipeline(spark, cfg, schema, key_fields=("k",), available_now=True)
     with pytest.raises(StreamingQueryException):
         q.awaitTermination(120)
-    assert pl._read_committed_batch(cfg.target_dir) == 1
+    assert snapshot(cfg.target_dir).batch_id == 1
 
     # --- restart from the checkpoint, crash injector removed ---
     monkeypatch.setattr(pl, "_write_changed_buckets", real_write)
@@ -1127,6 +1169,7 @@ def test_kafka_fake_drives_cdc_merge_end_to_end(spark, tmp_path):
 
     from bireme_spark.config import SourceConfig
     from bireme_spark.sources.maxwell import parse_maxwell
+    from bireme_spark.sinks.versioned import snapshot
     from bireme_spark.streaming import pipeline as pl
     from bireme_spark.streaming.kafka_fake import FakeBroker, FakeKafkaSource
 
@@ -1184,7 +1227,7 @@ def test_kafka_fake_drives_cdc_merge_end_to_end(spark, tmp_path):
     src1 = FakeKafkaSource(broker, opts)
     next_id = apply_batches(src1, target_a, first_batch_id=0, max_batches=2)
     committed_positions = dict(src1.positions)  # the checkpoint
-    assert pl._read_committed_batch(target_a) == next_id - 1
+    assert snapshot(target_a).batch_id == next_id - 1
 
     # restart: a NEW consumer resumes from the checkpointed positions
     # (NOT from any broker-side group offset) and drains the topic
