@@ -8,8 +8,9 @@ Reference semantics (studied, not copied):
   rows in arrival order into a LoadTask with a *delete set* (keys
   seen as DELETE or UPDATE, incl. old PK on PK-change) and an
   *insert set* (last tuple per key unless the last op is DELETE).
-- ``ChangeLoader.java:205-330``: apply = DELETE (delete set ∪, in
-  pessimistic mode, insert keys) then COPY the insert set.
+- ``ChangeLoader.java:205-330``: apply = DELETE (delete set ∪ insert
+  keys — the reference's pessimistic mode, the only one here) then
+  COPY the insert set.
 
 The reference folds sequentially per pipeline thread; here the fold
 is a distributed aggregation: ``max_by`` over the (produce_time, seq)
@@ -24,13 +25,24 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Canonical ChangeRow op codes (Row.java RowType INSERT/UPDATE/DELETE).
 OP_INSERT = "I"
 OP_UPDATE = "U"
 OP_DELETE = "D"
+
+# A ChangeRow's ``key`` is the primary key as one string: its parts
+# cast to string and joined by a byte no key value carries, so a
+# composite key's parts stay apart ((1, 12) is not (11, 2)). A
+# one-column key is that column as a string.
+KEY_SEP = "\x01"
+
+
+def key_string(parts: Sequence[Column]) -> Column:
+    """The ChangeRow ``key`` string of a primary key's columns."""
+    return F.concat_ws(KEY_SEP, *[p.cast("string") for p in parts])
 
 
 def _ord_struct(order_cols: Sequence[str]):
@@ -107,36 +119,21 @@ def apply_changes(
     base_key_cols: Sequence[str],
     compact_key_cols: Sequence[str] | None = None,
     payload_map: dict[str, str] | None = None,
-    mode: str = "auto",
 ) -> DataFrame:
     """DELETE + COPY merge (ChangeLoader.executeTask semantics): drop
     every base row whose key appears in the compacted batch (delete
-    set ∪ insert keys — bireme's pessimistic-safe superset), then
-    append the insert set.
+    set ∪ insert keys), then append the insert set.
 
-    ``mode`` mirrors the reference's adaptive loader
-    (``ChangeLoader.java:212-222``): in *optimistic* mode a batch with
-    no deletes and no (key-)updates skips the DELETE phase entirely —
-    the common append-heavy-sync case pays zero anti-join. ``auto``
-    (default) probes the compacted batch's ``in_delete`` flags and
-    picks the fast path when the batch is pure-insert (``in_delete``
-    covers DELETE *and* UPDATE ops). Two caveats the caller owns:
-
-    * The probe is a Spark ACTION at plan-construction time — it runs
-      the compaction aggregation once. Callers should ``persist()``
-      ``compacted`` first (or pass an explicit mode) so the real merge
-      reuses it instead of recomputing.
-    * The skip assumes insert keys are NEW. If the same batch may be
-      re-applied (foreachBatch retry after a partial sink write) or
-      the source can re-deliver an INSERT for an existing key, use
-      ``"pessimistic"``: the unconditional anti-join is what makes
-      DELETE+COPY idempotent per batch. (The reference recovers from a
-      wrong optimistic guess via PK-constraint errors + retry —
-      ``ChangeLoader.java:283-290``; a constraint-free sink like
-      parquet corrupts silently instead, so the streaming pipeline
-      here always passes pessimistic.)
-
-    ``"optimistic"`` forces the skip without probing.
+    This is always the reference's *pessimistic* mode. Its optimistic
+    mode (``ChangeLoader.java:212-222``) skips the DELETE for a batch
+    with no deletes or updates and relies on a primary-key violation
+    to detect a wrong guess (``:283-290``). The sinks here get no such
+    signal (parquet has no constraints, nor do the staging tables
+    Spark's JDBC writer creates), so a skipped DELETE would corrupt
+    silently whenever a batch is re-applied — a foreachBatch retry after a partial sink
+    write, or a source that re-delivers an INSERT for an existing key.
+    The unconditional anti-join is what makes DELETE+COPY idempotent
+    per batch.
 
     ``payload_map`` maps base column → compacted payload column; keys
     map positionally from ``base_key_cols`` to ``compact_key_cols``.
@@ -145,20 +142,11 @@ def apply_changes(
     """
     if compact_key_cols is None:
         compact_key_cols = list(compacted.columns[: len(base_key_cols)])
-    if mode == "auto":
-        optimistic = compacted.where(F.col("in_delete")).isEmpty()
-    elif mode in ("optimistic", "pessimistic"):
-        optimistic = mode == "optimistic"
-    else:  # pragma: no cover - guard
-        raise ValueError(f"apply_changes: unknown mode {mode!r}")
-    if optimistic:
-        survivors = base
-    else:
-        cond = None
-        for b, c in zip(base_key_cols, compact_key_cols):
-            clause = base[b] == compacted[c]
-            cond = clause if cond is None else cond & clause
-        survivors = base.join(compacted, cond, "left_anti")
+    cond = None
+    for b, c in zip(base_key_cols, compact_key_cols):
+        clause = base[b] == compacted[c]
+        cond = clause if cond is None else cond & clause
+    survivors = base.join(compacted, cond, "left_anti")
 
     if payload_map is None:
         payload_map = {c: c for c in base.columns if c not in base_key_cols}

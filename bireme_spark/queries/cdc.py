@@ -195,10 +195,6 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         base_key_cols=("o_orderkey",),
         compact_key_cols=("key",),
         payload_map={"o_totalprice": "o_totalprice", "o_orderstatus": "o_orderstatus"},
-        # explicit: the U/D batch always anti-joins, and skipping the
-        # auto probe keeps query construction lazy (no eager
-        # compaction job inside bench/plan tests)
-        mode="pessimistic",
     )
     return applied.select(
         "o_orderkey",
@@ -1246,7 +1242,6 @@ def cdc_exactly_once_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "o_totalprice": "o_totalprice",
                 "o_orderstatus": "o_orderstatus",
             },
-            mode="pessimistic",
         )
         canon = lambda df: df.select(  # noqa: E731
             "o_orderkey",
@@ -1946,7 +1941,6 @@ def cdc_pk_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         base_key_cols=("key",),
         compact_key_cols=("key",),
         payload_map={"o_totalprice": "o_totalprice", "o_orderstatus": "o_orderstatus"},
-        mode="pessimistic",
     )
     return applied.select(
         F.col("key").cast("bigint").alias("o_orderkey"),

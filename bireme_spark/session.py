@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "bireme-spark",
@@ -42,6 +44,10 @@ def get_spark(
         # cluster sets executor memory instead).
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
+        # Python workers start in the JVM's cwd; put the directory that
+        # holds this package on their path so a UDF over a package
+        # function imports from any launch directory.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -18,9 +18,13 @@ Flow per micro-batch (from ``foreachBatch``), per target table:
    then drops the staging table. Keys-only SQL — the row payload
    never moves through the driver.
 
+The merge is always the reference's pessimistic mode: the DELETE runs
+for every staged key, so a replayed batch lands once (see
+``bireme_spark.operators.cdc.apply_changes``).
+
 The SQL builders are pure functions (unit-tested without a DB); the
 executor needs a JDBC driver jar on the Spark classpath and is
-exercised against a live warehouse only.
+exercised against embedded Derby in the tests and the gate.
 """
 
 from __future__ import annotations
@@ -64,18 +68,13 @@ def delete_sql(target_table: str, staging_table: str, key_cols: Sequence[str]) -
     )
 
 
-def insert_sql(
-    target_table: str,
-    staging_table: str,
-    payload_cols: Sequence[str],
-    op_col: str = "op",
-) -> str:
+def insert_sql(target_table: str, staging_table: str, payload_cols: Sequence[str]) -> str:
     """Insert the surviving (non-delete) staged rows into the target."""
     cols = ", ".join(_qident(c) for c in payload_cols)
     return (
         f"INSERT INTO {_qident(target_table)} ({cols}) "
         f"SELECT {cols} FROM {staging_table} "
-        f"WHERE {_qident(op_col)} <> 'D'"
+        "WHERE \"op\" <> 'D'"
     )
 
 
@@ -101,25 +100,12 @@ class JdbcMergeSink:
     key_cols: Sequence[str]
     payload_cols: Sequence[str]
     properties: dict = field(default_factory=dict)
-    op_col: str = "op"
-    stage_write_mode: str = "overwrite"
-    # the reference's optimisticMode (ChangeLoader.java:212-222):
-    # insert-only workloads skip the delete scan until the first
-    # duplicate-key violation proves a key pre-exists, then the sink
-    # flips pessimistic ONCE and stays there (executeTask:274-289).
-    optimistic: bool = False
 
-    def merge_statements(self, staging: str, optimistic: bool = False) -> list[str]:
-        """The driver-side transaction, in order (pure; testable).
-        ``optimistic`` drops the delete phase (insert-only fast path)."""
-        delete = (
-            []
-            if optimistic
-            else [delete_sql(self.target_table, staging, self.key_cols)]
-        )
+    def merge_statements(self, staging: str) -> list[str]:
+        """The driver-side transaction, in order (pure; testable)."""
         return [
-            *delete,
-            insert_sql(self.target_table, staging, self.payload_cols, self.op_col),
+            delete_sql(self.target_table, staging, self.key_cols),
+            insert_sql(self.target_table, staging, self.payload_cols),
             drop_sql(staging, if_exists="derby" not in self.url),
         ]
 
@@ -127,28 +113,14 @@ class JdbcMergeSink:
         if batch_df.isEmpty():
             return
         staging = staging_table_name(self.target_table, batch_id)
-        cols = list(dict.fromkeys([*self.key_cols, *self.payload_cols, self.op_col]))
+        cols = list(dict.fromkeys([*self.key_cols, *self.payload_cols, "op"]))
         (
             batch_df.select(*cols)
-            .write.mode(self.stage_write_mode)
+            .write.mode("overwrite")
             .options(**self.properties)
             .jdbc(self.url, staging)
         )
-        spark = batch_df.sparkSession
-        try:
-            self._execute_transaction(
-                spark, self.merge_statements(staging, optimistic=self.optimistic)
-            )
-        except Exception as exc:
-            # Derby 23505 / Postgres 23505 both say "duplicate key
-            # value"; the rollback left the staging table in place, so
-            # the pessimistic redo reuses it (one-way flip + retry,
-            # ChangeLoader.java:283-290 "Chang to passimistic mode").
-            if self.optimistic and "duplicate key value" in str(exc):
-                self.optimistic = False
-                self._execute_transaction(spark, self.merge_statements(staging))
-            else:
-                raise
+        self._execute_transaction(batch_df.sparkSession, self.merge_statements(staging))
 
     def _execute_transaction(self, spark, statements: Sequence[str]) -> None:
         """Run the merge statements in one JDBC transaction via the
@@ -207,268 +179,3 @@ def get_primary_keys(
         return []
     finally:
         conn.close()
-
-
-# ---------------------------------------------------------------------------
-# PG COPY fast path (ChangeLoader.java:283-344 copyWorker/getCopySql,
-# :458-470 createTemporaryTable) behind the functions/native.py
-# import-try seam: psycopg2 when installed, JDBC-writer fallback
-# otherwise. The SQL/encoding builders are pure and unit-tested; this
-# container ships no psycopg2 and no Postgres, so the live path is
-# exercised through a recording fake (tests/test_sinks.py).
-# ---------------------------------------------------------------------------
-
-
-def copy_backend() -> str:
-    """'psycopg2' when the native driver is importable, else 'jdbc'
-    (same dispatch pattern as functions/native.py: a deploy flips the
-    fast path on by ``pip install psycopg2``, zero code changes)."""
-    try:
-        import psycopg2  # noqa: F401
-
-        return "psycopg2"
-    except ImportError:
-        return "jdbc"
-
-
-# psycopg2 connection kwargs that may legally pass through from the
-# sink's Spark-JDBC `properties` dict. Everything else (driver,
-# createTableColumnTypes, fetchsize, batchsize, isolationLevel, ...)
-# is JDBC-writer config psycopg2.connect would reject.
-_LIBPQ_KWARGS = frozenset(
-    {
-        "user",
-        "password",
-        "host",
-        "port",
-        "dbname",
-        "sslmode",
-        "sslrootcert",
-        "sslcert",
-        "sslkey",
-        "connect_timeout",
-        "application_name",
-        "options",
-    }
-)
-
-# JDBC-Postgres URL/property names → their libpq kwarg twins
-# (https://jdbc.postgresql.org/documentation/use/ — public docs).
-_JDBC_TO_LIBPQ = {
-    "connectTimeout": "connect_timeout",
-    "ApplicationName": "application_name",
-    "applicationName": "application_name",
-}
-
-
-def libpq_connect_kwargs(url: str, properties: dict | None = None) -> dict:
-    """Translate the sink's Spark-JDBC (url, properties) pair into
-    psycopg2.connect kwargs, so ONE config drives both the COPY fast
-    path and the JDBC fallback (r8 ADVICE: a working JDBC config uses
-    a ``jdbc:postgresql://host:port/db`` URL and JDBC-only properties
-    that psycopg2.connect rejects — passing them through verbatim
-    would fail at connect time on every real deployment).
-
-    Handles ``jdbc:postgresql://host[:port]/db[?k=v&...]``,
-    ``jdbc:postgresql:db`` (localhost shorthand), and plain libpq
-    URIs (``postgresql://...`` — psycopg2 takes them as dsn, only the
-    whitelisted property kwargs ride along). JDBC-only keys are
-    dropped; ``ssl=true`` maps to ``sslmode=require``; JDBC spellings
-    (connectTimeout, ApplicationName) map to their libpq names."""
-    from urllib.parse import parse_qsl, urlsplit
-
-    kwargs: dict = {}
-    raw = url.strip()
-    if raw.startswith("jdbc:"):
-        raw = raw[len("jdbc:"):]
-    if raw.startswith(("postgresql:", "postgres:")) and "//" not in raw:
-        # jdbc:postgresql:dbname — localhost shorthand
-        kwargs["dbname"] = raw.split(":", 1)[1].split("?", 1)[0]
-        query = raw.split("?", 1)[1] if "?" in raw else ""
-    elif raw.startswith(("postgresql://", "postgres://")):
-        parts = urlsplit(raw)
-        if parts.hostname:
-            kwargs["host"] = parts.hostname
-        if parts.port:
-            kwargs["port"] = parts.port
-        if parts.username:
-            kwargs["user"] = parts.username
-        if parts.password:
-            kwargs["password"] = parts.password
-        db = parts.path.lstrip("/")
-        if db:
-            kwargs["dbname"] = db
-        query = parts.query
-    else:
-        # not a recognizable postgres URL: hand it to psycopg2 as-is
-        # (libpq key=value DSNs land here) with whitelisted kwargs
-        kwargs["dsn"] = raw
-        query = ""
-
-    merged = dict(parse_qsl(query))
-    merged.update(properties or {})
-    for k, v in merged.items():
-        k = _JDBC_TO_LIBPQ.get(k, k)
-        if k == "ssl" and str(v).lower() in ("true", "1"):
-            kwargs.setdefault("sslmode", "require")
-        elif k in _LIBPQ_KWARGS:
-            kwargs[k] = v
-    return kwargs
-
-
-def copy_sql(table: str, columns: Sequence[str]) -> str:
-    """The reference's COPY statement, byte-for-byte
-    (``ChangeLoader.java:334-344`` getCopySql): pipe delimiter, empty
-    string as NULL, CSV quoting with backslash escape."""
-    cols = ",".join(columns)
-    return (
-        f"COPY {table} ({cols}) FROM STDIN "
-        "WITH DELIMITER '|' NULL '' CSV QUOTE '\"' ESCAPE E'\\\\';"
-    )
-
-
-def copy_encode_row(values: Sequence) -> str:
-    """One COPY CSV line under the reference's options (the
-    ``tupleWriter`` twin, ``ChangeLoader.java:311-316``):
-
-    - ``None`` → the empty unquoted field (NULL '');
-    - the empty STRING must be quoted ``""`` to stay distinct from
-      NULL;
-    - fields containing the delimiter, quote, escape, CR or LF are
-      quoted, with ``\\`` before quote/backslash (ESCAPE E'\\\\');
-    - everything else passes through verbatim (no float reformatting
-      — callers format values; bools map to Postgres t/f)."""
-    out = []
-    for v in values:
-        if v is None:
-            out.append("")
-            continue
-        if isinstance(v, bool):
-            out.append("t" if v else "f")
-            continue
-        s = str(v)
-        if s == "" or any(c in s for c in ('|', '"', "\\", "\n", "\r")):
-            s = '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"'
-        out.append(s)
-    return "|".join(out) + "\n"
-
-
-def temp_key_table_sql(target_table: str, key_cols: Sequence[str]) -> str:
-    """Session-temporary key table for the merge-delete
-    (``ChangeLoader.java:458-470`` createTemporaryTable — ON COMMIT
-    DELETE ROWS so retries inside one connection start clean). Keys
-    only: the staged shape is the key projection of the target, not
-    SELECT * — the delete never needs payload bytes."""
-    cols = ", ".join(_qident(k) for k in key_cols)
-    return (
-        f"CREATE TEMP TABLE {copy_temp_table_name(target_table)} "
-        f"ON COMMIT DELETE ROWS AS SELECT {cols} "
-        f"FROM {_qident(target_table)} LIMIT 0"
-    )
-
-
-def copy_temp_table_name(target_table: str) -> str:
-    """``getTemporaryTableName``: dots fold to underscores."""
-    return target_table.replace(".", "_") + "_keys"
-
-
-@dataclass
-class CopyMergeSink(JdbcMergeSink):
-    """DELETE+COPY merge through the native Postgres/Greenplum COPY
-    protocol — the reference's actual load path (one loader
-    connection per table, ``copyWorker`` streaming tuples through a
-    pipe), vs the base class's staging-table merge through Spark's
-    JDBC writer.
-
-    Per micro-batch, one psycopg2 transaction:
-
-    1. ``CREATE TEMP TABLE <target>_keys ON COMMIT DELETE ROWS`` —
-       the reference's temp table, keys-only;
-    2. COPY every batch key into it and ``DELETE FROM target WHERE
-       EXISTS`` (``executeDelete``/``deleteWorker``) — skipped in
-       optimistic mode, exactly the reference's optimisticMode:
-       insert-only workloads never pay the delete scan;
-    3. COPY the surviving (non-delete) payload rows straight into the
-       TARGET (no staging table on this path — ``executeInsert``);
-    4. on a duplicate-key failure in optimistic mode: rollback, flip
-       to pessimistic, redo delete+insert (``executeTask:274-289``
-       "Chang to passimistic mode"), and STAY pessimistic for later
-       batches (the reference flips the flag once).
-
-    The batch streams through the driver connection exactly like the
-    reference's single loader thread — appropriate because the input
-    is the COMPACTED changelog (one row per key per batch), not raw
-    events. The Spark-parallel alternative stays available as the
-    base class. Falls back to the base class automatically when
-    psycopg2 is absent (``copy_backend() == 'jdbc'``), which keeps
-    Derby/test deployments working unchanged (``optimistic`` and its
-    one-way flip are inherited — both paths share the semantics)."""
-
-    def copy_statements(self) -> dict:
-        """The pure plan (testable without a DB): statement strings
-        keyed by step."""
-        keys_tbl = copy_temp_table_name(self.target_table)
-        payload = list(self.payload_cols)
-        return {
-            "create_keys": temp_key_table_sql(self.target_table, self.key_cols),
-            "copy_keys": copy_sql(keys_tbl, [str(k) for k in self.key_cols]),
-            "delete": delete_sql(self.target_table, keys_tbl, self.key_cols),
-            "copy_target": copy_sql(self.target_table, payload),
-        }
-
-    def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        if copy_backend() != "psycopg2":
-            # Derby-safe / driverless fallback: the staging-table
-            # merge via Spark's JDBC writer (same semantics).
-            JdbcMergeSink.__call__(self, batch_df, batch_id)
-            return
-        if batch_df.isEmpty():
-            return
-        import io
-
-        import psycopg2
-
-        plan = self.copy_statements()
-        key_cols = list(self.key_cols)
-        payload = list(self.payload_cols)
-        cols = list(dict.fromkeys([*key_cols, *payload, self.op_col]))
-        rows = [r.asDict() for r in batch_df.select(*cols).toLocalIterator()]
-        keys_buf = io.StringIO()
-        ins_buf = io.StringIO()
-        for r in rows:
-            keys_buf.write(copy_encode_row([r[k] for k in key_cols]))
-            if r[self.op_col] != "D":
-                ins_buf.write(copy_encode_row([r[c] for c in payload]))
-        # the SAME url/properties drive the JDBC fallback, so they
-        # arrive in Spark-JDBC shape — translate before connecting
-        dsn_kwargs = libpq_connect_kwargs(self.url, self.properties)
-        conn = psycopg2.connect(dsn_kwargs.pop("dsn", None), **dsn_kwargs)
-        try:
-            conn.autocommit = False
-            cur = conn.cursor()
-            try:
-                if not self.optimistic:
-                    self._delete_phase(cur, plan, keys_buf)
-                ins_buf.seek(0)
-                cur.copy_expert(plan["copy_target"], ins_buf)
-                conn.commit()
-            except Exception as exc:
-                conn.rollback()
-                if self.optimistic and "duplicate key value" in str(exc):
-                    # the reference's one-way optimistic→pessimistic flip
-                    self.optimistic = False
-                    cur = conn.cursor()
-                    self._delete_phase(cur, plan, keys_buf)
-                    ins_buf.seek(0)
-                    cur.copy_expert(plan["copy_target"], ins_buf)
-                    conn.commit()
-                else:
-                    raise
-        finally:
-            conn.close()
-
-    def _delete_phase(self, cur, plan: dict, keys_buf) -> None:
-        cur.execute(plan["create_keys"])
-        keys_buf.seek(0)
-        cur.copy_expert(plan["copy_keys"], keys_buf)
-        cur.execute(plan["delete"])

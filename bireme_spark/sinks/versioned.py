@@ -65,10 +65,12 @@ def _dir_ints(parent: str, prefix: str) -> list[int]:
     return sorted(int(n) for n in ns if n.isdigit())
 
 
-def bucket_col(key_col, num_buckets: int):
+def bucket_col(key, num_buckets: int):
     """PK-hash bucket: hash the STRING form of the key so base rows
-    (typed PK) and changelog rows (concatenated string key) agree."""
-    return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(num_buckets)).cast("int")
+    (typed PK) and changelog rows (concatenated string key) agree.
+    ``key`` is a column name or a Column."""
+    key = F.col(key) if isinstance(key, str) else key
+    return F.pmod(F.xxhash64(key.cast("string")), F.lit(num_buckets)).cast("int")
 
 
 class Snapshot(NamedTuple):

@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from bireme_spark.operators.cdc import key_string
+
 
 def debezium_envelope_schema(data_schema: StructType) -> StructType:
     payload = (
@@ -52,7 +54,7 @@ def _parser(
     data: Column = decode(
         F.when(op_raw == "d", F.col("_env.payload.before")).otherwise(F.col("_env.payload.after"))
     )
-    key = F.concat_ws("", *[F.col(f"_data.{k}").cast("string") for k in key_fields])
+    key = key_string([F.col(f"_data.{k}") for k in key_fields])
     change_cols = [
         F.lit(source).alias("source"),
         F.lit(source).alias("origin_table"),

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from bireme_spark.operators.cdc import key_string
+
 OP_MAP = {"insert": "I", "update": "U", "delete": "D"}
 
 
@@ -58,7 +60,7 @@ def maxwell_parser(
     env = F.from_json(F.col(json_col), maxwell_envelope_schema(data_schema))
 
     def key_of(struct_col: str) -> Column:
-        return F.concat_ws("", *[F.col(f"{struct_col}.{k}").cast("string") for k in key_fields])
+        return key_string([F.col(f"{struct_col}.{k}") for k in key_fields])
 
     # Maxwell's `old` holds only changed fields; a PK field present in
     # `old` means the PK changed — old key = old PK value, other key
@@ -80,7 +82,7 @@ def maxwell_parser(
         _op_col(F.col("_env.type")).alias("op"),
         (F.col("_env.ts") * 1000).alias("produce_time_ms"),
         key_of("_env.data").alias("key"),
-        F.when((F.col("_env.type") == "update") & pk_changed, F.concat_ws("", *old_key_parts))
+        F.when((F.col("_env.type") == "update") & pk_changed, key_string(old_key_parts))
         .otherwise(F.lit(None).cast("string"))
         .alias("old_key"),
         F.col("_env.xid").alias("xid"),

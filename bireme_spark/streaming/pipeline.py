@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bireme_spark.config import PipelineConfig, SourceConfig
-from bireme_spark.operators.cdc import apply_changes, compact, scd2
+from bireme_spark.operators.cdc import KEY_SEP, apply_changes, compact, key_string, scd2
 from bireme_spark.sinks import versioned
 from bireme_spark.sinks.versioned import bucket_col
 from bireme_spark.sinks.versioned import read_state  # noqa: F401 (pl.read_state stays public)
@@ -257,25 +257,31 @@ def _merge_compacted_versioned(
 ) -> None:
     """Merge one table's compacted batch into its bucket-versioned
     parquet state: one fold, one pass over the changed buckets' base,
-    one file per bucket version, one atomic manifest commit."""
+    one file per bucket version, one atomic manifest commit.
+
+    The first ``len(key_fields)`` base columns are the key. The batch
+    carries it as the joined ``key`` string (``KEY_SEP`` between the
+    parts), and ``_sb`` hashes that same string on both sides. A
+    one-column key joins the typed base column to ``key`` directly; a
+    composite key is split back into its typed parts first."""
     types = {f.name: f.dataType.simpleString() for f in data_schema.fields}
     # key column of the base table keeps the parsed-string key type
     ddl = ", ".join(f"{c} {types.get(c, 'string')}" for c in base_columns)
+    keys = tuple(base_columns[: len(key_fields)])
+    payload_map = {c: c for c in base_columns[len(keys) :]}
+    if len(keys) == 1:
+        batch_keys, sb = ("key",), bucket_col(keys[0], nb)
+    else:
+        batch_keys, sb = keys, bucket_col(key_string([F.col(k) for k in keys]), nb)
 
     def merge(base: DataFrame, compacted: DataFrame) -> DataFrame:
-        return apply_changes(
-            base,
-            compacted,
-            base_key_cols=(base_columns[0],),
-            compact_key_cols=("key",),
-            payload_map={c: c for c in base_columns[1:]},
-            # pessimistic ALWAYS: a foreachBatch retry after a partial
-            # bucket write re-applies the same batch against state that
-            # already contains its inserts — only the unconditional
-            # anti-join keeps that idempotent (parquet has no PK
-            # constraint to catch a wrong optimistic guess).
-            mode="pessimistic",
-        ).withColumn("_sb", bucket_col(base_columns[0], nb))
+        if len(keys) > 1:
+            parts = F.split(F.col("key"), KEY_SEP)
+            compacted = compacted.select(
+                "*",
+                *[parts[i].cast(base.schema[k].dataType).alias(k) for i, k in enumerate(keys)],
+            )
+        return apply_changes(base, compacted, keys, batch_keys, payload_map).withColumn("_sb", sb)
 
     _merge_changed(bspark, target_dir, compacted, nb, batch_id, ddl, merge)
 

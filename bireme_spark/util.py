@@ -1,9 +1,10 @@
 """Small shared helpers for the bench/gate harnesses.
 
 ``drop_persisted_blocks`` is the one hygiene hook every timing
-harness (bench.py, scripts/driver_sim.py, scripts/ab_code.py) calls
-between timed runs; it was copy-pasted three times before r11
-(ADVICE r10).
+harness (bench.py, scripts/driver_sim.py, scripts/ab_code.py,
+scripts/ab_op.py, scripts/ab_conf.py, scripts/floor_measure.py,
+scripts/profile_bench.py) calls between timed runs; it was
+copy-pasted three times before r11.
 """
 
 from __future__ import annotations

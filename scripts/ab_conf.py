@@ -51,6 +51,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from bireme_spark import registry
     from bireme_spark.session import get_spark
+    from bireme_spark.util import drop_persisted_blocks
 
     spark = get_spark("ab-conf")
     spark.sparkContext.setLogLevel("ERROR")
@@ -63,6 +64,7 @@ def main() -> int:
             spark.conf.set(conf, val)
             for name in names:
                 spark.catalog.clearCache()
+                drop_persisted_blocks(spark)
                 t0 = time.perf_counter()
                 qs[name](spark, sf_dir).count()
                 walls.setdefault((name, arm), []).append(time.perf_counter() - t0)

@@ -25,6 +25,7 @@ def main() -> int:
 
     from bireme_spark import registry
     from bireme_spark.session import get_spark
+    from bireme_spark.util import drop_persisted_blocks
 
     spark = get_spark("floor-measure")
     spark.sparkContext.setLogLevel("ERROR")
@@ -41,6 +42,7 @@ def main() -> int:
     for p in range(passes):
         for name in names:
             spark.catalog.clearCache()
+            drop_persisted_blocks(spark)
             t0 = time.perf_counter()
             qs[name](spark, sf_dir).count()
             dt = time.perf_counter() - t0

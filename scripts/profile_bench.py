@@ -42,6 +42,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from bireme_spark import registry
     from bireme_spark.session import get_spark
+    from bireme_spark.util import drop_persisted_blocks
 
     spark = get_spark("profiler")
     spark.sparkContext.setLogLevel("ERROR")
@@ -55,6 +56,7 @@ def main() -> int:
     for rep in range(reps):
         for name in names:
             spark.catalog.clearCache()
+            drop_persisted_blocks(spark)
             group = f"prof-{name}-{rep}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()

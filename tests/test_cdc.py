@@ -86,36 +86,19 @@ class TestApply:
         }
         assert out == {1: "a", 2: "b2", 9: "i"}
 
-    def test_pure_insert_batch_skips_anti_join(self, spark):
-        """ChangeLoader.java:212-222 optimistic mode: a batch with no
-        deletes and no updates (all in_delete false) must skip the
-        DELETE phase — the plan contains NO anti-join — and the result
-        is base ∪ inserts."""
-        base = self._base(spark)
-        ch = _changes(spark, [("9", "I", 1, 1, "i"), ("10", "I", 1, 2, "j")])
-        c = compact(ch, ("key",), ("produce_time_ms", "seq"), payload_cols=("val",))
-        out = apply_changes(base, c, ("id",), ("key",))
-        plan = out._jdf.queryExecution().toString()
-        assert "LeftAnti" not in plan and "left_anti" not in plan.lower()
-        got = sorted((r.id, r.val) for r in out.collect())
-        assert got == [(1, "a"), (2, "b"), (3, "c"), (9, "i"), (10, "j")]
-
     def test_mixed_batch_keeps_anti_join_and_result(self, spark):
-        """A batch with any delete/update stays pessimistic: the
-        anti-join is in the plan and auto ≡ forced-pessimistic."""
+        """Every merge deletes the batch's keys first: the anti-join is
+        in the plan, and updates and deletes land."""
         base = self._base(spark)
         ch = _changes(
             spark,
             [("2", "U", 1, 1, "b2"), ("3", "D", 1, 2, None), ("9", "I", 1, 3, "i")],
         )
         c = compact(ch, ("key",), ("produce_time_ms", "seq"), payload_cols=("val",))
-        auto = apply_changes(base, c, ("id",), ("key",))
-        plan = auto._jdf.queryExecution().toString()
+        out = apply_changes(base, c, ("id",), ("key",))
+        plan = out._jdf.queryExecution().toString()
         assert "LeftAnti" in plan or "left_anti" in plan.lower()
-        pess = apply_changes(base, c, ("id",), ("key",), mode="pessimistic")
-        assert sorted((r.id, r.val) for r in auto.collect()) == sorted(
-            (r.id, r.val) for r in pess.collect()
-        )
+        assert sorted((r.id, r.val) for r in out.collect()) == [(1, "a"), (2, "b2"), (9, "i")]
 
     def test_apply_idempotent(self, spark):
         # Re-applying the same compacted batch yields the same state
@@ -130,16 +113,15 @@ class TestApply:
         )
 
     def test_pure_insert_reapply_idempotent_only_pessimistic(self, spark):
-        """The retry contract the streaming pipeline relies on: for a
-        PURE-INSERT batch, only pessimistic mode keeps re-apply
-        idempotent (auto's optimistic skip assumes fresh keys, so the
-        pipeline — which can re-run a batch after a partial sink
-        write — always passes mode='pessimistic')."""
+        """The retry contract the streaming pipeline relies on: a
+        PURE-INSERT batch re-applied (a batch re-run after a partial
+        sink write) still lands once, because the merge deletes its
+        keys before appending — it never assumes insert keys are new."""
         base = self._base(spark)
         ch = _changes(spark, [("9", "I", 1, 1, "i")])
         c = compact(ch, ("key",), ("produce_time_ms", "seq"), payload_cols=("val",))
-        once = apply_changes(base, c, ("id",), ("key",), mode="pessimistic")
-        twice = apply_changes(once, c, ("id",), ("key",), mode="pessimistic")
+        once = apply_changes(base, c, ("id",), ("key",))
+        twice = apply_changes(once, c, ("id",), ("key",))
         assert sorted((r.id, r.val) for r in twice.collect()) == sorted(
             (r.id, r.val) for r in once.collect()
         )

@@ -152,15 +152,12 @@ def test_merge_transaction_rolls_back_on_error(spark):
     assert rows == {"1": 10.0, "2": 20.0}, "DELETE must have been rolled back"
 
 
-def test_optimistic_flip_on_live_derby_duplicate_key(spark):
-    """VERDICT r9 item 5 — the one-way optimistic→pessimistic flip
-    driven through a REAL constraint violation (ChangeLoader.java:
-    212-222 optimisticMode, 283-290 "Chang to passimistic mode"), not
-    the recording fake: an optimistic (delete-skipping) merge hits a
-    live Derby PK violation mid-transaction, rolls back, flips, and
-    the pessimistic redo lands the batch; the sink STAYS pessimistic,
-    and re-applying the same batch is idempotent."""
-    url = "jdbc:derby:memory:flipdb;create=true"
+def test_replayed_batch_lands_once_on_live_derby(spark):
+    """foreachBatch retry semantics against a live PK-constrained
+    target: the same batch applied twice — its update and its insert
+    already present the second time — lands once, because every
+    staged key is deleted before the insert set is copied."""
+    url = "jdbc:derby:memory:replaydb;create=true"
     _derby_exec(
         spark,
         url,
@@ -176,35 +173,11 @@ def test_optimistic_flip_on_live_derby_duplicate_key(spark):
         key_cols=("key",),
         payload_cols=("key", "price"),
         properties={"createTableColumnTypes": "key VARCHAR(64), op VARCHAR(1)"},
-        optimistic=True,
     )
-    sink(batch, batch_id=7)  # key '2' pre-exists → PK violation → flip + redo
-    assert sink.optimistic is False, "flip must be one-way and persistent"
-    rows = dict(_derby_rows(spark, url, 'SELECT "key", "price" FROM "target"'))
-    assert rows == {"1": 10.0, "2": 21.0, "3": 30.0}
-
-    # retry idempotency: the SAME batch re-applies (foreachBatch retry
-    # semantics) against state that already contains its inserts
-    sink(batch, batch_id=8)
-    assert sink.optimistic is False
-    rows = dict(_derby_rows(spark, url, 'SELECT "key", "price" FROM "target"'))
-    assert rows == {"1": 10.0, "2": 21.0, "3": 30.0}
-
-
-def test_optimistic_merge_skips_delete_statement():
-    """Pure plan: optimistic mode has no DELETE phase; pessimistic
-    (default) keeps it — the statement lists the live test drives."""
-    sink = JdbcMergeSink(
-        url="jdbc:derby:memory:plan",
-        target_table="target",
-        key_cols=("key",),
-        payload_cols=("key", "price"),
-    )
-    opt = sink.merge_statements("stage_1", optimistic=True)
-    pess = sink.merge_statements("stage_1")
-    assert not any(s.startswith("DELETE") for s in opt)
-    assert any(s.startswith("DELETE") for s in pess)
-    assert len(pess) == len(opt) + 1
+    for batch_id in (7, 8):
+        sink(batch, batch_id=batch_id)
+        rows = dict(_derby_rows(spark, url, 'SELECT "key", "price" FROM "target"'))
+        assert rows == {"1": 10.0, "2": 21.0, "3": 30.0}
 
 
 def test_get_primary_keys_discovery(spark):
@@ -510,266 +483,3 @@ def test_shallow_clone_refuses_dirty_destination(spark, tmp_path):
     shallow_clone(origin, clone)
     with pytest.raises(OSError):
         shallow_clone(origin, clone)
-
-
-# --- PG COPY fast path (ChangeLoader.java:283-344, :458-470) ---
-
-
-def test_copy_sql_matches_reference_shape():
-    """getCopySql byte-shape: pipe delimiter, NULL '', CSV quote,
-    backslash escape (ChangeLoader.java:334-344)."""
-    from bireme_spark.sinks.jdbc import copy_sql
-
-    assert copy_sql("public.orders", ["o_orderkey", "o_totalprice"]) == (
-        "COPY public.orders (o_orderkey,o_totalprice) FROM STDIN "
-        "WITH DELIMITER '|' NULL '' CSV QUOTE '\"' ESCAPE E'\\\\';"
-    )
-
-
-def test_copy_encode_row_null_empty_and_escapes():
-    from bireme_spark.sinks.jdbc import copy_encode_row
-
-    # NULL is the bare empty field; the empty STRING is quoted
-    assert copy_encode_row([None, ""]) == '|""\n'
-    # delimiter / quote / backslash / newline force quoting with
-    # backslash escape; booleans map to t/f; numbers pass through
-    assert copy_encode_row(["a|b", 'q"z', "b\\s", "n\nl", 7, True, False]) == (
-        '"a|b"|"q\\"z"|"b\\\\s"|"n\nl"|7|t|f\n'
-    )
-
-
-def test_copy_temp_table_sql_mirrors_reference():
-    """createTemporaryTable (ChangeLoader.java:458-470): TEMP + ON
-    COMMIT DELETE ROWS + LIMIT 0 of the target's key projection."""
-    from bireme_spark.sinks.jdbc import copy_temp_table_name, temp_key_table_sql
-
-    assert copy_temp_table_name("public.orders") == "public_orders_keys"
-    sql = temp_key_table_sql("public.orders", ("o_orderkey",))
-    assert sql == (
-        'CREATE TEMP TABLE public_orders_keys ON COMMIT DELETE ROWS '
-        'AS SELECT "o_orderkey" FROM "public"."orders" LIMIT 0'
-    )
-
-
-def test_copy_sink_falls_back_to_jdbc_writer_without_psycopg2(spark):
-    """No psycopg2 in this container: CopyMergeSink must degrade to
-    the staging-table merge (Derby-safe) with identical semantics."""
-    from bireme_spark.sinks.jdbc import CopyMergeSink, copy_backend
-
-    assert copy_backend() == "jdbc"
-    url = "jdbc:derby:memory:copyfallback;create=true"
-    _derby_exec(
-        spark,
-        url,
-        'CREATE TABLE "target" ("key" INT PRIMARY KEY, "price" DOUBLE)',
-        'INSERT INTO "target" VALUES (1, 1.0), (2, 2.0)',
-    )
-    sink = CopyMergeSink(
-        url=url,
-        target_table="target",
-        key_cols=("key",),
-        payload_cols=("key", "price"),
-        # Derby can't compare CLOBs (Spark's default Derby mapping for
-        # strings) — type the staged op column explicitly
-        properties={"createTableColumnTypes": "op VARCHAR(1)"},
-    )
-    batch = spark.createDataFrame(
-        [(1, 10.0, "U"), (2, 0.0, "D"), (3, 3.0, "I")], "key int, price double, op string"
-    )
-    sink(batch, batch_id=7)
-    rows = dict(_derby_rows(spark, url, 'SELECT "key", "price" FROM "target"'))
-    assert rows == {1: 10.0, 3: 3.0}
-
-
-class _FakeCursor:
-    def __init__(self, log, fail_copy_target_once=None):
-        self._log = log
-        self._fail = fail_copy_target_once
-
-    def execute(self, sql):
-        self._log.append(("execute", sql))
-
-    def copy_expert(self, sql, buf):
-        self._log.append(("copy", sql, buf.read()))
-        if self._fail and sql == self._fail["sql"] and not self._fail["done"]:
-            self._fail["done"] = True
-            raise RuntimeError(
-                'duplicate key value violates unique constraint "target_pkey"'
-            )
-
-
-class _FakeConn:
-    def __init__(self, log, fail=None):
-        self._log = log
-        self._fail = fail
-        self.autocommit = True
-
-    def cursor(self):
-        return _FakeCursor(self._log, self._fail)
-
-    def commit(self):
-        self._log.append(("commit",))
-
-    def rollback(self):
-        self._log.append(("rollback",))
-
-    def close(self):
-        self._log.append(("close",))
-
-
-def _install_fake_psycopg2(monkeypatch, log, fail=None):
-    import sys
-    import types
-
-    fake = types.ModuleType("psycopg2")
-    fake.connect = lambda url, **kw: _FakeConn(log, fail)
-    monkeypatch.setitem(sys.modules, "psycopg2", fake)
-
-
-def test_copy_sink_pessimistic_transaction_order(spark, monkeypatch):
-    """With the native driver present (fake), the pessimistic merge
-    runs the reference order inside ONE transaction: temp key table →
-    COPY keys → DELETE WHERE EXISTS → COPY payload into TARGET →
-    commit. Delete keys include 'D' rows; the payload COPY excludes
-    them; no staging table anywhere on this path."""
-    from bireme_spark.sinks.jdbc import CopyMergeSink
-
-    log = []
-    _install_fake_psycopg2(monkeypatch, log)
-    sink = CopyMergeSink(
-        url="postgresql://wh/db",
-        target_table="public.orders",
-        key_cols=("key",),
-        payload_cols=("key", "price"),
-    )
-    batch = spark.createDataFrame(
-        [(1, 10.0, "U"), (2, 0.0, "D"), (3, 3.0, "I")], "key int, price double, op string"
-    )
-    sink(batch, batch_id=1)
-    kinds = [e[0] for e in log]
-    assert kinds == ["execute", "copy", "execute", "copy", "commit", "close"]
-    assert "CREATE TEMP TABLE public_orders_keys" in log[0][1]
-    assert log[1][1].startswith("COPY public_orders_keys (key)")
-    assert sorted(log[1][2].splitlines()) == ["1", "2", "3"]  # D keys staged too
-    assert log[2][1].startswith('DELETE FROM "public"."orders" WHERE EXISTS')
-    assert log[3][1].startswith("COPY public.orders (key,price)")
-    assert sorted(log[3][2].splitlines()) == ["1|10.0", "3|3.0"]  # D row excluded
-
-
-def test_copy_sink_optimistic_flips_pessimistic_on_duplicate(spark, monkeypatch):
-    """executeTask:274-289: optimistic COPY hits a duplicate key →
-    rollback, delete+insert redo, and the sink STAYS pessimistic."""
-    from bireme_spark.sinks.jdbc import CopyMergeSink, copy_sql
-
-    log = []
-    fail = {"sql": copy_sql("public.orders", ["key", "price"]), "done": False}
-    _install_fake_psycopg2(monkeypatch, log, fail)
-    sink = CopyMergeSink(
-        url="postgresql://wh/db",
-        target_table="public.orders",
-        key_cols=("key",),
-        payload_cols=("key", "price"),
-        optimistic=True,
-    )
-    batch = spark.createDataFrame([(1, 10.0, "U")], "key int, price double, op string")
-    sink(batch, batch_id=1)
-    kinds = [e[0] for e in log]
-    # optimistic: straight COPY (no delete) → fails → rollback →
-    # pessimistic redo: create/copy keys, delete, copy, commit
-    assert kinds == [
-        "copy", "rollback", "execute", "copy", "execute", "copy", "commit", "close",
-    ]
-    assert sink.optimistic is False  # one-way flip, like the reference
-
-
-# --- JDBC url/properties → libpq translation (r9, ADVICE r8) ---------------
-# The COPY fast path and the Spark-JDBC fallback share ONE (url,
-# properties) config; psycopg2.connect must receive libpq shape, not
-# JDBC shape.
-
-
-def test_libpq_translation_jdbc_url_and_jdbc_properties():
-    from bireme_spark.sinks.jdbc import libpq_connect_kwargs
-
-    kw = libpq_connect_kwargs(
-        "jdbc:postgresql://wh.example:6432/analytics?ssl=true&connectTimeout=10",
-        {
-            "user": "loader",
-            "password": "s3cret",
-            # JDBC-only keys a real fallback config carries — all of
-            # which psycopg2.connect rejects if passed through:
-            "driver": "org.postgresql.Driver",
-            "createTableColumnTypes": "key BIGINT",
-            "fetchsize": "1000",
-            "batchsize": "5000",
-            "isolationLevel": "READ_COMMITTED",
-        },
-    )
-    assert kw == {
-        "host": "wh.example",
-        "port": 6432,
-        "dbname": "analytics",
-        "sslmode": "require",
-        "connect_timeout": "10",
-        "user": "loader",
-        "password": "s3cret",
-    }
-
-
-def test_libpq_translation_shorthand_and_plain_uri():
-    from bireme_spark.sinks.jdbc import libpq_connect_kwargs
-
-    # jdbc:postgresql:dbname — localhost shorthand
-    assert libpq_connect_kwargs("jdbc:postgresql:wh") == {"dbname": "wh"}
-    # plain libpq URI: credentials parsed out, JDBC keys dropped
-    kw = libpq_connect_kwargs(
-        "postgresql://u:p@h:5433/d?application_name=bireme",
-        {"driver": "org.postgresql.Driver", "sslmode": "verify-full"},
-    )
-    assert kw == {
-        "host": "h",
-        "port": 5433,
-        "user": "u",
-        "password": "p",
-        "dbname": "d",
-        "application_name": "bireme",
-        "sslmode": "verify-full",
-    }
-    # key=value DSN passes through as dsn; whitelisted props ride along
-    kw = libpq_connect_kwargs("host=h dbname=d", {"user": "u", "fetchsize": "9"})
-    assert kw == {"dsn": "host=h dbname=d", "user": "u"}
-
-
-def test_copy_sink_connects_with_translated_kwargs(spark, monkeypatch):
-    """End-to-end through the sink: a JDBC-shaped config must reach
-    psycopg2.connect in libpq shape (host/dbname kwargs, JDBC-only
-    properties stripped)."""
-    import sys
-    import types
-
-    from bireme_spark.sinks.jdbc import CopyMergeSink
-
-    log = []
-    seen = {}
-
-    fake = types.ModuleType("psycopg2")
-
-    def connect(dsn=None, **kw):
-        seen["dsn"] = dsn
-        seen["kwargs"] = kw
-        return _FakeConn(log)
-
-    fake.connect = connect
-    monkeypatch.setitem(sys.modules, "psycopg2", fake)
-    sink = CopyMergeSink(
-        url="jdbc:postgresql://wh/db",
-        target_table="public.orders",
-        key_cols=("key",),
-        payload_cols=("key", "price"),
-        properties={"user": "u", "driver": "org.postgresql.Driver"},
-    )
-    batch = spark.createDataFrame([(1, 1.0, "I")], "key int, price double, op string")
-    sink(batch, batch_id=1)
-    assert seen["dsn"] is None
-    assert seen["kwargs"] == {"host": "wh", "dbname": "db", "user": "u"}
-    assert log[-2:] == [("commit",), ("close",)]

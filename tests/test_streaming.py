@@ -144,6 +144,62 @@ def test_incremental_sink_rewrites_only_changed_buckets(spark, two_batch_sink):
     assert state == {(k, float(k) + (0.5 if k in upd else 0.0)) for k in keys}
 
 
+def test_composite_key_sync_keeps_parts_apart(spark, tmp_path):
+    """A two-column primary key (a, b) syncs into base columns
+    (a, b, v): keys whose parts would run together without a separator
+    — (1, 12) and (11, 2) — stay two rows, an update replaces its row,
+    and a delete removes only its own key."""
+    import json
+    import os
+
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.sinks.versioned import read_state
+    from bireme_spark.streaming.pipeline import run_cdc_pipeline
+    from bireme_spark.streaming.replay import stamp_batch_mtime
+
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+
+    def envelope(a, b, v, op, ts):
+        return json.dumps(
+            {"database": "db", "table": "t", "type": op, "ts": ts,
+             "data": {"a": a, "b": b, "v": v}}
+        )
+
+    seen: set[str] = set()
+    batch1 = [(1, 12, 1.0), (11, 2, 2.0), (1, 2, 3.0), (2, 1, 4.0), (3, 4, 5.0)]
+    with open(f"{src}/b1.json", "w") as f:
+        f.write("\n".join(envelope(a, b, v, "insert", 1000) for a, b, v in batch1))
+    stamp_batch_mtime(src, 0, seen)
+    with open(f"{src}/b2.json", "w") as f:
+        f.write(
+            "\n".join(
+                [envelope(1, 12, 10.0, "update", 2000), envelope(2, 1, 4.0, "delete", 2000)]
+            )
+        )
+    stamp_batch_mtime(src, 1, seen)
+
+    cfg = PipelineConfig(
+        sources=[SourceConfig(name="maxwell", kind="file", path=src)],
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_events_per_trigger=1,
+        num_buckets=4,
+    )
+    schema = StructType().add("a", "long").add("b", "long").add("v", "double")
+    q = run_cdc_pipeline(
+        spark, cfg, schema, key_fields=("a", "b"), base_columns=("a", "b", "v"),
+        available_now=True,
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    rows = [(r.a, r.b, r.v) for r in read_state(spark, cfg.target_dir).collect()]
+    assert sorted(rows) == [(1, 2, 3.0), (1, 12, 10.0), (3, 4, 5.0), (11, 2, 2.0)]
+
+
 def _data_files(version_dir: str) -> list[str]:
     import os
 
