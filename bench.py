@@ -429,7 +429,21 @@ HEADLINE = [
 ]
 
 
-from bireme_spark.util import drop_persisted_blocks as _drop_rdd_blocks  # noqa: E402
+from bireme_spark.util import timed_run  # noqa: E402
+
+# Soft wall budget: once the harness itself has been running this
+# long (external load, slower box), degrade to min-of-1 with no
+# retries so the run COMPLETES and prints its JSON — a completed
+# noisy measurement beats a timeout with none (BENCH_r10 rc 124).
+SOFT_BUDGET_S = 1200.0
+# Global retry budget: floors are SINGLE-query quiet-session mins,
+# and a 401-query marathon session runs ~2x above them (JVM/GC
+# state — measured r11 open, load ~0; the old per-query retry
+# policy of up to +4 reps then multiplied the whole wall by ~5
+# and is what actually blew the r10 driver budget, not the query
+# costs). A bounded pool keeps retries for the few genuinely
+# flagged queries without letting them own the wall.
+RETRY_POOL = 60
 
 
 def _baseline_floors() -> dict[str, float]:
@@ -551,31 +565,16 @@ def main() -> int:
     # quiet-box mins, so a run that already lands within 30% of its
     # floor cannot improve meaningfully — stop repeating it; queries
     # with no floor yet (or at non-32-core counts, where floors don't
-    # apply) keep the old min-of-3. SPARK_GRAFT_BENCH_REPEATS forces a
-    # fixed repeat count for floor-measurement sessions.
-    forced = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "0"))
+    # apply) keep the old min-of-3. Floor sessions use
+    # scripts/measure.py, not this harness.
     floors_apply = int(cpus) == 32
-    # Soft wall budget: once the harness itself has been running this
-    # long (external load, slower box), degrade to min-of-1 with no
-    # retries so the run COMPLETES and prints its JSON — a completed
-    # noisy measurement beats a timeout with none (BENCH_r10 rc 124).
-    soft_budget = float(os.environ.get("SPARK_GRAFT_BENCH_SOFT_BUDGET_SEC", "1200"))
-    # Global retry budget: floors are SINGLE-query quiet-session mins,
-    # and a 401-query marathon session runs ~2x above them (JVM/GC
-    # state — measured r11 open, load ~0; the old per-query retry
-    # policy of up to +4 reps then multiplied the whole wall by ~5
-    # and is what actually blew the r10 driver budget, not the query
-    # costs). A bounded pool keeps retries for the few genuinely
-    # flagged queries without letting them own the wall.
-    retry_pool = int(os.environ.get("SPARK_GRAFT_BENCH_RETRY_POOL", "60"))
+    retry_pool = RETRY_POOL
     t_start = time.perf_counter()
     for name in HEADLINE:
         fn = qs[name]
-        over_budget = time.perf_counter() - t_start > soft_budget
+        over_budget = time.perf_counter() - t_start > SOFT_BUDGET_S
         floor = floors.get(name) if floors_apply else None
-        if forced:
-            reps = forced
-        elif over_budget:
+        if over_budget:
             reps = 1
         elif floor is None:
             reps = 3
@@ -587,17 +586,9 @@ def main() -> int:
         best = None
         n = -1
         for _ in range(reps):
-            # Drop persisted intermediates so each run is isolated (no
-            # cross-run cache hits, no executor-memory pressure from
-            # stale blocks).
-            spark.catalog.clearCache()
-            _drop_rdd_blocks(spark)
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            dt = time.perf_counter() - t0
+            dt, n, _, _ = timed_run(spark, fn, sf_dir)
             best = dt if best is None else min(best, dt)
-            if not forced and floor is not None and best <= 1.3 * floor:
+            if floor is not None and best <= 1.3 * floor:
                 break  # already at the quiet-box floor; a repeat is noise
         # min over repeats: the box is shared, so single runs carry
         # multi-second external noise; the min is the real cost.
@@ -613,11 +604,7 @@ def main() -> int:
             and extra < max_extra
             and retry_pool > 0
         ):
-            spark.catalog.clearCache()
-            _drop_rdd_blocks(spark)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
+            best = min(best, timed_run(spark, fn, sf_dir)[0])
             extra += 1
             retry_pool -= 1
         timings[name] = round(best, 3)

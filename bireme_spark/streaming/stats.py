@@ -42,6 +42,7 @@ class PipelineStatListener(StreamingQueryListener):
             st["total_rows"] += p.numInputRows
             st["last_rows_per_sec"] = p.processedRowsPerSecond or 0.0
             st["last_batch_ms"] = (p.durationMs or {}).get("triggerExecution", 0)
+            st["latest"] = p.timestamp
             st["status"] = "running"
 
     def onQueryTerminated(self, event) -> None:

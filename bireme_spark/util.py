@@ -1,15 +1,17 @@
 """Small shared helpers for the bench/gate harnesses.
 
-``drop_persisted_blocks`` is the one hygiene hook every timing
-harness (bench.py, scripts/driver_sim.py, scripts/ab_code.py,
-scripts/ab_op.py, scripts/ab_conf.py, scripts/floor_measure.py,
-scripts/profile_bench.py) calls between timed runs; it was
-copy-pasted three times before r11.
+``timed_run`` is the one timed query run: bench.py and
+scripts/measure.py clock through it. ``drop_persisted_blocks`` is the
+hygiene hook it (and scripts/driver_sim.py) calls between runs.
 """
 
 from __future__ import annotations
 
 import gc
+import itertools
+import time
+
+_groups = itertools.count()
 
 
 def drop_persisted_blocks(spark) -> None:
@@ -34,3 +36,22 @@ def drop_persisted_blocks(spark) -> None:
         jsc.getPersistentRDDs()
     ).values():
         rdd.unpersist(False)
+
+
+def timed_run(spark, fn, sf_dir: str):
+    """Clock ``fn(spark, sf_dir).count()`` on a clean executor.
+
+    Clears SQL-cached relations and persisted blocks, tags the run's
+    jobs with a fresh job group, and returns ``(wall_s, rows, jobs,
+    df)``; ``jobs`` counts what the statusTracker saw in that group.
+    """
+    spark.catalog.clearCache()
+    drop_persisted_blocks(spark)
+    sc = spark.sparkContext
+    group = f"timed-run-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    rows = df.count()
+    wall = time.perf_counter() - t0
+    return wall, rows, len(sc.statusTracker().getJobIdsForGroup(group)), df

@@ -17,12 +17,14 @@ from __future__ import annotations
 
 import importlib.util
 import math
+import pathlib
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from bireme_spark.util import drop_persisted_blocks  # noqa: E402
 
@@ -30,7 +32,8 @@ TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
 
-TIERS = ("/root/testdata/sf0.01", "/root/testdata/sf0.1", "/root/repo/testdata_sf1")
+TIERS = ("/root/testdata/sf0.01", "/root/testdata/sf0.1", str(ROOT / "testdata_sf1"))
+ENTRY = ROOT / "__spark_entry__.py"
 
 
 def norm(v):
@@ -123,7 +126,7 @@ def main() -> int:
         sf_dirs = [args[0] if args else "/root/testdata/sf0.01"]
         only = set(args[1:])
 
-    spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("__spark_entry__", ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 

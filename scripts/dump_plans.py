@@ -3,13 +3,12 @@ module source) and after (working tree), into plans/<tag>/.
 
 Usage:
     python scripts/dump_plans.py --tag r10 [--rev HEAD] [--sf DIR] \
-        --module bireme_spark/queries/audit.py \
-        [--ops bireme_spark/operators/ann.py[,...]] name [name ...]
+        [--no-ckpt] name [name ...]
 
-``--ops``: ALSO exec the given operator modules at the rev and install
-them into sys.modules around the before-arm plan build (the ab_op.py
-discipline) — without it an operator-level change leaks the NEW
-operator into the "before" plan.
+The before arm is measure.py's old arm: each query's module and every
+package module changed since the rev, exec'd at the rev and installed
+into sys.modules around the before-arm plan build — an operator-level
+change does not leak the NEW operator into the "before" plan.
 
 Writes plans/<tag>/<name>_before.txt and _after.txt. Only the plan is
 computed (no execution) — safe to run alongside nothing else.
@@ -17,61 +16,27 @@ computed (no execution) — safe to run alongside nothing else.
 
 from __future__ import annotations
 
+import argparse
 import os
-import subprocess
-import sys
-import types
 
-sys.path.insert(0, "/root/repo")
+from measure import ROOT, SF_DIR, load_rev, swapped
 
 
-def _formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def main() -> int:
-    args = sys.argv[1:]
-    sf_dir = "/root/testdata/sf0.1"
-    rev = "HEAD"
-    tag = "r10"
-    module_path = "bireme_spark/queries/audit.py"
-    op_paths: list[str] = []
-    no_ckpt = False
-    names: list[str] = []
-    i = 0
-    while i < len(args):
-        if args[i] == "--no-ckpt":
-            no_ckpt = True
-            i += 1
-        elif args[i] == "--sf":
-            sf_dir = args[i + 1]
-            i += 2
-        elif args[i] == "--rev":
-            rev = args[i + 1]
-            i += 2
-        elif args[i] == "--tag":
-            tag = args[i + 1]
-            i += 2
-        elif args[i] == "--module":
-            module_path = args[i + 1]
-            i += 2
-        elif args[i] == "--ops":
-            op_paths = [p for p in args[i + 1].split(",") if p]
-            i += 2
-        else:
-            names.append(args[i])
-            i += 1
-    if not names:
-        print("need query names")
-        return 2
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("names", nargs="+")
+    ap.add_argument("--sf", default=SF_DIR)
+    ap.add_argument("--rev", default="HEAD")
+    ap.add_argument("--tag", default="r10")
+    ap.add_argument("--no-ckpt", action="store_true")
+    args = ap.parse_args(argv)
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     from bireme_spark import registry
+    from bireme_spark.plans import formatted_plan
     from bireme_spark.session import get_spark
 
-    if no_ckpt:
+    if args.no_ckpt:
         # Show the FULL logical plan for builders that return a
         # localCheckpoint'd frame (whose own plan is just Scan
         # ExistingRDD): patch checkpointing to identity so the
@@ -90,54 +55,16 @@ def main() -> int:
     spark = get_spark("dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
     new_qs = registry.queries()
+    old_qs, old_mods = load_rev(args.rev, args.names)
 
-    def _exec_rev(path: str, modname: str) -> types.ModuleType:
-        src = subprocess.run(
-            ["git", "-C", "/root/repo", "show", f"{rev}:{path}"],
-            capture_output=True,
-            text=True,
-            check=True,
-        ).stdout
-        mod = types.ModuleType(modname)
-        mod.__file__ = f"<{rev}:{path}>"
-        exec(compile(src, mod.__file__, "exec"), mod.__dict__)
-        return mod
-
-    old_ops = {}
-    for op in op_paths:
-        modname = op.replace("/", ".").removesuffix(".py")
-        old_ops[modname] = _exec_rev(op, modname)
-
-    def _with_ops(fn, *a):
-        if not old_ops:
-            return fn(*a)
-        saved = {}
-        for modname, mod in old_ops.items():
-            saved[modname] = sys.modules.get(modname)
-            sys.modules[modname] = mod
-        try:
-            return fn(*a)
-        finally:
-            for modname, prev in saved.items():
-                if prev is None:
-                    del sys.modules[modname]
-                else:
-                    sys.modules[modname] = prev
-
-    old_mod = _with_ops(_exec_rev, module_path, "_plans_old_module")
-    old_qs = old_mod.QUERIES
-
-    out_dir = os.path.join("/root/repo/plans", tag)
-    os.makedirs(out_dir, exist_ok=True)
-    for name in names:
-        for arm, qs in (("before", old_qs), ("after", new_qs)):
-            if arm == "before":
-                df = _with_ops(qs[name], spark, sf_dir)
-            else:
-                df = qs[name](spark, sf_dir)
-            path = os.path.join(out_dir, f"{name}_{arm}.txt")
-            with open(path, "w") as f:
-                f.write(_formatted(df))
+    out_dir = ROOT / "plans" / args.tag
+    out_dir.mkdir(parents=True, exist_ok=True)
+    for name in args.names:
+        with swapped(old_mods):
+            before = old_qs[name](spark, args.sf)
+        for arm, df in (("before", before), ("after", new_qs[name](spark, args.sf))):
+            path = out_dir / f"{name}_{arm}.txt"
+            path.write_text(formatted_plan(df))
             print("wrote", path)
     return 0
 

@@ -9,9 +9,10 @@ changes and refresh the excerpts there.
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 DEFAULT = [
     "q1_pricing_summary",

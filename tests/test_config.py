@@ -142,6 +142,28 @@ def test_bireme_state_shape_matches_reference_fields():
     assert p["delay"] == 2.5  # ms → seconds, reference convention
 
 
+def test_bireme_state_latest_is_last_progress_time():
+    """``latest`` is the last progress event's timestamp, not the time
+    the snapshot is rendered."""
+    from types import SimpleNamespace
+
+    from bireme_spark.streaming.stats import PipelineStatListener, bireme_state
+
+    listener = PipelineStatListener()
+    listener.onQueryStarted(SimpleNamespace(id="qid-1", name="maxwell1"))
+    ts = "2020-01-02T03:04:05.678Z"
+    progress = SimpleNamespace(
+        id="qid-1",
+        numInputRows=10,
+        processedRowsPerSecond=5.0,
+        durationMs={"triggerExecution": 40},
+        timestamp=ts,
+    )
+    listener.onQueryProgress(SimpleNamespace(progress=progress))
+    (p,) = bireme_state(listener)["pipelines"]
+    assert p["latest"] == ts
+
+
 def test_state_server_during_live_stream(spark, tmp_path):
     """StateServer.java behavior: state is fetchable WHILE a query
     runs; after the run it reports the processed totals."""
