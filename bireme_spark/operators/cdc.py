@@ -150,17 +150,14 @@ def apply_changes(
 
     if payload_map is None:
         payload_map = {c: c for c in base.columns if c not in base_key_cols}
-    inserts = compacted.where(F.col("in_insert")).select(
-        *[
-            F.col(ck).cast(base.schema[bk].dataType).alias(bk)
-            for bk, ck in zip(base_key_cols, compact_key_cols)
-        ],
-        *[
-            F.col(src).cast(base.schema[dst].dataType).alias(dst)
-            for dst, src in payload_map.items()
-        ],
+    # built on every micro-batch and every sink read: one schema lookup,
+    # and columns by frame and type name (few py4j round trips each)
+    types = {f.name: f.dataType.simpleString() for f in base.schema.fields}
+    sources = {**dict(zip(base_key_cols, compact_key_cols)), **payload_map}
+    inserts = compacted.where(compacted["in_insert"]).select(
+        *[compacted[src].cast(types[dst]).alias(dst) for dst, src in sources.items()]
     )
-    return survivors.select(*base.columns).unionByName(inserts.select(*base.columns))
+    return survivors.unionByName(inserts)
 
 
 def snapshot(

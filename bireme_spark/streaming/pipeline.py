@@ -23,27 +23,34 @@ anti-join merge are exactly the batch operators
 (operators/cdc.compact / apply_changes), so batch and streaming
 semantics provably agree (tested in tests/test_streaming.py).
 
-Per-batch job chain (per table) — one fold, one pass over the base,
-one file per bucket version, like bireme's one RowCache fold + one
-DELETE+COPY per LoadTask:
+Per-batch job chain (per table) — one fold, one snapshot, one file
+written per batch unless it folds, like bireme's one RowCache fold +
+one DELETE+COPY per LoadTask:
 
-    1. fold: an eager local checkpoint of the change set; the same job
-       observes the changed-bucket set (≤ num_buckets values), so
-       neither the fold nor a bucket collect runs again;
-    2. merge: the base read prunes to the changed buckets' committed
-       versions; the checkpoint keeps the fold's size statistics, so
-       the planner's broadcast threshold and AQE pick the pessimistic
-       anti-join's strategy (a small batch is broadcast);
-    3. write + commit: the sink (``bireme_spark/sinks/versioned.py``,
-       which owns the on-disk layout) stages each changed bucket's next
-       version and commits them all with one manifest replace;
-    4. release: the checkpoint's blocks are dropped once the manifest is
+    1. fold: the compacted batch in the sink's delta shape, merged with
+       the committed delta into delta′ (per key the batch's row, else
+       the delta's), is materialized by one eager local checkpoint; the
+       same job observes delta′'s bucket set (≤ num_buckets values) and
+       whether the batch had rows, so nothing runs twice;
+    2. append — while the committed delta is smaller on disk than the
+       mean committed bucket: delta′ is written as ONE file, the next
+       delta version. No bucket is read or written;
+    3. or fold: the base read prunes to delta′'s buckets' committed
+       versions (schema pinned by the manifest: no inference job), the
+       sink's ``apply_delta`` (the pessimistic anti-join, a small delta′
+       broadcast) merges delta′ in, and each of those buckets is staged
+       as its next version, one file each;
+    4. commit: one manifest replace (``bireme_spark/sinks/versioned.py``
+       owns the on-disk layout) names the new delta or bucket versions;
+    5. release: the checkpoint's blocks are dropped once the manifest is
        committed (or the batch fails), so a sync that runs without end
        holds no storage from past batches.
 
-A batch with no rows for a table has no changed buckets and commits
-nothing — there is no separate emptiness probe. Unchanged buckets are
-never read or written.
+The manifest is read once per table and batch; that snapshot is what
+the batch is computed against and staged on. A batch with no rows for
+a table commits nothing — there is no separate emptiness probe.
+Buckets outside delta′ are never read or written. SCD2 stays
+copy-on-write: it rewrites the buckets of its changed keys.
 
 Ordering: within a batch, same-key changes fold by
 ``(produce_time_ms, src_partition, src_offset)``. Maxwell's produce
@@ -61,13 +68,14 @@ options bireme's consumer config maps to (``KafkaPipeLine.java:
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bireme_spark.config import PipelineConfig, SourceConfig
-from bireme_spark.operators.cdc import KEY_SEP, apply_changes, compact, key_string, scd2
+from bireme_spark.operators.cdc import KEY_SEP, compact, key_string, scd2
 from bireme_spark.sinks import versioned
 from bireme_spark.sinks.versioned import bucket_col
 from bireme_spark.sinks.versioned import read_state  # noqa: F401 (pl.read_state stays public)
@@ -158,13 +166,21 @@ _ORDER = ("produce_time_ms", "src_partition", "src_offset")
 def _write_changed_buckets(
     bspark: SparkSession,
     target_dir: str,
-    merged: DataFrame,
+    rows: DataFrame | None,
     changed: Sequence[int],
     batch_id: int,
+    snap: versioned.Snapshot | None = None,
+    delta: DataFrame | None = None,
+    keys: Sequence[str] | None = None,
 ) -> None:
-    """Stage every changed bucket's next version, then commit them all
-    with one manifest replace (``bireme_spark/sinks/versioned.py``)."""
-    versions = versioned.stage(bspark, target_dir, merged, changed, batch_id)
+    """Stage a commit — the next version of every changed bucket from
+    ``rows``, and ``delta`` as the next delta on key columns ``keys``
+    (an append changes no bucket) — then commit it with one manifest
+    replace (``bireme_spark/sinks/versioned.py``). ``snap`` is the
+    snapshot the batch was computed against."""
+    versions = versioned.stage(
+        bspark, target_dir, rows, changed, batch_id, snap=snap, delta=delta, keys=keys
+    )
     _write_manifest(target_dir, versions, batch_id)
 
 
@@ -175,6 +191,27 @@ def _release_checkpoint(df: DataFrame) -> None:
     ``bireme_spark/util.py`` for what leaked blocks cost). The frame
     cannot be read afterwards: the checkpoint cut its lineage."""
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+@contextmanager
+def _checkpointed(frame: DataFrame, bucket: Column | str, fresh: Column | str):
+    """``frame`` materialized by one eager local checkpoint, and the
+    sorted ``bucket`` values of its rows — observed by the same job, so
+    nothing runs twice and the bucket set costs no extra scan. The
+    buckets are empty when no row is ``fresh`` (from this batch): a
+    batch with no rows for the table commits nothing, with no separate
+    emptiness probe. An eager checkpoint, not ``persist()``: readers of
+    the cached AQE plan ran at the full shuffle-partition width and
+    lost the gain. The checkpoint's blocks are released on exit."""
+    seen = Observation()
+    frame = frame.observe(
+        seen, F.collect_set(bucket).alias("b"), F.max(fresh).alias("fresh")
+    ).localCheckpoint()
+    try:
+        got = seen.get
+        yield frame, sorted(got["b"]) if got["fresh"] else []
+    finally:
+        _release_checkpoint(frame)
 
 
 def _changes(parsed: DataFrame, payload_cols: Sequence[str], *extra) -> DataFrame:
@@ -191,41 +228,6 @@ def _changes(parsed: DataFrame, payload_cols: Sequence[str], *extra) -> DataFram
         *extra,
         *[F.col(f"data.{c}").alias(c) for c in payload_cols],
     )
-
-
-def _merge_changed(
-    bspark: SparkSession,
-    target_dir: str,
-    changes: DataFrame,
-    nb: int,
-    batch_id: int,
-    base_ddl: str,
-    merge: Callable[[DataFrame, DataFrame], DataFrame],
-) -> None:
-    """The one bucket-pruned merge both apply steps run.
-
-    ``changes`` is materialized with one eager local checkpoint whose
-    job also observes the PK-hash buckets of its ``key`` values — the
-    fold runs once and the changed-bucket set costs no extra scan. An
-    eager checkpoint, not ``persist()``: readers of the cached AQE plan
-    ran at the full shuffle-partition width and lost the gain. The
-    changed buckets' committed base is then read (an empty ``base_ddl``
-    frame before the first commit), and ``merge(base, changes)`` — rows
-    carrying their ``_sb`` — is written and committed. The checkpoint
-    is released after the commit. A batch with no rows for the table
-    has no changed buckets and commits nothing."""
-    seen = Observation()
-    changes = changes.observe(seen, F.collect_set(bucket_col("key", nb)).alias("b"))
-    changes = changes.localCheckpoint()
-    try:
-        changed = sorted(seen.get["b"])
-        if not changed:
-            return
-        base = versioned.read_buckets(bspark, target_dir, changed)
-        base = bspark.createDataFrame([], base_ddl) if base is None else base.drop("_sb")
-        _write_changed_buckets(bspark, target_dir, merge(base, changes), changed, batch_id)
-    finally:
-        _release_checkpoint(changes)
 
 
 def _compact_parsed(batch_df: DataFrame, payload_cols: Sequence[str]) -> DataFrame:
@@ -255,35 +257,63 @@ def _merge_compacted_versioned(
     nb: int,
     batch_id: int,
 ) -> None:
-    """Merge one table's compacted batch into its bucket-versioned
-    parquet state: one fold, one pass over the changed buckets' base,
-    one file per bucket version, one atomic manifest commit.
+    """Commit one table's compacted batch into its bucket-versioned
+    parquet state: one fold, one file written per delta or bucket
+    version, one atomic manifest commit.
 
-    The first ``len(key_fields)`` base columns are the key. The batch
-    carries it as the joined ``key`` string (``KEY_SEP`` between the
-    parts), and ``_sb`` hashes that same string on both sides. A
-    one-column key joins the typed base column to ``key`` directly; a
-    composite key is split back into its typed parts first."""
+    The batch becomes delta rows in the base's shape: the first
+    ``len(key_fields)`` base columns are the key — the batch carries it
+    as the joined ``key`` string (``KEY_SEP`` between the parts), split
+    back into typed parts here — then the payload, ``in_insert`` and
+    ``_sb``, which hashes the typed key exactly as the base's rows do.
+    delta′ (the committed delta without the batch's keys, plus the
+    batch) is checkpointed; then the batch appends delta′ as the next
+    delta, or folds it into delta′'s buckets (``versioned.appends``
+    decides from the files on disk)."""
     types = {f.name: f.dataType.simpleString() for f in data_schema.fields}
     # key column of the base table keeps the parsed-string key type
-    ddl = ", ".join(f"{c} {types.get(c, 'string')}" for c in base_columns)
-    keys = tuple(base_columns[: len(key_fields)])
-    payload_map = {c: c for c in base_columns[len(keys) :]}
+    types = {c: types.get(c, "string") for c in base_columns}
+    keys, payload = tuple(base_columns[: len(key_fields)]), base_columns[len(key_fields) :]
+    # names, not F.col: every F.col costs several py4j round trips, and
+    # this plan is built on every batch
     if len(keys) == 1:
-        batch_keys, sb = ("key",), bucket_col(keys[0], nb)
+        typed = [compacted["key"].cast(types[keys[0]])]
+        sb = bucket_col(typed[0], nb)
     else:
-        batch_keys, sb = keys, bucket_col(key_string([F.col(k) for k in keys]), nb)
+        parts = F.split(compacted["key"], KEY_SEP)
+        typed = [parts[i].cast(types[k]) for i, k in enumerate(keys)]
+        sb = bucket_col(key_string(typed), nb)
+    delta = compacted.select(
+        *[t.alias(k) for t, k in zip(typed, keys)],
+        *[compacted[c].cast(types[c]).alias(c) for c in payload],
+        compacted["in_insert"].alias(versioned.LIVE),
+        sb.alias("_sb"),
+        F.lit(True).alias("_fresh"),
+    )
 
-    def merge(base: DataFrame, compacted: DataFrame) -> DataFrame:
-        if len(keys) > 1:
-            parts = F.split(F.col("key"), KEY_SEP)
-            compacted = compacted.select(
-                "*",
-                *[parts[i].cast(base.schema[k].dataType).alias(k) for i, k in enumerate(keys)],
-            )
-        return apply_changes(base, compacted, keys, batch_keys, payload_map).withColumn("_sb", sb)
-
-    _merge_changed(bspark, target_dir, compacted, nb, batch_id, ddl, merge)
+    snap = versioned.snapshot(target_dir)
+    committed = versioned.read_delta(bspark, target_dir, snap.versions)
+    if committed is not None:
+        # delta′ per key: the batch's row, else the committed one — the
+        # struct max orders by _fresh first. One aggregation over the
+        # union, so the batch's fold runs once (an anti-join would fold
+        # it again for its key side).
+        both = committed.select("*", F.lit(False).alias("_fresh")).unionByName(delta)
+        row = F.struct("_fresh", *payload, versioned.LIVE, "_sb")
+        delta = both.groupBy(*keys).agg(F.max(row).alias("_row")).select(*keys, "_row.*")
+    with _checkpointed(delta, "_sb", "_fresh") as (delta, changed):
+        if not changed:
+            return
+        delta = delta.drop("_fresh")
+        if versioned.appends(target_dir, snap.versions):
+            _write_changed_buckets(bspark, target_dir, None, (), batch_id, snap, delta, keys)
+            return
+        base = versioned.read_base(bspark, target_dir, snap.versions, changed)
+        if base is None:
+            ddl = ", ".join(f"{c} {types[c]}" for c in base_columns)
+            base = bspark.createDataFrame([], f"{ddl}, _sb int")
+        merged = versioned.apply_delta(base, delta, keys)
+        _write_changed_buckets(bspark, target_dir, merged, changed, batch_id, snap, keys=keys)
 
 
 class TableSpec:
@@ -537,7 +567,14 @@ def run_scd2_pipeline(
     def apply(parsed: DataFrame, target_dir: str, _spec: TableSpec, batch_id: int) -> None:
         # the version fold, the first-change agg and the retry
         # anti-join all read the checkpointed batch: parse it once
+        bspark = parsed.sparkSession
+        snap = versioned.snapshot(target_dir)
         changes = _changes(parsed, payload_cols)
-        _merge_changed(parsed.sparkSession, target_dir, changes, nb, batch_id, hist_schema, merge)
+        with _checkpointed(changes, bucket_col("key", nb), F.lit(True)) as (changes, changed):
+            if not changed:
+                return
+            base = versioned.read_base(bspark, target_dir, snap.versions, changed)
+            base = bspark.createDataFrame([], hist_schema) if base is None else base.drop("_sb")
+            _write_changed_buckets(bspark, target_dir, merge(base, changes), changed, batch_id, snap)
 
     return _run(spark, config, _single_route(config, spec), apply, available_now)

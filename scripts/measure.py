@@ -18,9 +18,11 @@ and local imports both resolve to the arm's code.
 
 ``--conf KEY A B``: the runtime SQL conf KEY set to A, then B.
 
-Per rep the arms run in turn (the first arm alternates), each query
-once per arm. With two arms every run is value-hashed after the clock
-stops; a hash mismatch prints HASH-DIFF and exits 1.
+Each arm first runs each query once, untimed, in its own context (the
+cold start lands there). Per rep the arms then run in turn (the first
+arm alternates), each query once per arm. With two arms every run is
+value-hashed after the clock stops; a hash mismatch prints HASH-DIFF
+and exits 1.
 """
 
 from __future__ import annotations
@@ -120,14 +122,22 @@ def _conf(spark, key: str, value: str):
 
 
 def measure(spark, arms, names: list[str], sf_dir: str, reps: int):
-    """Run reps × arms × names; ``arms`` is a list of ``(label,
-    queries, context)`` and the first arm alternates on every rep.
+    """Warm, then run reps × arms × names; ``arms`` is a list of
+    ``(label, queries, context)`` and the first arm alternates on every
+    rep. The warm pass runs each query once per arm, untimed.
 
     Returns ``(runs, bad)``: ``runs[(name, label)]`` lists one
     ``(wall_s, rows, jobs)`` per rep; ``bad`` names the queries whose
     value hashes differ (hashed only with two or more arms)."""
     runs: dict[tuple[str, str], list[tuple[float, int, int]]] = {}
     hashes: dict[str, set[str]] = {}
+    # one untimed run of each query per arm, in the arm's context: the
+    # cold start (JIT, codegen, Python workers) lands here, not on
+    # whichever arm happens to run first
+    for label, qs, context in arms:
+        with context():
+            for name in names:
+                timed_run(spark, qs[name], sf_dir)
     for rep in range(reps):
         for label, qs, context in arms if rep % 2 == 0 else arms[::-1]:
             with context():
@@ -200,7 +210,6 @@ def main(argv: list[str] | None = None) -> int:
     else:
         arms = [("run", qs, contextlib.nullcontext)]
 
-    qs["q1_pricing_summary"](spark, args.sf).count()  # JVM/codegen warm
     runs, bad = measure(spark, arms, args.names, args.sf, args.reps)
     return report(runs, [label for label, _, _ in arms], args.names, bad)
 

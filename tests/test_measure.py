@@ -62,6 +62,41 @@ def test_different_rows_are_a_mismatch(spark, sf_dir, measure, capsys):
     assert "HASH-DIFF" in capsys.readouterr().out
 
 
+def test_each_arm_warms_its_queries_untimed_first(spark, sf_dir, measure):
+    """With two arms and --reps 1, each arm runs each query once,
+    untimed and inside its own context, before its timed run: a query
+    whose first call per arm returns other rows (a stand-in for its
+    cold start) never reaches the timings or the hashes."""
+    from bireme_spark import registry
+
+    q1 = registry.queries()["q1_pricing_summary"]
+    calls: list[tuple[str, tuple[str, ...]]] = []
+    active: list[str] = []
+
+    def arm(label):
+        @contextlib.contextmanager
+        def context():
+            active.append(label)
+            try:
+                yield
+            finally:
+                active.pop()
+
+        def query(s, d):
+            first = label not in [c[0] for c in calls]
+            calls.append((label, tuple(active)))
+            return q1(s, d).limit(1) if first else q1(s, d)
+
+        return label, {"q": query}, context
+
+    runs, bad = measure.measure(spark, [arm("a"), arm("b")], ["q"], sf_dir, reps=1)
+    assert calls == [("a", ("a",)), ("b", ("b",)), ("a", ("a",)), ("b", ("b",))]
+    full = q1(spark, sf_dir).count()
+    assert full > 1
+    assert [r[1] for r in runs[("q", "a")]] == [full] == [r[1] for r in runs[("q", "b")]]
+    assert bad == []
+
+
 @needs_git
 def test_scripts_resolve_their_own_checkout(tmp_path, monkeypatch, measure):
     monkeypatch.chdir(tmp_path)

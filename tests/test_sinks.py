@@ -452,13 +452,14 @@ def test_stale_writer_is_fenced(spark, tmp_path):
 
 def test_sink_layout_is_spelled_only_in_the_sink_module():
     """The on-disk layout belongs to sinks/versioned.py: no other
-    package module spells a layout dir or the manifest name, so every
-    reader and writer goes through that module's snapshot and commit."""
+    package module spells a layout dir (the delta dir included) or the
+    manifest name, so every reader and writer goes through that module's
+    snapshot and commit."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parents[1] / "bireme_spark"
     owner = pkg / "sinks" / "versioned.py"
-    literals = ("_sb=", "_sv=", "_manifest.json")
+    literals = ("_sb=", "_sv=", "_manifest.json", '"_delta"', "/_delta")
     assert all(lit in owner.read_text(encoding="utf-8") for lit in literals)
     hits = [
         f"{path.relative_to(pkg)}: {lit}"

@@ -109,38 +109,33 @@ def two_batch_sink(spark, tmp_path_factory):
 
 
 def test_incremental_sink_rewrites_only_changed_buckets(spark, two_batch_sink):
-    """Batch 2 touches a strict subset of keys: exactly the buckets
-    containing those keys get a second version; untouched buckets
-    keep v=1 — O(|changed buckets|) write amplification, not O(base)."""
+    """Batch 2 updates 3 of 40 keys and appends: it writes ONE delta
+    file holding exactly those keys and no bucket version — every
+    bucket keeps v=1, so the batch writes O(|batch|) rows, not
+    O(|changed buckets|) or O(base)."""
     import os
 
-    from pyspark.sql import functions as F
-
-    from bireme_spark.sinks.versioned import bucket_col, read_state
+    from bireme_spark.sinks.versioned import delta_dir, read_state, snapshot
 
     keys, upd, cfg = _KEYS, _UPD, two_batch_sink
+    target = cfg.target_dir
 
-    expected_changed = {
-        r.b
-        for r in spark.createDataFrame([(str(k),) for k in upd], "key string")
-        .select(bucket_col("key", cfg.num_buckets).alias("b"))
-        .collect()
+    versions = snapshot(target).versions
+    assert versions.delta is not None
+    on_disk = {
+        int(d.split("=")[1]): sorted(os.listdir(f"{target}/{d}"))
+        for d in os.listdir(target)
+        if d.startswith("_sb=")
     }
-    versions = {}
-    for d in os.listdir(cfg.target_dir):
-        if d.startswith("_sb="):
-            b = int(d.split("=")[1])
-            versions[b] = {
-                int(v.split("=")[1])
-                for v in os.listdir(f"{cfg.target_dir}/{d}")
-                if v.startswith("_sv=")
-            }
-    two_versions = {b for b, vs in versions.items() if max(vs) == 2}
-    one_version = {b for b, vs in versions.items() if max(vs) == 1}
-    assert two_versions == expected_changed
-    assert one_version and one_version.isdisjoint(expected_changed)
+    assert on_disk and all(vs == ["_sv=1"] for vs in on_disk.values()), on_disk
+    assert dict(versions) == dict.fromkeys(on_disk, 1)
+    delta = delta_dir(target, versions.delta)
+    assert os.listdir(os.path.dirname(delta)) == [os.path.basename(delta)]
+    assert len(_data_files(delta)) == 1
+    rows = {(r.k, r.in_insert) for r in spark.read.parquet(delta).collect()}
+    assert rows == {(k, True) for k in upd}
 
-    state = {(r.k, r.price) for r in read_state(spark, cfg.target_dir).collect()}
+    state = {(r.k, r.price) for r in read_state(spark, target).collect()}
     assert state == {(k, float(k) + (0.5 if k in upd else 0.0)) for k in keys}
 
 
@@ -219,25 +214,328 @@ def _commit(spark, target, rows, changed, batch_id):
     write_manifest(target, stage(spark, target, rows, changed, batch_id), batch_id)
 
 
+def _merge_changes(spark, target, batch_id, changes, nb=4):
+    """Commit one batch through the pipeline's merge step. ``changes``
+    are ``(k, op, price)`` or, for an update that changes the key,
+    ``(k, "update", price, old_k)``; a batch's ``ts`` is its id + 1."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.sources.maxwell import parse_maxwell
+    from bireme_spark.streaming import pipeline as pl
+
+    schema = StructType().add("k", "long").add("price", "double")
+    lines = []
+    for i, (k, op, price, *old) in enumerate(changes):
+        env = {"database": "d", "table": "t", "type": op, "ts": batch_id + 1,
+               "data": {"k": k, "price": price}}
+        if old:
+            env["old"] = {"k": old[0]}
+        lines.append((json.dumps(env), 0, i))
+    raw = spark.createDataFrame(lines, "value string, src_partition long, src_offset long")
+    compacted = pl._compact_parsed(parse_maxwell(raw, "value", schema, ("k",)), ["price"])
+    pl._merge_compacted_versioned(
+        spark, target, compacted, schema, ("k",), ("k", "price"), nb, batch_id
+    )
+
+
+def _state(spark, target) -> set:
+    from bireme_spark.sinks.versioned import read_state
+
+    return {(r.k, r.price) for r in read_state(spark, target).collect()}
+
+
 def test_each_committed_version_is_one_data_file(spark, two_batch_sink, tmp_path):
-    """The writer clusters rows by bucket before partitionBy, so every
-    committed _sv= dir holds exactly one parquet data file — after
-    streaming batches and after an erase rewrites some buckets."""
+    """A fold rewrites exactly delta′'s buckets — the committed delta's
+    keys plus the batch's — each as ONE parquet data file, and commits
+    no delta; every other bucket keeps its version. An erase after it
+    keeps one file per committed version too."""
     import shutil
 
-    from bireme_spark.sinks.versioned import erase_predicate, read_state
+    from bireme_spark.sinks.versioned import appends, bucket_col, erase_predicate, snapshot
 
     target = str(tmp_path / "target")
     shutil.copytree(two_batch_sink.target_dir, target)
-    files = {p: _data_files(p) for p in _committed_dirs(target)}
-    assert files and all(len(f) == 1 for f in files.values()), files
+    nb = two_batch_sink.num_buckets
+    before = snapshot(target).versions
+    # the committed 3-key delta is larger on disk than a 5-row bucket
+    assert before.delta is not None and not appends(target, before)
 
-    stats = erase_predicate(spark, target, "k % 2 = 0", batch_id=2)
+    _merge_changes(spark, target, 2, [(4, "update", 9.0), (40, "update", 9.0)], nb=nb)
+    after = snapshot(target).versions
+    touched = {
+        r.b
+        for r in spark.createDataFrame([(k,) for k in (*_UPD, 4, 40)], "k long")
+        .select(bucket_col("k", nb).alias("b"))
+        .collect()
+    }
+    assert after.delta is None
+    assert {b for b in after if after[b] != before[b]} == touched
+    assert all(after[b] == before[b] + 1 for b in touched)
+    files = {p: _data_files(p) for p in _committed_dirs(target)}
+    assert len(files) == nb and all(len(f) == 1 for f in files.values()), files
+    want = {(k, float(k) + (0.5 if k in _UPD else 0.0)) for k in _KEYS if k not in (4, 40)}
+    assert _state(spark, target) == want | {(4, 9.0), (40, 9.0)}
+
+    stats = erase_predicate(spark, target, "k % 2 = 0", batch_id=3)
     assert stats["buckets_rewritten"] > 0
     files = {p: _data_files(p) for p in _committed_dirs(target)}
-    assert len(files) == two_batch_sink.num_buckets
+    assert len(files) == nb
     assert all(len(f) == 1 for f in files.values()), files
-    assert {r.k for r in read_state(spark, target).collect()} == {k for k in _KEYS if k % 2}
+    assert {k for k, _ in _state(spark, target)} == {k for k in _KEYS if k % 2}
+
+
+def _delta_kind(target) -> str:
+    from bireme_spark.sinks.versioned import snapshot
+
+    return "fold" if snapshot(target).versions.delta is None else "append"
+
+
+# 200 keys over 2 buckets: a bucket outweighs a delta of a few keys, so
+# small batches append until the delta grows past a bucket
+_BASE = [(k, "insert", float(k)) for k in range(200)]
+
+
+def test_sync_that_appends_and_folds_equals_the_batch_snapshot(spark, tmp_path):
+    """Six micro-batches through the streaming runner both append and
+    fold, and the synced state equals the batch compaction of the whole
+    changelog — including a key inserted and then deleted while it
+    lived only in the delta, and an update that changes the key."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.sources.maxwell import parse_maxwell
+    from bireme_spark.streaming import pipeline as pl
+    from bireme_spark.streaming.replay import stamp_batch_mtime
+
+    batches = [
+        _BASE,
+        [(1000, "insert", 1.0), (0, "update", 0.5), (1, "update", 1.5)],
+        # 1000 lives only in the delta; 5 becomes 1005
+        [(1000, "delete", 1.0), (1005, "update", 5.5, 5)],
+        [(k, "update", k + 0.25) for k in range(100, 180)],
+        [(7, "update", 7.5), (8, "delete", 8.0)],
+        [(9, "update", 9.5), (1000, "insert", 2.0)],
+    ]
+    src = tmp_path / "in"
+    src.mkdir()
+    seen: set[str] = set()
+    for i, changes in enumerate(batches):
+        lines = []
+        for k, op, price, *old in changes:
+            env = {"database": "d", "table": "t", "type": op, "ts": 100 + i,
+                   "data": {"k": k, "price": price}}
+            if old:
+                env["old"] = {"k": old[0]}
+            lines.append(json.dumps(env))
+        (src / f"b{i}.json").write_text("\n".join(lines))
+        stamp_batch_mtime(str(src), i, seen)
+
+    cfg = PipelineConfig(
+        sources=[SourceConfig(name="m", kind="file", path=str(src))],
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_events_per_trigger=1,
+        num_buckets=2,
+    )
+    schema = StructType().add("k", "long").add("price", "double")
+    kinds = []
+    real = pl._write_manifest
+
+    def record(target_dir, versions, batch_id):
+        real(target_dir, versions, batch_id)
+        kinds.append(_delta_kind(target_dir))
+
+    pl._write_manifest = record
+    try:
+        q = pl.run_cdc_pipeline(spark, cfg, schema, ("k",), ("k", "price"), available_now=True)
+        q.awaitTermination(180)
+    finally:
+        pl._write_manifest = real
+    assert q.exception() is None
+    assert kinds == ["fold", "append", "append", "append", "fold", "append"], kinds
+
+    raw = spark.read.text(str(src)).select(
+        "value", F.lit(0).cast("long").alias("src_partition"), F.lit(None).cast("long").alias("src_offset")
+    )
+    batch = pl._compact_parsed(parse_maxwell(raw, "value", schema, ("k",)), ["price"])
+    want = {(int(r.key), r.price) for r in batch.where("in_insert").collect()}
+    assert (1000, 2.0) in want and 1005 in {k for k, _ in want} and 5 not in {k for k, _ in want}
+    assert _state(spark, cfg.target_dir) == want
+
+
+def test_crash_before_an_append_or_fold_commit_keeps_the_previous_state(
+    spark, tmp_path, monkeypatch
+):
+    """A batch that dies after staging its delta, or after a fold's
+    bucket renames, but before the manifest write commits nothing:
+    readers keep the previous commit, and the retry commits the batch."""
+    import os
+
+    from bireme_spark.sinks.versioned import appends, bucket_dir, snapshot
+    from bireme_spark.streaming import pipeline as pl
+
+    target = str(tmp_path / "t")
+    _merge_changes(spark, target, 0, _BASE, nb=2)
+    base_state = _state(spark, target)
+
+    def crash(*_):
+        raise RuntimeError("simulated crash before the manifest commit")
+
+    b1 = [(0, "update", 0.5), (1000, "insert", 1.0)]
+    with monkeypatch.context() as m:
+        m.setattr(pl, "_write_manifest", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            _merge_changes(spark, target, 1, b1, nb=2)
+    assert os.listdir(f"{target}/_delta")  # the delta was staged
+    assert snapshot(target) == ({0: 1, 1: 1}, 0) and snapshot(target).versions.delta is None
+    assert _state(spark, target) == base_state
+    _merge_changes(spark, target, 1, b1, nb=2)
+    assert _delta_kind(target) == "append"
+    appended = _state(spark, target)
+    assert appended == (base_state - {(0, 0.0)}) | {(0, 0.5), (1000, 1.0)}
+
+    b2 = [(k, "update", k + 0.25) for k in range(100, 180)]
+    _merge_changes(spark, target, 2, b2, nb=2)
+    grown = snapshot(target)
+    assert not appends(target, grown.versions)  # the next batch folds
+    grown_state = _state(spark, target)
+    b3 = [(7, "delete", 7.0)]
+    with monkeypatch.context() as m:
+        m.setattr(pl, "_write_manifest", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            _merge_changes(spark, target, 3, b3, nb=2)
+    assert all("_sv=2" in os.listdir(bucket_dir(target, b)) for b in (0, 1))  # renamed
+    assert snapshot(target) == grown
+    assert snapshot(target).versions.delta == grown.versions.delta
+    assert _state(spark, target) == grown_state
+    _merge_changes(spark, target, 3, b3, nb=2)
+    assert _delta_kind(target) == "fold"
+    assert _state(spark, target) == grown_state - {(7, 7.0)}
+
+
+def test_replayed_append_and_fold_batches_are_idempotent(spark, tmp_path):
+    """Re-applying a committed batch — one committed as an append, one
+    committed as a fold — leaves the state as the first apply left it,
+    whichever way the replay itself commits."""
+    target = str(tmp_path / "t")
+    _merge_changes(spark, target, 0, _BASE, nb=2)
+    b1 = [(0, "update", 0.5), (1000, "insert", 1.0), (3, "delete", 3.0), (1004, "update", 4.5, 4)]
+    _merge_changes(spark, target, 1, b1, nb=2)
+    assert _delta_kind(target) == "append"
+    once = _state(spark, target)
+    _merge_changes(spark, target, 1, b1, nb=2)
+    assert _state(spark, target) == once
+
+    _merge_changes(spark, target, 2, [(k, "update", k + 0.25) for k in range(100, 180)], nb=2)
+    b3 = [(1000, "delete", 1.0), (9, "update", 9.5)]
+    _merge_changes(spark, target, 3, b3, nb=2)
+    assert _delta_kind(target) == "fold"
+    once = _state(spark, target)
+    _merge_changes(spark, target, 3, b3, nb=2)
+    assert _state(spark, target) == once
+    assert (1000, 1.0) not in once and (9, 9.5) in once and (1004, 4.5) in once
+
+
+def test_vacuum_keeps_the_committed_delta_and_reaps_other_deltas(spark, tmp_path, monkeypatch):
+    """vacuum_versions never removes the committed delta, reaps a
+    superseded delta beyond ``keep`` and an orphan one a crashed batch
+    staged, and once a fold commits no delta, reaps every delta dir."""
+    import os
+
+    from bireme_spark.sinks.versioned import delta_dir, snapshot, vacuum_versions
+    from bireme_spark.streaming import pipeline as pl
+
+    target = str(tmp_path / "t")
+    deltas = f"{target}/_delta"
+    _merge_changes(spark, target, 0, _BASE, nb=2)
+    for i in (1, 2):
+        _merge_changes(spark, target, i, [(i, "update", i + 0.5)], nb=2)
+    committed = snapshot(target).versions.delta
+    assert committed == 2 and sorted(os.listdir(deltas)) == ["_sv=1", "_sv=2"]
+    state = _state(spark, target)
+    assert vacuum_versions(target, keep=2)["superseded_removed"] == 0
+    stats = vacuum_versions(target, keep=1)
+    assert stats["superseded_removed"] == 1 and stats["orphans_removed"] == 0, stats
+    assert os.listdir(deltas) == ["_sv=2"]
+
+    def crash(*_):
+        raise RuntimeError("simulated crash before the manifest commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(pl, "_write_manifest", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            _merge_changes(spark, target, 3, [(3, "update", 3.5)], nb=2)
+    assert sorted(os.listdir(deltas)) == ["_sv=2", "_sv=3"]
+    stats = vacuum_versions(target, keep=1)
+    assert stats["orphans_removed"] == 1 and stats["superseded_removed"] == 0, stats
+    assert os.listdir(deltas) == ["_sv=2"] and os.path.isdir(delta_dir(target, committed))
+    assert _state(spark, target) == state
+
+    _merge_changes(spark, target, 3, [(k, "update", k + 0.25) for k in range(100, 180)], nb=2)
+    _merge_changes(spark, target, 4, [(4, "update", 4.5)], nb=2)
+    assert _delta_kind(target) == "fold"
+    state = _state(spark, target)
+    vacuum_versions(target, keep=1)
+    assert os.listdir(deltas) == []
+    assert _state(spark, target) == state
+
+
+def test_erase_and_clone_see_the_delta(spark, tmp_path):
+    """erase_predicate removes a matching key that lives only in the
+    delta, and a shallow clone of a target with a delta links the delta
+    and reads equal to its origin."""
+    from bireme_spark.sinks.versioned import erase_predicate, shallow_clone, snapshot
+
+    origin = str(tmp_path / "origin")
+    _merge_changes(spark, origin, 0, _BASE, nb=2)
+    _merge_changes(spark, origin, 1, [(1000, "insert", 5.0), (1001, "insert", 6.0),
+                                      (3, "update", 3.5)], nb=2)
+    assert _delta_kind(origin) == "append"
+    before = _state(spark, origin)
+
+    clone = str(tmp_path / "clone")
+    stats = shallow_clone(origin, clone)
+    assert stats["files_linked"] + stats["files_copied"] >= 3
+    assert snapshot(clone).versions.delta == snapshot(origin).versions.delta
+    assert _state(spark, clone) == before
+
+    stats = erase_predicate(spark, origin, "k = 1000", batch_id=2)
+    assert stats["rows_erased"] == 1 and stats["buckets_rewritten"] == 1, stats
+    assert _state(spark, origin) == before - {(1000, 5.0)}
+    assert erase_predicate(spark, origin, "k = 1000", batch_id=3)["rows_erased"] == 0
+    assert _state(spark, clone) == before
+
+
+def test_read_state_over_a_committed_target_starts_no_job(spark, tmp_path):
+    """The manifest records the column DDL, so building read_state over
+    committed buckets and a delta infers no schema: no Spark job starts
+    until the frame is read."""
+    from bireme_spark.sinks.versioned import read_state, snapshot
+
+    target = str(tmp_path / "t")
+    _merge_changes(spark, target, 0, _BASE, nb=2)
+    _merge_changes(spark, target, 1, [(1000, "insert", 1.0)], nb=2)
+    assert snapshot(target).versions.ddl and _delta_kind(target) == "append"
+
+    sc = spark.sparkContext
+    group = f"read-state-{tmp_path.name}"
+    sc.setJobGroup(group, "read_state build")
+    try:
+        state = read_state(spark, target)
+        built = sc.statusTracker().getJobIdsForGroup(group)
+        assert state.count() == 201
+        read = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(built) == []
+    assert len(read) > 0
 
 
 def _persistent_rdd_ids(spark) -> set[int]:
@@ -330,7 +628,12 @@ def test_multi_table_batch_without_mapped_rows_commits_nothing(spark, tmp_path):
     assert {f for f in os.listdir(f"{cfg.checkpoint_dir}/commits") if f.isdigit()} == {"0", "1"}
     target = f"{cfg.target_dir}/public.t"
     with open(f"{target}/_manifest.json", encoding="utf-8") as f:
-        assert json.load(f) == {"committed_batch": 0, "versions": {"0": 1, "1": 1}}
+        assert json.load(f) == {
+            "committed_batch": 0,
+            "versions": {"0": 1, "1": 1},
+            "key_cols": ["k"],
+            "ddl": "k BIGINT,v DOUBLE",
+        }
     assert not [d for d in os.listdir(target) if d.startswith(".staging-")]
     assert {(r.k, r.v) for r in read_state(spark, target).collect()} == {
         (k, float(k)) for k in range(10)
