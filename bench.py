@@ -586,7 +586,7 @@ def main() -> int:
         best = None
         n = -1
         for _ in range(reps):
-            dt, n, _, _ = timed_run(spark, fn, sf_dir)
+            dt, n = timed_run(spark, fn, sf_dir)[:2]
             best = dt if best is None else min(best, dt)
             if floor is not None and best <= 1.3 * floor:
                 break  # already at the quiet-box floor; a repeat is noise

@@ -23,7 +23,7 @@ same key.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -49,6 +49,54 @@ def _ord_struct(order_cols: Sequence[str]):
     return F.struct(*[F.col(c) for c in order_cols])
 
 
+def compactor(
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+    op_col: str,
+    payload_cols: Sequence[str],
+    old_key_col: str | None = None,
+) -> Callable[[DataFrame], DataFrame]:
+    """:func:`compact`, built once and applied per frame: a streaming
+    runner that folds every micro-batch builds the column expressions
+    (hundreds of py4j round trips) only once."""
+    key_cols = list(key_cols)
+    op = F.col(op_col)
+    group: list[Column | str] = list(key_cols)
+    if old_key_col is not None:
+        # one pass over the batch: each row yields itself and, when its
+        # update changed the PK, a synthetic DELETE of the old key,
+        # ordered just before the UPDATE row itself (same order cols)
+        pk = F.posexplode(F.array(F.col(key_cols[0]), F.col(old_key_col))).alias("_syn", "_pk")
+        synthetic = F.col("_syn") == 1
+        kept = ~synthetic | F.col("_pk").isNotNull()
+        op = F.when(synthetic, F.lit(OP_DELETE)).otherwise(op)
+        group[0] = F.col("_pk").alias(key_cols[0])
+    aggs = [
+        F.max_by(
+            F.struct(op.alias("_op"), *[F.col(c).alias(c) for c in payload_cols]),
+            _ord_struct(order_cols),
+        ).alias("_last"),
+        F.max(F.when(op.isin(OP_UPDATE, OP_DELETE), F.lit(1)).otherwise(F.lit(0))).alias(
+            "_del_flag"
+        ),
+    ]
+    final_op = F.col("_last._op")
+    out = [
+        *[F.col(c) for c in key_cols],
+        final_op.alias("final_op"),
+        (F.col("_del_flag") == 1).alias("in_delete"),
+        (final_op != OP_DELETE).alias("in_insert"),
+        *[F.when(final_op != OP_DELETE, F.col(f"_last.{c}")).alias(c) for c in payload_cols],
+    ]
+
+    def fold(changes: DataFrame) -> DataFrame:
+        if old_key_col is not None:
+            changes = changes.select("*", pk).where(kept)
+        return changes.groupBy(*group).agg(*aggs).select(*out)
+
+    return fold
+
+
 def compact(
     changes: DataFrame,
     key_cols: Sequence[str] = ("key",),
@@ -65,52 +113,14 @@ def compact(
     keys whose final op is DELETE, mirroring LoadTask.insert).
 
     ``old_key_col``: when an UPDATE changes the PK, bireme deletes the
-    old key and inserts the new one (``RowCache.java:194-205``). Rows
-    for old keys are unioned in as synthetic deletes before folding.
+    old key and inserts the new one (``RowCache.java:194-205``). Each
+    such row also yields a synthetic delete of its old key before
+    folding — a generator over one scan of the batch.
     """
     if payload_cols is None:
-        payload_cols = [
-            c
-            for c in changes.columns
-            if c not in set(key_cols) | set(order_cols) | {op_col, old_key_col}
-        ]
-    key_cols = list(key_cols)
-    order_cols = list(order_cols)
-
-    work = changes
-    if old_key_col is not None:
-        # Synthetic DELETE for the pre-update PK; ordered just before
-        # the UPDATE row itself (same order cols).
-        old = (
-            changes.where(F.col(old_key_col).isNotNull())
-            .withColumn(key_cols[0], F.col(old_key_col))
-            .withColumn(op_col, F.lit(OP_DELETE))
-        )
-        work = changes.unionByName(old)
-    work = work.drop(*( [old_key_col] if old_key_col and old_key_col in work.columns else [] ))
-
-    last = F.max_by(
-        F.struct(F.col(op_col).alias("_op"), *[F.col(c).alias(c) for c in payload_cols]),
-        _ord_struct(order_cols),
-    ).alias("_last")
-    folded = work.groupBy(*key_cols).agg(
-        last,
-        F.max(
-            F.when(F.col(op_col).isin(OP_UPDATE, OP_DELETE), F.lit(1)).otherwise(F.lit(0))
-        ).alias("_del_flag"),
-    )
-    final_op = F.col("_last._op")
-    out = folded.select(
-        *key_cols,
-        final_op.alias("final_op"),
-        (F.col("_del_flag") == 1).alias("in_delete"),
-        (final_op != OP_DELETE).alias("in_insert"),
-        *[
-            F.when(final_op != OP_DELETE, F.col(f"_last.{c}")).alias(c)
-            for c in payload_cols
-        ],
-    )
-    return out
+        skip = set(key_cols) | set(order_cols) | {op_col, old_key_col}
+        payload_cols = [c for c in changes.columns if c not in skip]
+    return compactor(key_cols, order_cols, op_col, payload_cols, old_key_col)(changes)
 
 
 def apply_changes(
@@ -150,8 +160,6 @@ def apply_changes(
 
     if payload_map is None:
         payload_map = {c: c for c in base.columns if c not in base_key_cols}
-    # built on every micro-batch and every sink read: one schema lookup,
-    # and columns by frame and type name (few py4j round trips each)
     types = {f.name: f.dataType.simpleString() for f in base.schema.fields}
     sources = {**dict(zip(base_key_cols, compact_key_cols)), **payload_map}
     inserts = compacted.where(compacted["in_insert"]).select(
@@ -312,6 +320,34 @@ def incremental_sum_agg(
     )
 
 
+def scd2_versioner(
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+    op_col: str,
+    payload_cols: Sequence[str],
+) -> Callable[[DataFrame], DataFrame]:
+    """:func:`scd2`, built once and applied per frame (see
+    :func:`compactor`)."""
+    from pyspark.sql import Window
+
+    ts_col = order_cols[0]
+    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c) for c in order_cols])
+    valid_to = F.lead(F.col(ts_col)).over(w).alias("valid_to")
+    live = F.col(op_col) != OP_DELETE
+    out = [
+        *[F.col(c) for c in key_cols],
+        *[F.col(c) for c in payload_cols],
+        F.col(ts_col).alias("valid_from"),
+        F.col("valid_to"),
+        F.col("valid_to").isNull().alias("is_current"),
+    ]
+
+    def version(changes: DataFrame) -> DataFrame:
+        return changes.select("*", valid_to).where(live).select(*out)
+
+    return version
+
+
 def scd2(
     changes: DataFrame,
     key_cols: Sequence[str] = ("key",),
@@ -331,21 +367,9 @@ def scd2(
     window sorts within each PK partition, no extra exchange).
     """
     if payload_cols is None:
-        payload_cols = [
-            c for c in changes.columns if c not in set(key_cols) | set(order_cols) | {op_col}
-        ]
-    from pyspark.sql import Window
-
-    ts_col = order_cols[0]
-    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c) for c in order_cols])
-    versioned = changes.withColumn("valid_to", F.lead(F.col(ts_col)).over(w))
-    return versioned.where(F.col(op_col) != OP_DELETE).select(
-        *key_cols,
-        *payload_cols,
-        F.col(ts_col).alias("valid_from"),
-        "valid_to",
-        F.col("valid_to").isNull().alias("is_current"),
-    )
+        skip = set(key_cols) | set(order_cols) | {op_col}
+        payload_cols = [c for c in changes.columns if c not in skip]
+    return scd2_versioner(key_cols, order_cols, op_col, payload_cols)(changes)
 
 
 def dedup_offsets(

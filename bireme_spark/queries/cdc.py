@@ -1884,8 +1884,8 @@ def cdc_pk_change_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orphan old row) or lost insert (missing new row) hash-breaks.
 
     Plan: same single PK-hash compact shuffle + anti-join as
-    cdc_apply — the synthetic deletes are a map-side union, no extra
-    exchange at any scale."""
+    cdc_apply — the synthetic deletes come from a map-side generator
+    over one scan of the changes, no extra exchange at any scale."""
     o = load_table(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderkey").cast("string").alias("key"),

@@ -45,13 +45,16 @@ def serve(
         TableSpec,
         run_cdc_pipeline,
         run_multi_table_pipeline,
+        single_source,
     )
     from bireme_spark.streaming.state_server import StateServer
     from bireme_spark.streaming.stats import PipelineStatListener
 
     cfg = PipelineConfig.from_properties_file(config_path)
-    if not cfg.sources:
-        _print("serve: config declares no data_source", file=sys.stderr)
+    try:
+        source = single_source(cfg)
+    except ValueError as e:
+        _print(f"serve: {e}", file=sys.stderr)
         return 2
     multi = bool(cfg.table_schemas)
     if not multi and (not cfg.target_schema_ddl or not cfg.key_fields):
@@ -86,7 +89,7 @@ def serve(
         tables = {t: table_spec(ddl, keys) for t, (ddl, keys) in cfg.table_schemas.items()}
         query = run_multi_table_pipeline(spark, cfg, tables, available_now=available_now)
         _print(
-            f"serve: multi-table pipeline started ({cfg.sources[0].name} → "
+            f"serve: multi-table pipeline started ({source.name} → "
             f"{sorted(tables)} under {cfg.target_dir})"
         )
     else:
@@ -100,7 +103,7 @@ def serve(
             available_now=available_now,
         )
         _print(
-            f"serve: pipeline started ({cfg.sources[0].name} → "
+            f"serve: pipeline started ({source.name} → "
             f"{cfg.target_dir or cfg.target_jdbc_url})"
         )
 

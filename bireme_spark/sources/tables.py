@@ -3,12 +3,23 @@
 The warehouse star schema mirrors the tables bireme would maintain in
 Greenplum; here they are parquet directories readable by
 ``spark.read.parquet`` with full predicate/projection pushdown.
+
+Each table's inferred schema is memoized per SparkSession, keyed by the
+table's files (path, mtime_ns, size of each) and the session confs that
+steer parquet schema inference: a later ``load_table`` of the same files
+reads with that schema pinned, which starts no schema-inference job. A
+changed file re-infers; only a local file or dir is memoized, any other
+path (a URI) infers on every read.
 """
 
 from __future__ import annotations
 
+import os
+from weakref import WeakKeyDictionary
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -32,8 +43,55 @@ TABLES = (
 BROADCAST_DIMS = frozenset({"region", "nation"})
 
 
+# session confs that change what parquet schema inference returns
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+)
+# per session: path → (files and confs it was inferred from, schema)
+_schemas: WeakKeyDictionary[SparkSession, dict[str, tuple[tuple, StructType]]] = (
+    WeakKeyDictionary()
+)
+
+
+def _files(path: str) -> tuple | None:
+    """``(path, mtime_ns, size)`` of every file of a local parquet table
+    (one file, or a dir walked in order), or None when ``path`` is not a
+    local file or dir."""
+    if "://" in path or path.startswith("file:") or not os.path.exists(path):
+        return None
+    if os.path.isfile(path):
+        paths = [path]
+    else:
+        paths = [
+            os.path.join(root, f)
+            for root, dirs, files in sorted(os.walk(path))
+            for f in sorted(files)
+        ]
+    return tuple((p, (st := os.stat(p)).st_mtime_ns, st.st_size) for p in paths)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the session's memoized schema
+    pinned when it was inferred from the same files under the same
+    confs."""
+    files = _files(path)
+    if files is None:
+        return spark.read.parquet(path)
+    seen = (files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    memo = _schemas.setdefault(spark, {})
+    if path in memo and memo[path][0] == seen:
+        return spark.read.schema(memo[path][1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[path] = (seen, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
     # events.ts is parquet TIMESTAMP(NANOS). How Spark surfaces it has
     # shifted across releases, so normalize every variant to a session-tz
     # TIMESTAMP (LTZ) — watermarks/windows require LTZ event time:

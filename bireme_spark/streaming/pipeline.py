@@ -46,6 +46,16 @@ one DELETE+COPY per LoadTask:
        committed (or the batch fails), so a sync that runs without end
        holds no storage from past batches.
 
+Built once, applied per batch: each route's parse and routing filter
+(in ``_run``), its fold and delta shaping (``_compact_parsed`` and
+``_merge_compacted_versioned``, memoized per SparkContext and per
+everything their Columns depend on — payload names, whether the parse
+carries an ``old_key``, the table's schema, key, base columns and
+bucket count), and the SCD2 step's Columns (in ``run_scd2_pipeline``).
+Per batch the driver only applies DataFrame operations to the batch —
+a Column costs several py4j round trips to build, and building the
+plan per batch had cost ~1,180 of them before the first job.
+
 The manifest is read once per table and batch; that snapshot is what
 the batch is computed against and staged on. A batch with no rows for
 a table commits nothing — there is no separate emptiness probe.
@@ -69,13 +79,15 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager
+from typing import NamedTuple, TypeVar
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bireme_spark.config import PipelineConfig, SourceConfig
-from bireme_spark.operators.cdc import KEY_SEP, compact, key_string, scd2
+from bireme_spark.operators.cdc import KEY_SEP, compactor, key_string, scd2_versioner
 from bireme_spark.sinks import versioned
 from bireme_spark.sinks.versioned import bucket_col
 from bireme_spark.sinks.versioned import read_state  # noqa: F401 (pl.read_state stays public)
@@ -193,20 +205,25 @@ def _release_checkpoint(df: DataFrame) -> None:
     df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
+def _observed(bucket: Column, fresh: Column) -> tuple[Column, Column]:
+    """What ``_checkpointed`` observes: the set of ``bucket`` values and
+    whether any row is ``fresh``."""
+    return F.collect_set(bucket).alias("b"), F.max(fresh).alias("fresh")
+
+
 @contextmanager
-def _checkpointed(frame: DataFrame, bucket: Column | str, fresh: Column | str):
+def _checkpointed(frame: DataFrame, observed: tuple[Column, Column]):
     """``frame`` materialized by one eager local checkpoint, and the
-    sorted ``bucket`` values of its rows — observed by the same job, so
-    nothing runs twice and the bucket set costs no extra scan. The
-    buckets are empty when no row is ``fresh`` (from this batch): a
-    batch with no rows for the table commits nothing, with no separate
-    emptiness probe. An eager checkpoint, not ``persist()``: readers of
-    the cached AQE plan ran at the full shuffle-partition width and
-    lost the gain. The checkpoint's blocks are released on exit."""
+    sorted bucket values of its rows — ``observed`` (see ``_observed``)
+    by the same job, so nothing runs twice and the bucket set costs no
+    extra scan. The buckets are empty when no row is fresh (from this
+    batch): a batch with no rows for the table commits nothing, with no
+    separate emptiness probe. An eager checkpoint, not ``persist()``:
+    readers of the cached AQE plan ran at the full shuffle-partition
+    width and lost the gain. The checkpoint's blocks are released on
+    exit."""
     seen = Observation()
-    frame = frame.observe(
-        seen, F.collect_set(bucket).alias("b"), F.max(fresh).alias("fresh")
-    ).localCheckpoint()
+    frame = frame.observe(seen, *observed).localCheckpoint()
     try:
         got = seen.get
         yield frame, sorted(got["b"]) if got["fresh"] else []
@@ -214,10 +231,25 @@ def _checkpointed(frame: DataFrame, bucket: Column | str, fresh: Column | str):
         _release_checkpoint(frame)
 
 
-def _changes(parsed: DataFrame, payload_cols: Sequence[str], *extra) -> DataFrame:
-    """A parsed batch as fold input: key, op, the order columns, any
-    ``extra`` columns, then the payload."""
-    return parsed.select(
+# Plan pieces (Columns) reused by every micro-batch; see _once
+_built: WeakKeyDictionary = WeakKeyDictionary()
+T = TypeVar("T")
+
+
+def _once(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
+    """``build()``, memoized per SparkContext and ``key``. ``key`` names
+    everything the piece depends on; keyed by the context, a piece (its
+    Columns hold JVM objects) never outlives its JVM."""
+    memo = _built.setdefault(spark.sparkContext, {})
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
+
+
+def _changes(payload_cols: Sequence[str], *extra: Column) -> list[Column]:
+    """The select list that makes a parsed batch fold input: key, op,
+    the order columns, any ``extra`` columns, then the payload."""
+    return [
         F.col("key"),
         F.col("op"),
         F.col("produce_time_ms"),
@@ -227,23 +259,73 @@ def _changes(parsed: DataFrame, payload_cols: Sequence[str], *extra) -> DataFram
         F.coalesce(F.col("src_offset"), F.monotonically_increasing_id()).alias("src_offset"),
         *extra,
         *[F.col(f"data.{c}").alias(c) for c in payload_cols],
-    )
+    ]
 
 
 def _compact_parsed(batch_df: DataFrame, payload_cols: Sequence[str]) -> DataFrame:
     """Parsed ChangeRow micro-batch → compacted delete/insert sets
-    (the per-batch RowBatchMerger fold, shared by every sink)."""
-    old_key = (
-        F.col("old_key")
-        if "old_key" in batch_df.columns
-        else F.lit(None).cast("string").alias("old_key")
-    )
-    return compact(
-        _changes(batch_df, payload_cols, old_key),
-        key_cols=("key",),
-        order_cols=_ORDER,
-        payload_cols=tuple(payload_cols),
-        old_key_col="old_key",
+    (the per-batch RowBatchMerger fold, shared by every sink). The fold
+    is built once per payload and parser shape (whether the parse
+    carries an ``old_key``); its Columns name columns and never type
+    them, so tables whose payloads share names share it."""
+    payload_cols = tuple(payload_cols)
+    old_key = "old_key" if "old_key" in batch_df.columns else None
+
+    def build() -> Callable[[DataFrame], DataFrame]:
+        changes = _changes(payload_cols, *([F.col(old_key)] if old_key else []))
+        fold = compactor(("key",), _ORDER, "op", payload_cols, old_key)
+        return lambda parsed: fold(parsed.select(*changes))
+
+    return _once(batch_df.sparkSession, ("compact", payload_cols, old_key), build)(batch_df)
+
+
+class _DeltaStep(NamedTuple):
+    """The built-once half of ``_merge_compacted_versioned``."""
+
+    keys: tuple[str, ...]
+    ddl: str  # the base columns, for a target with no bucket yet
+    shape: Callable[[DataFrame], DataFrame]  # compacted batch → delta rows
+    fold: Callable[[DataFrame, DataFrame], DataFrame]  # (committed, batch) → delta′
+    observed: tuple[Column, Column]
+
+
+def _delta_step(
+    data_schema: StructType, key_fields: Sequence[str], base_columns: Sequence[str], nb: int
+) -> _DeltaStep:
+    types = {f.name: f.dataType.simpleString() for f in data_schema.fields}
+    # key column of the base table keeps the parsed-string key type
+    types = {c: types.get(c, "string") for c in base_columns}
+    keys, payload = tuple(base_columns[: len(key_fields)]), base_columns[len(key_fields) :]
+    if len(keys) == 1:
+        typed = [F.col("key").cast(types[keys[0]])]
+        sb = bucket_col(typed[0], nb)
+    else:
+        parts = F.split(F.col("key"), KEY_SEP)
+        typed = [parts[i].cast(types[k]) for i, k in enumerate(keys)]
+        sb = bucket_col(key_string(typed), nb)
+    shaped = [
+        *[t.alias(k) for t, k in zip(typed, keys)],
+        *[F.col(c).cast(types[c]).alias(c) for c in payload],
+        F.col("in_insert").alias(versioned.LIVE),
+        sb.alias("_sb"),
+        F.lit(True).alias("_fresh"),
+    ]
+    stale = [F.col("*"), F.lit(False).alias("_fresh")]
+    # per key the batch's row, else the committed one: the struct max
+    # orders by _fresh first
+    newest = F.max(F.struct("_fresh", *payload, versioned.LIVE, "_sb")).alias("_row")
+    unpacked = [*[F.col(k) for k in keys], F.col("_row.*")]
+
+    def fold(committed: DataFrame, delta: DataFrame) -> DataFrame:
+        both = committed.select(*stale).unionByName(delta)
+        return both.groupBy(*keys).agg(newest).select(*unpacked)
+
+    return _DeltaStep(
+        keys,
+        ", ".join(f"{c} {types[c]}" for c in base_columns),
+        lambda compacted: compacted.select(*shaped),
+        fold,
+        _observed(F.col("_sb"), F.col("_fresh")),
     )
 
 
@@ -267,53 +349,30 @@ def _merge_compacted_versioned(
     back into typed parts here — then the payload, ``in_insert`` and
     ``_sb``, which hashes the typed key exactly as the base's rows do.
     delta′ (the committed delta without the batch's keys, plus the
-    batch) is checkpointed; then the batch appends delta′ as the next
+    batch; one aggregation over their union, so the batch's fold runs
+    once) is checkpointed; then the batch appends delta′ as the next
     delta, or folds it into delta′'s buckets (``versioned.appends``
-    decides from the files on disk)."""
-    types = {f.name: f.dataType.simpleString() for f in data_schema.fields}
-    # key column of the base table keeps the parsed-string key type
-    types = {c: types.get(c, "string") for c in base_columns}
-    keys, payload = tuple(base_columns[: len(key_fields)]), base_columns[len(key_fields) :]
-    # names, not F.col: every F.col costs several py4j round trips, and
-    # this plan is built on every batch
-    if len(keys) == 1:
-        typed = [compacted["key"].cast(types[keys[0]])]
-        sb = bucket_col(typed[0], nb)
-    else:
-        parts = F.split(compacted["key"], KEY_SEP)
-        typed = [parts[i].cast(types[k]) for i, k in enumerate(keys)]
-        sb = bucket_col(key_string(typed), nb)
-    delta = compacted.select(
-        *[t.alias(k) for t, k in zip(typed, keys)],
-        *[compacted[c].cast(types[c]).alias(c) for c in payload],
-        compacted["in_insert"].alias(versioned.LIVE),
-        sb.alias("_sb"),
-        F.lit(True).alias("_fresh"),
-    )
-
+    decides from the files on disk). The Columns are built once per
+    table shape and bucket count."""
+    key = ("delta", data_schema, tuple(key_fields), tuple(base_columns), nb)
+    step = _once(bspark, key, lambda: _delta_step(data_schema, key_fields, base_columns, nb))
+    delta = step.shape(compacted)
     snap = versioned.snapshot(target_dir)
     committed = versioned.read_delta(bspark, target_dir, snap.versions)
     if committed is not None:
-        # delta′ per key: the batch's row, else the committed one — the
-        # struct max orders by _fresh first. One aggregation over the
-        # union, so the batch's fold runs once (an anti-join would fold
-        # it again for its key side).
-        both = committed.select("*", F.lit(False).alias("_fresh")).unionByName(delta)
-        row = F.struct("_fresh", *payload, versioned.LIVE, "_sb")
-        delta = both.groupBy(*keys).agg(F.max(row).alias("_row")).select(*keys, "_row.*")
-    with _checkpointed(delta, "_sb", "_fresh") as (delta, changed):
+        delta = step.fold(committed, delta)
+    with _checkpointed(delta, step.observed) as (delta, changed):
         if not changed:
             return
         delta = delta.drop("_fresh")
         if versioned.appends(target_dir, snap.versions):
-            _write_changed_buckets(bspark, target_dir, None, (), batch_id, snap, delta, keys)
+            _write_changed_buckets(bspark, target_dir, None, (), batch_id, snap, delta, step.keys)
             return
         base = versioned.read_base(bspark, target_dir, snap.versions, changed)
         if base is None:
-            ddl = ", ".join(f"{c} {types[c]}" for c in base_columns)
-            base = bspark.createDataFrame([], f"{ddl}, _sb int")
-        merged = versioned.apply_delta(base, delta, keys)
-        _write_changed_buckets(bspark, target_dir, merged, changed, batch_id, snap, keys=keys)
+            base = bspark.createDataFrame([], f"{step.ddl}, _sb int")
+        merged = versioned.apply_delta(base, delta, step.keys)
+        _write_changed_buckets(bspark, target_dir, merged, changed, batch_id, snap, keys=step.keys)
 
 
 class TableSpec:
@@ -358,8 +417,11 @@ def _run(
     ``apply(parsed, target_dir, spec, batch_id)``, the entry point's
     per-table step; it commits through an idempotent sink, so the
     batch may replay after a crash before Spark's checkpoint commit.
+
+    A config that lists more than one source is refused (``ValueError``,
+    see ``single_source``): one query syncs one source.
     """
-    source = config.sources[0]
+    source = single_source(config)
     if source.kind == "debezium":
         parser = debezium_parser
         db_path, tbl_path = "$.payload.source.db", "$.payload.source.table"
@@ -388,9 +450,8 @@ def _run(
     routed = [(target_dir, spec, router(origins, spec)) for target_dir, origins, spec in routes]
 
     def run_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: every route re-reads the micro-batch, and the fold
-        # scans it twice (its key-change union) — uncached, each scan
-        # re-reads the SOURCE (re-polls Kafka) and re-derives the
+        # persist: every route re-reads the micro-batch — uncached, each
+        # read re-reads the SOURCE (re-polls Kafka) and re-derives the
         # monotonically_increasing_id offsets, which must be stable
         # within the batch.
         batch_df = batch_df.persist()
@@ -413,10 +474,25 @@ def _run(
     return writer.start()
 
 
+def single_source(config: PipelineConfig) -> SourceConfig:
+    """The one source a pipeline syncs. A config that lists several is
+    refused, naming the sources that would go unsynced: run one pipeline
+    (one config) per source."""
+    if not config.sources:
+        raise ValueError("config declares no data_source")
+    if len(config.sources) > 1:
+        dropped = ", ".join(repr(s.name) for s in config.sources[1:])
+        raise ValueError(
+            f"config lists {len(config.sources)} sources, but one pipeline syncs one source: "
+            f"{dropped} would not be synced; run one pipeline per source"
+        )
+    return config.sources[0]
+
+
 def _single_route(config: PipelineConfig, spec: TableSpec):
     """A single-table sync: every mapped origin of the source (every row
     when it has no table_map) into ``target_dir`` itself."""
-    return [(config.target_dir, list(config.sources[0].table_map or ()) or None, spec)]
+    return [(config.target_dir, list(single_source(config).table_map or ()) or None, spec)]
 
 
 def _merge_step(nb: int):
@@ -491,7 +567,7 @@ def run_multi_table_pipeline(
     single-table pipeline. A target with no mapping entry is skipped,
     and a table with no rows in a batch commits nothing.
     """
-    table_map = config.sources[0].table_map or {}
+    table_map = single_source(config).table_map or {}
     routes = [
         (f"{config.target_dir}/{target}", origins, spec)
         for target, spec in tables.items()
@@ -532,49 +608,54 @@ def run_scd2_pipeline(
         + ", ".join(f"{c} {data_schema[c].dataType.simpleString()}" for c in payload_cols)
         + ", valid_from long, valid_to long, is_current boolean"
     )
+    # built once, applied per batch
+    changes_cols = _changes(payload_cols)
+    observed = _observed(bucket_col("key", nb), F.lit(True))
+    history = scd2_versioner(("key",), _ORDER, "op", payload_cols)
+    first_ts = F.min("produce_time_ms").alias("first_ts")
+    # Close the open version of every touched key at the batch's first
+    # change time; untouched keys in the bucket pass through.
+    # RETRY IDEMPOTENCY (the post-manifest-commit, pre-checkpoint-commit
+    # window: Structured Streaming re-runs the batch against state that
+    # already contains it):
+    #  * only close versions that OPENED BEFORE this batch
+    #    (valid_from < first_ts) — a replay sees the batch's own open
+    #    version (valid_from ≥ first_ts) and leaves it alone;
+    #  * anti-join the batch's version rows against the base on the
+    #    SCD2 version identity (key, valid_from) so already-applied rows
+    #    are not appended twice.
+    closing = (
+        F.col("is_current")
+        & F.col("first_ts").isNotNull()
+        & (F.col("valid_from") < F.col("first_ts"))
+    )
+    closed_cols = [
+        F.col("key"),
+        *[F.col(c) for c in payload_cols],
+        F.col("valid_from"),
+        F.when(closing, F.col("first_ts")).otherwise(F.col("valid_to")).alias("valid_to"),
+        (F.col("is_current") & (F.col("first_ts").isNull() | ~closing)).alias("is_current"),
+    ]
+    version_id = [F.col("key"), F.col("valid_from")]
+    sb = bucket_col("key", nb).alias("_sb")
 
     def merge(base: DataFrame, changes: DataFrame) -> DataFrame:
-        hist = scd2(
-            changes, key_cols=("key",), order_cols=_ORDER, payload_cols=payload_cols
-        ).select("key", *payload_cols, "valid_from", "valid_to", "is_current")
-        firsts = changes.groupBy("key").agg(F.min("produce_time_ms").alias("first_ts"))
-        # Close the open version of every touched key at the batch's
-        # first change time; untouched keys in the bucket pass through.
-        # RETRY IDEMPOTENCY (the post-manifest-commit, pre-checkpoint-
-        # commit window: Structured Streaming re-runs the batch against
-        # state that already contains it):
-        #  * only close versions that OPENED BEFORE this batch
-        #    (valid_from < first_ts) — a replay sees the batch's own
-        #    open version (valid_from ≥ first_ts) and leaves it alone;
-        #  * anti-join the batch's version rows against the base on the
-        #    SCD2 version identity (key, valid_from) so already-applied
-        #    rows are not appended twice.
-        closing = (
-            F.col("is_current")
-            & F.col("first_ts").isNotNull()
-            & (F.col("valid_from") < F.col("first_ts"))
-        )
-        closed = base.join(firsts, "key", "left").select(
-            "key",
-            *payload_cols,
-            "valid_from",
-            F.when(closing, F.col("first_ts")).otherwise(F.col("valid_to")).alias("valid_to"),
-            (F.col("is_current") & (F.col("first_ts").isNull() | ~closing)).alias("is_current"),
-        )
-        fresh = hist.join(base.select("key", "valid_from"), ["key", "valid_from"], "left_anti")
-        return closed.unionByName(fresh).withColumn("_sb", bucket_col("key", nb))
+        firsts = changes.groupBy("key").agg(first_ts)
+        closed = base.join(firsts, "key", "left").select(*closed_cols)
+        fresh = history(changes).join(base.select(*version_id), ["key", "valid_from"], "left_anti")
+        return closed.unionByName(fresh).select("*", sb)
 
     def apply(parsed: DataFrame, target_dir: str, _spec: TableSpec, batch_id: int) -> None:
         # the version fold, the first-change agg and the retry
         # anti-join all read the checkpointed batch: parse it once
         bspark = parsed.sparkSession
         snap = versioned.snapshot(target_dir)
-        changes = _changes(parsed, payload_cols)
-        with _checkpointed(changes, bucket_col("key", nb), F.lit(True)) as (changes, changed):
+        with _checkpointed(parsed.select(*changes_cols), observed) as (changes, changed):
             if not changed:
                 return
             base = versioned.read_base(bspark, target_dir, snap.versions, changed)
             base = bspark.createDataFrame([], hist_schema) if base is None else base.drop("_sb")
-            _write_changed_buckets(bspark, target_dir, merge(base, changes), changed, batch_id, snap)
+            rows = merge(base, changes)
+            _write_changed_buckets(bspark, target_dir, rows, changed, batch_id, snap=snap)
 
     return _run(spark, config, _single_route(config, spec), apply, available_now)

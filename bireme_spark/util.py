@@ -1,7 +1,8 @@
 """Small shared helpers for the bench/gate harnesses.
 
 ``timed_run`` is the one timed query run: bench.py and
-scripts/measure.py clock through it. ``drop_persisted_blocks`` is the
+scripts/measure.py clock through it, and it splits off the builder's
+share (``build_s``). ``drop_persisted_blocks`` is the
 hygiene hook it (and scripts/driver_sim.py) calls between runs.
 """
 
@@ -10,6 +11,7 @@ from __future__ import annotations
 import gc
 import itertools
 import time
+from typing import NamedTuple
 
 _groups = itertools.count()
 
@@ -38,12 +40,25 @@ def drop_persisted_blocks(spark) -> None:
         rdd.unpersist(False)
 
 
-def timed_run(spark, fn, sf_dir: str):
+class TimedRun(NamedTuple):
+    """One clocked run: ``wall_s`` from the builder call to the end of
+    the count; ``build_s`` the part of it inside the builder, before the
+    count (driver-side planning, schema inference, a builder's own eager
+    actions)."""
+
+    wall_s: float
+    rows: int
+    jobs: int
+    df: object
+    build_s: float
+
+
+def timed_run(spark, fn, sf_dir: str) -> TimedRun:
     """Clock ``fn(spark, sf_dir).count()`` on a clean executor.
 
     Clears SQL-cached relations and persisted blocks, tags the run's
-    jobs with a fresh job group, and returns ``(wall_s, rows, jobs,
-    df)``; ``jobs`` counts what the statusTracker saw in that group.
+    jobs with a fresh job group, and returns a :class:`TimedRun`;
+    ``jobs`` counts what the statusTracker saw in that group.
     """
     spark.catalog.clearCache()
     drop_persisted_blocks(spark)
@@ -52,6 +67,8 @@ def timed_run(spark, fn, sf_dir: str):
     sc.setJobGroup(group, group)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
+    built = time.perf_counter()
     rows = df.count()
     wall = time.perf_counter() - t0
-    return wall, rows, len(sc.statusTracker().getJobIdsForGroup(group)), df
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    return TimedRun(wall, rows, jobs, df, built - t0)

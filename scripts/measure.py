@@ -7,8 +7,11 @@ Usage:
     python scripts/measure.py --rev HEAD [--sf DIR] [--reps 3] name [name ...]
     python scripts/measure.py --conf KEY A B [--sf DIR] [--reps 3] name [name ...]
 
-One arm (no flag): per query the min wall, per-rep walls, jobs and
-rows, then a BASELINE.md-ready ``| name | floor |`` table.
+One arm (no flag): per query the min wall, the min builder time
+(``build``: the builder call, before the count — schema inference and
+planning land here), per-rep walls, jobs and rows, then a
+BASELINE.md-ready ``| name | floor |`` table. Two arms print both
+arms' min wall and min builder time per query.
 
 ``--rev REV``: the working tree against REV. The old arm execs, at
 REV, the ``bireme_spark.queries`` module that holds each named query
@@ -127,9 +130,9 @@ def measure(spark, arms, names: list[str], sf_dir: str, reps: int):
     rep. The warm pass runs each query once per arm, untimed.
 
     Returns ``(runs, bad)``: ``runs[(name, label)]`` lists one
-    ``(wall_s, rows, jobs)`` per rep; ``bad`` names the queries whose
+    ``(wall_s, rows, jobs, build_s)`` per rep; ``bad`` names the queries whose
     value hashes differ (hashed only with two or more arms)."""
-    runs: dict[tuple[str, str], list[tuple[float, int, int]]] = {}
+    runs: dict[tuple[str, str], list[tuple[float, int, int, float]]] = {}
     hashes: dict[str, set[str]] = {}
     # one untimed run of each query per arm, in the arm's context: the
     # cold start (JIT, codegen, Python workers) lands here, not on
@@ -142,11 +145,15 @@ def measure(spark, arms, names: list[str], sf_dir: str, reps: int):
         for label, qs, context in arms if rep % 2 == 0 else arms[::-1]:
             with context():
                 for name in names:
-                    wall, rows, jobs, df = timed_run(spark, qs[name], sf_dir)
-                    runs.setdefault((name, label), []).append((wall, rows, jobs))
+                    wall, rows, jobs, df, build = timed_run(spark, qs[name], sf_dir)
+                    runs.setdefault((name, label), []).append((wall, rows, jobs, build))
                     if len(arms) > 1:
                         hashes.setdefault(name, set()).add(_hash_df(df))
-                    print(f"# rep {rep + 1} {label} {name}: {wall:.3f}s", file=sys.stderr, flush=True)
+                    print(
+                        f"# rep {rep + 1} {label} {name}: {wall:.3f}s (build {build:.3f}s)",
+                        file=sys.stderr,
+                        flush=True,
+                    )
     return runs, [name for name in names if len(hashes.get(name, ())) > 1]
 
 
@@ -156,12 +163,18 @@ def report(runs, labels: list[str], names: list[str], bad: list[str]) -> int:
     def walls(name, label):
         return [r[0] for r in runs[(name, label)]]
 
+    def build(name, label):
+        return min(r[3] for r in runs[(name, label)])
+
     if len(labels) == 1:
         (label,) = labels
         for name in names:
-            _, rows, jobs = runs[(name, label)][-1]
+            _, rows, jobs, _ = runs[(name, label)][-1]
             w = walls(name, label)
-            print(f"{name}: min {min(w):.3f}s  reps {[round(x, 3) for x in w]}  jobs {jobs}  rows {rows}")
+            print(
+                f"{name}: min {min(w):.3f}s  build {build(name, label):.3f}s  "
+                f"reps {[round(x, 3) for x in w]}  jobs {jobs}  rows {rows}"
+            )
         for name in names:
             print(f"| {name} | {min(walls(name, label)):.3f} |")
         return 0
@@ -171,6 +184,7 @@ def report(runs, labels: list[str], names: list[str], bad: list[str]) -> int:
         mark = f"{b.upper()}-WINS" if tb < ta * 0.95 else (f"{a.upper()}-WINS" if ta < tb * 0.95 else "tie")
         print(
             f"{name}: {a}={ta:.3f} {b}={tb:.3f} {mark} {'HASH-DIFF' if name in bad else 'HASH-EQ'}  "
+            f"build {build(name, a):.3f}/{build(name, b):.3f}s  "
             f"jobs {runs[(name, a)][-1][2]}/{runs[(name, b)][-1][2]}  "
             f"{a} reps {[round(x, 2) for x in walls(name, a)]} {b} reps {[round(x, 2) for x in walls(name, b)]}"
         )

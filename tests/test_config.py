@@ -90,6 +90,43 @@ def test_register_views_enables_spark_sql(spark, sf_dir):
     assert t == "timestamp"
 
 
+def _jobs_while(spark, what, fn):
+    """``fn()`` and the ids of the Spark jobs it started."""
+    sc = spark.sparkContext
+    group = f"jobs-{what}"
+    sc.setJobGroup(group, what)
+    try:
+        out = fn()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_load_table_infers_a_table_schema_once_per_session(spark, tmp_path):
+    """load_table memoizes each table's inferred schema per session,
+    keyed by its files: a second load of an unchanged table starts no
+    schema-inference job, and a file overwritten with another schema is
+    inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from bireme_spark.sources.tables import load_table
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    first, inferred = _jobs_while(spark, "first-load", lambda: load_table(spark, str(tmp_path), "t"))
+    again, built = _jobs_while(spark, "second-load", lambda: load_table(spark, str(tmp_path), "t"))
+    assert inferred and built == []
+    assert again.schema == first.schema
+    assert sorted(tuple(r) for r in again.collect()) == [(1, "x"), (2, "y")]
+
+    pq.write_table(pa.table({"a": [1.5], "c": [True]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.schema.simpleString() == "struct<a:double,c:boolean>"
+    assert [tuple(r) for r in df.collect()] == [(1.5, True)]
+
+
 def test_state_server_serves_listener_state():
     from bireme_spark.streaming.state_server import StateServer
     from bireme_spark.streaming.stats import PipelineStatListener

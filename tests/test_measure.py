@@ -42,10 +42,11 @@ def test_head_arm_matches_working_tree(spark, sf_dir, measure):
     ]
     runs, bad = measure.measure(spark, arms, [name], sf_dir, reps=1)
     assert bad == []
-    ((_, rows_old, _),) = runs[(name, "old")]
+    ((_, rows_old, _, _),) = runs[(name, "old")]
     for label in ("old", "new"):
-        ((wall, rows, jobs),) = runs[(name, label)]
+        ((wall, rows, jobs, build),) = runs[(name, label)]
         assert wall > 0 and rows == rows_old > 0 and jobs >= 1
+        assert 0 < build < wall
 
 
 def test_different_rows_are_a_mismatch(spark, sf_dir, measure, capsys):

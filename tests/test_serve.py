@@ -112,6 +112,28 @@ def test_serve_rejects_missing_schema(tmp_path):
     assert serve(str(cfg), _print=lambda *a, **k: None) == 2
 
 
+def test_serve_refuses_a_second_source_before_starting_spark(tmp_path, monkeypatch):
+    """A config listing two sources would sync the first and drop the
+    second; serve prints the error naming it and exits 2 before it
+    builds a Spark session."""
+    import bireme_spark.session
+    from bireme_spark.serve import serve
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("serve started Spark")
+
+    monkeypatch.setattr(bireme_spark.session, "get_spark", no_spark)
+    cfg = tmp_path / "config.properties"
+    cfg.write_text(
+        "data_source = mx, my\nmx.path = /tmp/x\nmy.path = /tmp/y\n"
+        f"target.dir = {tmp_path / 't'}\ncheckpoint.dir = {tmp_path / 'c'}\n"
+        "target.schema = k BIGINT, v STRING\ntarget.key = k\n"
+    )
+    printed: list[str] = []
+    assert serve(str(cfg), _print=lambda *a, **k: printed.append(" ".join(map(str, a)))) == 2
+    assert any("'my' would not be synced" in p for p in printed), printed
+
+
 def test_serve_multi_table_lifecycle(spark, tmp_path):
     """Multi-table serve: one config.properties + <source>.properties
     pair (the reference deployment shape) syncs TWO mapped tables out

@@ -716,6 +716,187 @@ def test_runners_route_before_parse_through_the_module_hooks(spark, tmp_path, mo
         }, name
 
 
+def test_a_warm_merge_batch_builds_its_plan_in_few_py4j_calls(spark, tmp_path):
+    """The route's parse, fold and merge build their Columns once per
+    route, not per batch: a warmed second batch of a five-column Maxwell
+    route makes at most 250 py4j round trips from its parse to its first
+    Spark job (about 1,180 when every batch rebuilt its plan)."""
+    import gc
+    import json
+    import threading
+    import time
+
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.sources.maxwell import maxwell_parser
+    from bireme_spark.streaming import pipeline as pl
+
+    schema = (
+        StructType().add("k", "long").add("a", "string").add("b", "double")
+        .add("c", "long").add("d", "string")
+    )
+    spec = pl.TableSpec(schema, ("k",), ("k", "a", "b", "c", "d"))
+    parse = maxwell_parser("value", schema, spec.key_fields, source="m")
+    step = pl._merge_step(4)
+    target = str(tmp_path / "t")
+    want: dict[int, tuple] = {}
+
+    def batch(batch_id, changes):
+        lines = []
+        for k, op, *old in changes:
+            row = (f"a{k}.{batch_id}", k / 2, k * batch_id, "d" * (k % 3))
+            env = {"database": "d", "table": "t", "type": op, "ts": batch_id + 1,
+                   "data": dict(zip(("k", "a", "b", "c", "d"), (k, *row)))}
+            if old:
+                env["old"] = {"k": old[0]}
+                want.pop(old[0], None)
+            if op == "delete":
+                want.pop(k, None)
+            else:
+                want[k] = row
+            lines.append((json.dumps(env), 0, len(lines)))
+        return spark.createDataFrame(lines, "value string, src_partition long, src_offset long")
+
+    step(parse(batch(0, [(k, "insert") for k in range(40)])), target, spec, 0)
+    raw = batch(1, [(k, "update") for k in range(10)] + [(20, "delete"), (50, "update", 30)])
+
+    sc = spark.sparkContext
+    client = sc._gateway._gateway_client
+    send = client.send_command
+    sent: list[float] = []
+    me = threading.get_ident()
+
+    def counting(*args, **kwargs):
+        if threading.get_ident() == me:  # not another thread's calls
+            sent.append(time.time())
+        return send(*args, **kwargs)
+
+    group = f"py4j-budget-{tmp_path.name}"
+    sc.setJobGroup(group, group)
+    gc.collect()
+    gc.disable()  # no collector-driven py4j object releases inside the count
+    client.send_command = counting
+    try:
+        step(parse(raw), target, spec, 1)
+    finally:
+        client.send_command = send
+        gc.enable()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    first_job = min(sc.statusTracker().getJobIdsForGroup(group))
+    started = sc._jsc.sc().statusStore().job(first_job).submissionTime().get().getTime() / 1000
+    calls = sum(t < started for t in sent)
+    assert 0 < calls <= 250, calls
+    got = {r.k: (r.a, r.b, r.c, r.d) for r in pl.read_state(spark, target).collect()}
+    assert got == want
+
+
+def test_tables_sharing_payload_names_keep_their_own_types(spark, tmp_path):
+    """Plan pieces built once are shared only where everything they
+    depend on is equal: one multi-table run maps two tables whose
+    payload columns share names but whose payload and key types differ.
+    Each target keeps its own types and equals the batch snapshot of
+    its own changelog."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.operators.cdc import snapshot
+    from bireme_spark.streaming.pipeline import TableSpec, read_state, run_multi_table_pipeline
+    from bireme_spark.streaming.replay import stamp_batch_mtime
+
+    # per table: (key, op, ts, v, w) changes in two batches
+    changes = {
+        "a": [
+            [(k, "insert", 100 + k, k * 1.5, f"a{k}") for k in range(6)],
+            [(1, "update", 200, 9.5, "a1b"), (2, "delete", 201, 3.0, "a2"),
+             (7, "insert", 202, 7.5, "a7")],
+        ],
+        "b": [
+            [(f"k{k}", "insert", 100 + k, k * 10, f"b{k}") for k in range(6)],
+            [("k3", "update", 200, 33, "b3b"), ("k0", "delete", 201, 0, "b0"),
+             ("k9", "insert", 202, 90, "b9")],
+        ],
+    }
+    src = tmp_path / "in"
+    src.mkdir()
+    seen: set[str] = set()
+    for i in range(2):
+        lines = [
+            json.dumps({"database": "d", "table": t, "type": op, "ts": ts,
+                        "data": {"k": k, "v": v, "w": w}})
+            for t in ("a", "b")
+            for k, op, ts, v, w in changes[t][i]
+        ]
+        (src / f"b{i}.txt").write_text("\n".join(lines))
+        stamp_batch_mtime(str(src), i, seen)
+
+    cfg = PipelineConfig(
+        sources=[SourceConfig(name="m", kind="file", path=str(src),
+                              table_map={"m.d.a": "a", "m.d.b": "b"})],
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_events_per_trigger=1,
+        num_buckets=2,
+    )
+    types = {"a": ("long", "double"), "b": ("string", "long")}
+    specs = {
+        t: TableSpec(
+            StructType().add("k", kt).add("v", vt).add("w", "string"), ("k",), ("k", "v", "w")
+        )
+        for t, (kt, vt) in types.items()
+    }
+    run_multi_table_pipeline(spark, cfg, specs, available_now=True).awaitTermination(120)
+
+    for t, (kt, vt) in types.items():
+        state = read_state(spark, f"{cfg.target_dir}/{t}")
+        assert state.schema.simpleString() == specs[t].data_schema.simpleString(), t
+        log = spark.createDataFrame(
+            [(str(k), {"insert": "I", "update": "U", "delete": "D"}[op], ts, 0, v, w)
+             for batch in changes[t] for k, op, ts, v, w in batch],
+            f"key string, op string, ts long, seq long, v {vt}, w string",
+        )
+        want = snapshot(log, ("key",), ("ts", "seq"), payload_cols=("v", "w"))
+        assert {(str(r.k), r.v, r.w) for r in state.collect()} == {
+            (r.key, r.v, r.w) for r in want.collect()
+        }, t
+
+
+def test_a_config_with_two_sources_is_refused(spark, tmp_path):
+    """One pipeline syncs one source: a config that lists two is
+    refused by every runner, naming the source that would go unsynced,
+    and no streaming query starts."""
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.streaming import pipeline as pl
+
+    cfg = PipelineConfig(
+        sources=[SourceConfig(name="m1", kind="file", path=str(tmp_path / "in1"),
+                              table_map={"m1.d.t": "t"}),
+                 SourceConfig(name="m2", kind="file", path=str(tmp_path / "in2"),
+                              table_map={"m2.d.t": "t"})],
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    for name in ("in1", "in2"):
+        (tmp_path / name).mkdir()
+    schema = StructType().add("k", "long").add("v", "double")
+    runs = [
+        lambda: pl.run_cdc_pipeline(spark, cfg, schema, ("k",), ("k", "v"), available_now=True),
+        lambda: pl.run_multi_table_pipeline(
+            spark, cfg, {"t": pl.TableSpec(schema, ("k",), ("k", "v"))}, available_now=True
+        ),
+        lambda: pl.run_scd2_pipeline(spark, cfg, schema, ("k",), available_now=True),
+    ]
+    active = len(spark.streams.active)
+    for run in runs:
+        with pytest.raises(ValueError, match="'m2' would not be synced"):
+            run()
+    assert len(spark.streams.active) == active
+
+
 @pytest.mark.slow
 def test_same_timestamp_fold_is_deterministic(spark, tmp_path):
     """Two same-key changes in one batch with the SAME seconds-level
