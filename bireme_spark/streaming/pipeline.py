@@ -46,15 +46,14 @@ one DELETE+COPY per LoadTask:
        committed (or the batch fails), so a sync that runs without end
        holds no storage from past batches.
 
-Built once, applied per batch: each route's parse and routing filter
-(in ``_run``), its fold and delta shaping (``_compact_parsed`` and
-``_merge_compacted_versioned``, memoized per SparkContext and per
-everything their Columns depend on — payload names, whether the parse
-carries an ``old_key``, the table's schema, key, base columns and
-bucket count), and the SCD2 step's Columns (in ``run_scd2_pipeline``).
-Per batch the driver only applies DataFrame operations to the batch —
-a Column costs several py4j round trips to build, and building the
-plan per batch had cost ~1,180 of them before the first job.
+Built once, applied per batch, in one place: at query start ``_run``
+builds each route's routing filter and parse, and the entry point's
+step for the route (``make_step``) builds its Columns — the fold and
+delta shaping of the latest-state step, the fold of the JDBC step, the
+version fold and closing Columns of the SCD2 step. Per batch the driver
+only applies DataFrame operations to the batch — a Column costs several
+py4j round trips to build, and building the plan per batch had cost
+~1,180 of them before the first job.
 
 The manifest is read once per table and batch; that snapshot is what
 the batch is computed against and staged on. A batch with no rows for
@@ -79,8 +78,7 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 from contextlib import contextmanager
-from typing import NamedTuple, TypeVar
-from weakref import WeakKeyDictionary
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -231,21 +229,6 @@ def _checkpointed(frame: DataFrame, observed: tuple[Column, Column]):
         _release_checkpoint(frame)
 
 
-# Plan pieces (Columns) reused by every micro-batch; see _once
-_built: WeakKeyDictionary = WeakKeyDictionary()
-T = TypeVar("T")
-
-
-def _once(spark: SparkSession, key: tuple, build: Callable[[], T]) -> T:
-    """``build()``, memoized per SparkContext and ``key``. ``key`` names
-    everything the piece depends on; keyed by the context, a piece (its
-    Columns hold JVM objects) never outlives its JVM."""
-    memo = _built.setdefault(spark.sparkContext, {})
-    if key not in memo:
-        memo[key] = build()
-    return memo[key]
-
-
 def _changes(payload_cols: Sequence[str], *extra: Column) -> list[Column]:
     """The select list that makes a parsed batch fold input: key, op,
     the order columns, any ``extra`` columns, then the payload."""
@@ -262,40 +245,45 @@ def _changes(payload_cols: Sequence[str], *extra: Column) -> list[Column]:
     ]
 
 
-def _compact_parsed(batch_df: DataFrame, payload_cols: Sequence[str]) -> DataFrame:
-    """Parsed ChangeRow micro-batch → compacted delete/insert sets
-    (the per-batch RowBatchMerger fold, shared by every sink). The fold
-    is built once per payload and parser shape (whether the parse
-    carries an ``old_key``); its Columns name columns and never type
-    them, so tables whose payloads share names share it."""
-    payload_cols = tuple(payload_cols)
-    old_key = "old_key" if "old_key" in batch_df.columns else None
+def _fold(payload_cols: Sequence[str], carries_old_key: bool) -> Callable[[DataFrame], DataFrame]:
+    """A route's fold: parsed ChangeRow micro-batch → compacted
+    delete/insert sets (the per-batch RowBatchMerger fold, shared by
+    every sink). ``carries_old_key``: the parse has an ``old_key``
+    column (a key-changing update also deletes its old key)."""
+    old_key = "old_key" if carries_old_key else None
+    changes = _changes(payload_cols, *([F.col(old_key)] if old_key else []))
+    fold = compactor(("key",), _ORDER, "op", payload_cols, old_key)
+    return lambda parsed: fold(parsed.select(*changes))
 
-    def build() -> Callable[[DataFrame], DataFrame]:
-        changes = _changes(payload_cols, *([F.col(old_key)] if old_key else []))
-        fold = compactor(("key",), _ORDER, "op", payload_cols, old_key)
-        return lambda parsed: fold(parsed.select(*changes))
 
-    return _once(batch_df.sparkSession, ("compact", payload_cols, old_key), build)(batch_df)
+def _compact_parsed(parsed: DataFrame, fold: Callable[[DataFrame], DataFrame]) -> DataFrame:
+    """``parsed`` compacted by the route's ``fold`` (``_fold``): a
+    module global, so a wrapper bound here sees every table's
+    compaction."""
+    return fold(parsed)
 
 
 class _DeltaStep(NamedTuple):
-    """The built-once half of ``_merge_compacted_versioned``."""
+    """A route's built-once half of ``_merge_compacted_versioned``."""
 
     keys: tuple[str, ...]
-    ddl: str  # the base columns, for a target with no bucket yet
     shape: Callable[[DataFrame], DataFrame]  # compacted batch → delta rows
     fold: Callable[[DataFrame, DataFrame], DataFrame]  # (committed, batch) → delta′
     observed: tuple[Column, Column]
 
 
-def _delta_step(
-    data_schema: StructType, key_fields: Sequence[str], base_columns: Sequence[str], nb: int
-) -> _DeltaStep:
-    types = {f.name: f.dataType.simpleString() for f in data_schema.fields}
+def _delta_step(spec: TableSpec, nb: int) -> _DeltaStep:
+    """The delta shaping of ``spec``'s table into ``nb`` buckets. The
+    first ``len(key_fields)`` base columns are the key — the batch
+    carries it as the joined ``key`` string (``KEY_SEP`` between the
+    parts), split back into typed parts here — then the payload,
+    ``in_insert`` and ``_sb``, which hashes the typed key exactly as the
+    base's rows do."""
+    types = {f.name: f.dataType.simpleString() for f in spec.data_schema.fields}
     # key column of the base table keeps the parsed-string key type
-    types = {c: types.get(c, "string") for c in base_columns}
-    keys, payload = tuple(base_columns[: len(key_fields)]), base_columns[len(key_fields) :]
+    types = {c: types.get(c, "string") for c in spec.base_columns}
+    n = len(spec.key_fields)
+    keys, payload = spec.base_columns[:n], spec.base_columns[n:]
     if len(keys) == 1:
         typed = [F.col("key").cast(types[keys[0]])]
         sb = bucket_col(typed[0], nb)
@@ -322,7 +310,6 @@ def _delta_step(
 
     return _DeltaStep(
         keys,
-        ", ".join(f"{c} {types[c]}" for c in base_columns),
         lambda compacted: compacted.select(*shaped),
         fold,
         _observed(F.col("_sb"), F.col("_fresh")),
@@ -330,32 +317,20 @@ def _delta_step(
 
 
 def _merge_compacted_versioned(
-    bspark: SparkSession,
-    target_dir: str,
-    compacted: DataFrame,
-    data_schema: StructType,
-    key_fields: Sequence[str],
-    base_columns: Sequence[str],
-    nb: int,
-    batch_id: int,
+    target_dir: str, compacted: DataFrame, step: _DeltaStep, *, batch_id: int
 ) -> None:
     """Commit one table's compacted batch into its bucket-versioned
     parquet state: one fold, one file written per delta or bucket
     version, one atomic manifest commit.
 
-    The batch becomes delta rows in the base's shape: the first
-    ``len(key_fields)`` base columns are the key — the batch carries it
-    as the joined ``key`` string (``KEY_SEP`` between the parts), split
-    back into typed parts here — then the payload, ``in_insert`` and
-    ``_sb``, which hashes the typed key exactly as the base's rows do.
-    delta′ (the committed delta without the batch's keys, plus the
-    batch; one aggregation over their union, so the batch's fold runs
-    once) is checkpointed; then the batch appends delta′ as the next
-    delta, or folds it into delta′'s buckets (``versioned.appends``
-    decides from the files on disk). The Columns are built once per
-    table shape and bucket count."""
-    key = ("delta", data_schema, tuple(key_fields), tuple(base_columns), nb)
-    step = _once(bspark, key, lambda: _delta_step(data_schema, key_fields, base_columns, nb))
+    The route's ``step`` (``_delta_step``) shapes the batch into delta
+    rows in the base's shape. delta′ (the committed delta without the
+    batch's keys, plus the batch; one aggregation over their union, so
+    the batch's fold runs once) is checkpointed; then the batch appends
+    delta′ as the next delta, or folds it into delta′'s buckets
+    (``versioned.appends`` decides from the files on disk). A fold into
+    buckets with no committed version yet writes delta′'s live rows."""
+    bspark = compacted.sparkSession
     delta = step.shape(compacted)
     snap = versioned.snapshot(target_dir)
     committed = versioned.read_delta(bspark, target_dir, snap.versions)
@@ -370,8 +345,9 @@ def _merge_compacted_versioned(
             return
         base = versioned.read_base(bspark, target_dir, snap.versions, changed)
         if base is None:
-            base = bspark.createDataFrame([], f"{step.ddl}, _sb int")
-        merged = versioned.apply_delta(base, delta, step.keys)
+            merged = delta.where(versioned.LIVE).drop(versioned.LIVE)
+        else:
+            merged = versioned.apply_delta(base, delta, step.keys)
         _write_changed_buckets(bspark, target_dir, merged, changed, batch_id, snap, keys=step.keys)
 
 
@@ -396,7 +372,7 @@ def _run(
     spark: SparkSession,
     config: PipelineConfig,
     routes: Sequence[tuple[str, Sequence[str] | None, TableSpec]],
-    apply: Callable[[DataFrame, str, TableSpec, int], None],
+    make_step: Callable[[str, TableSpec, bool], Callable[[DataFrame, int], None]],
     available_now: bool,
 ):
     """The one streaming runner behind every entry point: ONE query per
@@ -414,19 +390,22 @@ def _run(
     (``"<source>.<database>.<table>"``), ``None`` takes every row. Rows
     of unmapped tables are never parsed, which is exactly bireme's
     filter() semantics. Each route's parsed rows go to
-    ``apply(parsed, target_dir, spec, batch_id)``, the entry point's
-    per-table step; it commits through an idempotent sink, so the
-    batch may replay after a crash before Spark's checkpoint commit.
+    ``apply(parsed, batch_id)``, the step the entry point's
+    ``make_step(target_dir, spec, carries_old_key)`` builds for the
+    route at query start (``carries_old_key``: the parse has an
+    ``old_key`` column, as Maxwell's does and Debezium's does not). A
+    step commits through an idempotent sink, so the batch may replay
+    after a crash before Spark's checkpoint commit.
 
     A config that lists more than one source is refused (``ValueError``,
     see ``single_source``): one query syncs one source.
     """
     source = single_source(config)
     if source.kind == "debezium":
-        parser = debezium_parser
+        parser, carries_old_key = debezium_parser, False
         db_path, tbl_path = "$.payload.source.db", "$.payload.source.table"
     else:
-        parser = maxwell_parser
+        parser, carries_old_key = maxwell_parser, True
         db_path, tbl_path = "$.database", "$.table"
 
     def router(origins, spec):
@@ -445,9 +424,12 @@ def _run(
             cond = c if cond is None else cond | c
         return lambda rows: parse(rows.where(cond))
 
-    # built once, not per batch: building a parse costs hundreds of
-    # py4j round trips
-    routed = [(target_dir, spec, router(origins, spec)) for target_dir, origins, spec in routes]
+    # built once, not per batch: building a route's parse and step
+    # costs hundreds of py4j round trips
+    routed = [
+        (router(origins, spec), make_step(target_dir, spec, carries_old_key))
+        for target_dir, origins, spec in routes
+    ]
 
     def run_batch(batch_df: DataFrame, batch_id: int) -> None:
         # persist: every route re-reads the micro-batch — uncached, each
@@ -456,8 +438,8 @@ def _run(
         # within the batch.
         batch_df = batch_df.persist()
         try:
-            for target_dir, spec, route in routed:
-                apply(route(batch_df), target_dir, spec, batch_id)
+            for route, apply in routed:
+                apply(route(batch_df), batch_id)
         finally:
             batch_df.unpersist()
 
@@ -496,23 +478,84 @@ def _single_route(config: PipelineConfig, spec: TableSpec):
 
 
 def _merge_step(nb: int):
-    """The latest-state apply step: compact the batch, then the
-    DELETE+COPY merge into the table's bucket-versioned state."""
+    """The latest-state step factory (see ``_run``): compact the batch,
+    then the DELETE+COPY merge into the table's bucket-versioned state
+    of ``nb`` buckets."""
 
-    def apply(parsed: DataFrame, target_dir: str, spec: TableSpec, batch_id: int) -> None:
-        compacted = _compact_parsed(parsed, spec.payload_cols)
-        _merge_compacted_versioned(
-            parsed.sparkSession,
-            target_dir,
-            compacted,
-            spec.data_schema,
-            spec.key_fields,
-            spec.base_columns,
-            nb,
-            batch_id,
+    def make(target_dir: str, spec: TableSpec, carries_old_key: bool):
+        fold = _fold(spec.payload_cols, carries_old_key)
+        step = _delta_step(spec, nb)
+
+        def apply(parsed: DataFrame, batch_id: int) -> None:
+            compacted = _compact_parsed(parsed, fold)
+            _merge_compacted_versioned(target_dir, compacted, step, batch_id=batch_id)
+
+        return apply
+
+    return make
+
+
+def _scd2_step(nb: int):
+    """The SCD2 step factory (see ``_run``): append the batch's version
+    rows and close the open versions of the keys it touches, in the
+    history's ``nb`` buckets. The history has no old-key deletes."""
+
+    def make(target_dir: str, spec: TableSpec, _carries_old_key: bool):
+        payload_cols = spec.payload_cols
+        changes_cols = _changes(payload_cols)
+        observed = _observed(bucket_col("key", nb), F.lit(True))
+        history = scd2_versioner(("key",), _ORDER, "op", payload_cols)
+        first_ts = F.min("produce_time_ms").alias("first_ts")
+        # Close the open version of every touched key at the batch's
+        # first change time; untouched keys in the bucket pass through.
+        # RETRY IDEMPOTENCY (the post-manifest-commit, pre-checkpoint-
+        # commit window: Structured Streaming re-runs the batch against
+        # state that already contains it):
+        #  * only close versions that OPENED BEFORE this batch
+        #    (valid_from < first_ts) — a replay sees the batch's own
+        #    open version (valid_from ≥ first_ts) and leaves it alone;
+        #  * anti-join the batch's version rows against the base on the
+        #    SCD2 version identity (key, valid_from) so already-applied
+        #    rows are not appended twice.
+        closing = (
+            F.col("is_current")
+            & F.col("first_ts").isNotNull()
+            & (F.col("valid_from") < F.col("first_ts"))
         )
+        closed_cols = [
+            F.col("key"),
+            *[F.col(c) for c in payload_cols],
+            F.col("valid_from"),
+            F.when(closing, F.col("first_ts")).otherwise(F.col("valid_to")).alias("valid_to"),
+            (F.col("is_current") & (F.col("first_ts").isNull() | ~closing)).alias("is_current"),
+        ]
+        version_id = [F.col("key"), F.col("valid_from")]
+        sb = bucket_col("key", nb).alias("_sb")
 
-    return apply
+        def merge(base: DataFrame | None, changes: DataFrame) -> DataFrame:
+            rows = history(changes)
+            if base is not None:  # else the history's first versions in these buckets
+                firsts = changes.groupBy("key").agg(first_ts)
+                closed = base.join(firsts, "key", "left").select(*closed_cols)
+                fresh = rows.join(base.select(*version_id), ["key", "valid_from"], "left_anti")
+                rows = closed.unionByName(fresh)
+            return rows.select("*", sb)
+
+        def apply(parsed: DataFrame, batch_id: int) -> None:
+            # the version fold, the first-change agg and the retry
+            # anti-join all read the checkpointed batch: parse it once
+            bspark = parsed.sparkSession
+            snap = versioned.snapshot(target_dir)
+            with _checkpointed(parsed.select(*changes_cols), observed) as (changes, changed):
+                if not changed:
+                    return
+                base = versioned.read_base(bspark, target_dir, snap.versions, changed)
+                rows = merge(None if base is None else base.drop("_sb"), changes)
+                _write_changed_buckets(bspark, target_dir, rows, changed, batch_id, snap=snap)
+
+        return apply
+
+    return make
 
 
 def run_cdc_pipeline(
@@ -543,13 +586,18 @@ def run_cdc_pipeline(
             properties=config.jdbc_properties,
         )
 
-        def apply(parsed: DataFrame, _target_dir: str, _spec: TableSpec, batch_id: int) -> None:
-            compacted = _compact_parsed(parsed, spec.payload_cols)
-            sink(compacted.withColumnRenamed("final_op", "op"), batch_id)
+        def make_step(_target_dir: str, spec: TableSpec, carries_old_key: bool):
+            fold = _fold(spec.payload_cols, carries_old_key)
+
+            def apply(parsed: DataFrame, batch_id: int) -> None:
+                compacted = _compact_parsed(parsed, fold)
+                sink(compacted.withColumnRenamed("final_op", "op"), batch_id)
+
+            return apply
 
     else:
-        apply = _merge_step(config.num_buckets)
-    return _run(spark, config, _single_route(config, spec), apply, available_now)
+        make_step = _merge_step(config.num_buckets)
+    return _run(spark, config, _single_route(config, spec), make_step, available_now)
 
 
 def run_multi_table_pipeline(
@@ -601,61 +649,5 @@ def run_scd2_pipeline(
     """
     # the history layout (key, payload, validity) is fixed: no base columns
     spec = TableSpec(data_schema, key_fields, ())
-    payload_cols = spec.payload_cols
-    nb = config.num_buckets
-    hist_schema = (
-        "key string, "
-        + ", ".join(f"{c} {data_schema[c].dataType.simpleString()}" for c in payload_cols)
-        + ", valid_from long, valid_to long, is_current boolean"
-    )
-    # built once, applied per batch
-    changes_cols = _changes(payload_cols)
-    observed = _observed(bucket_col("key", nb), F.lit(True))
-    history = scd2_versioner(("key",), _ORDER, "op", payload_cols)
-    first_ts = F.min("produce_time_ms").alias("first_ts")
-    # Close the open version of every touched key at the batch's first
-    # change time; untouched keys in the bucket pass through.
-    # RETRY IDEMPOTENCY (the post-manifest-commit, pre-checkpoint-commit
-    # window: Structured Streaming re-runs the batch against state that
-    # already contains it):
-    #  * only close versions that OPENED BEFORE this batch
-    #    (valid_from < first_ts) — a replay sees the batch's own open
-    #    version (valid_from ≥ first_ts) and leaves it alone;
-    #  * anti-join the batch's version rows against the base on the
-    #    SCD2 version identity (key, valid_from) so already-applied rows
-    #    are not appended twice.
-    closing = (
-        F.col("is_current")
-        & F.col("first_ts").isNotNull()
-        & (F.col("valid_from") < F.col("first_ts"))
-    )
-    closed_cols = [
-        F.col("key"),
-        *[F.col(c) for c in payload_cols],
-        F.col("valid_from"),
-        F.when(closing, F.col("first_ts")).otherwise(F.col("valid_to")).alias("valid_to"),
-        (F.col("is_current") & (F.col("first_ts").isNull() | ~closing)).alias("is_current"),
-    ]
-    version_id = [F.col("key"), F.col("valid_from")]
-    sb = bucket_col("key", nb).alias("_sb")
-
-    def merge(base: DataFrame, changes: DataFrame) -> DataFrame:
-        firsts = changes.groupBy("key").agg(first_ts)
-        closed = base.join(firsts, "key", "left").select(*closed_cols)
-        fresh = history(changes).join(base.select(*version_id), ["key", "valid_from"], "left_anti")
-        return closed.unionByName(fresh).select("*", sb)
-
-    def apply(parsed: DataFrame, target_dir: str, _spec: TableSpec, batch_id: int) -> None:
-        # the version fold, the first-change agg and the retry
-        # anti-join all read the checkpointed batch: parse it once
-        bspark = parsed.sparkSession
-        snap = versioned.snapshot(target_dir)
-        with _checkpointed(parsed.select(*changes_cols), observed) as (changes, changed):
-            if not changed:
-                return
-            base = versioned.read_base(bspark, target_dir, snap.versions, changed)
-            base = bspark.createDataFrame([], hist_schema) if base is None else base.drop("_sb")
-            rows = merge(base, changes)
-            _write_changed_buckets(bspark, target_dir, rows, changed, batch_id, snap=snap)
-
-    return _run(spark, config, _single_route(config, spec), apply, available_now)
+    make_step = _scd2_step(config.num_buckets)
+    return _run(spark, config, _single_route(config, spec), make_step, available_now)

@@ -234,10 +234,8 @@ def _merge_changes(spark, target, batch_id, changes, nb=4):
             env["old"] = {"k": old[0]}
         lines.append((json.dumps(env), 0, i))
     raw = spark.createDataFrame(lines, "value string, src_partition long, src_offset long")
-    compacted = pl._compact_parsed(parse_maxwell(raw, "value", schema, ("k",)), ["price"])
-    pl._merge_compacted_versioned(
-        spark, target, compacted, schema, ("k",), ("k", "price"), nb, batch_id
-    )
+    step = pl._merge_step(nb)(target, pl.TableSpec(schema, ("k",), ("k", "price")), True)
+    step(parse_maxwell(raw, "value", schema, ("k",)), batch_id)
 
 
 def _state(spark, target) -> set:
@@ -363,7 +361,8 @@ def test_sync_that_appends_and_folds_equals_the_batch_snapshot(spark, tmp_path):
     raw = spark.read.text(str(src)).select(
         "value", F.lit(0).cast("long").alias("src_partition"), F.lit(None).cast("long").alias("src_offset")
     )
-    batch = pl._compact_parsed(parse_maxwell(raw, "value", schema, ("k",)), ["price"])
+    parsed = parse_maxwell(raw, "value", schema, ("k",))
+    batch = pl._compact_parsed(parsed, pl._fold(["price"], True))
     want = {(int(r.key), r.price) for r in batch.where("in_insert").collect()}
     assert (1000, 2.0) in want and 1005 in {k for k, _ in want} and 5 not in {k for k, _ in want}
     assert _state(spark, cfg.target_dir) == want
@@ -555,6 +554,7 @@ def test_merge_releases_its_batch_checkpoint(spark, tmp_path):
 
     schema = StructType().add("k", "long").add("price", "double")
     target = str(tmp_path / "target")
+    step = pl._merge_step(4)(target, pl.TableSpec(schema, ("k",), ("k", "price")), True)
 
     def merge(batch_id, changes):
         raw = spark.createDataFrame(
@@ -565,10 +565,7 @@ def test_merge_releases_its_batch_checkpoint(spark, tmp_path):
             ],
             "value string, src_partition long, src_offset long",
         )
-        compacted = pl._compact_parsed(parse_maxwell(raw, "value", schema, ("k",)), ["price"])
-        pl._merge_compacted_versioned(
-            spark, target, compacted, schema, ("k",), ("k", "price"), 4, batch_id
-        )
+        step(parse_maxwell(raw, "value", schema, ("k",)), batch_id)
 
     before = _persistent_rdd_ids(spark)
     merge(0, [(k, "insert") for k in range(20)])
@@ -678,7 +675,11 @@ def test_runners_route_before_parse_through_the_module_hooks(spark, tmp_path, mo
     calls: dict[str, list] = {}
     for name, pos in batch_arg.items():
         def counting(*args, _orig=getattr(pl, name), _name=name, _pos=pos, **kw):
-            calls[_name].append(None if _pos is None else args[_pos])
+            # the batch id where perfbench's tracer reads it
+            if _pos is None:
+                calls[_name].append(None)
+            else:
+                calls[_name].append(args[_pos] if len(args) > _pos else kw["batch_id"])
             return _orig(*args, **kw)
 
         monkeypatch.setattr(pl, name, counting)
@@ -720,7 +721,8 @@ def test_a_warm_merge_batch_builds_its_plan_in_few_py4j_calls(spark, tmp_path):
     """The route's parse, fold and merge build their Columns once per
     route, not per batch: a warmed second batch of a five-column Maxwell
     route makes at most 250 py4j round trips from its parse to its first
-    Spark job (about 1,180 when every batch rebuilt its plan)."""
+    Spark job (about 1,180 when every batch rebuilt its plan), through
+    the latest-state step and through the SCD2 step alike."""
     import gc
     import json
     import threading
@@ -737,8 +739,6 @@ def test_a_warm_merge_batch_builds_its_plan_in_few_py4j_calls(spark, tmp_path):
     )
     spec = pl.TableSpec(schema, ("k",), ("k", "a", "b", "c", "d"))
     parse = maxwell_parser("value", schema, spec.key_fields, source="m")
-    step = pl._merge_step(4)
-    target = str(tmp_path / "t")
     want: dict[int, tuple] = {}
 
     def batch(batch_id, changes):
@@ -757,44 +757,58 @@ def test_a_warm_merge_batch_builds_its_plan_in_few_py4j_calls(spark, tmp_path):
             lines.append((json.dumps(env), 0, len(lines)))
         return spark.createDataFrame(lines, "value string, src_partition long, src_offset long")
 
-    step(parse(batch(0, [(k, "insert") for k in range(40)])), target, spec, 0)
+    first = batch(0, [(k, "insert") for k in range(40)])
+    row30 = want[30]
     raw = batch(1, [(k, "update") for k in range(10)] + [(20, "delete"), (50, "update", 30)])
 
     sc = spark.sparkContext
     client = sc._gateway._gateway_client
     send = client.send_command
-    sent: list[float] = []
     me = threading.get_ident()
 
-    def counting(*args, **kwargs):
-        if threading.get_ident() == me:  # not another thread's calls
-            sent.append(time.time())
-        return send(*args, **kwargs)
+    def calls_before_first_job(step, name) -> int:
+        """py4j round trips of ``step(parse(raw), 1)`` before its first job."""
+        sent: list[float] = []
 
-    group = f"py4j-budget-{tmp_path.name}"
-    sc.setJobGroup(group, group)
-    gc.collect()
-    gc.disable()  # no collector-driven py4j object releases inside the count
-    client.send_command = counting
-    try:
-        step(parse(raw), target, spec, 1)
-    finally:
-        client.send_command = send
-        gc.enable()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    first_job = min(sc.statusTracker().getJobIdsForGroup(group))
-    started = sc._jsc.sc().statusStore().job(first_job).submissionTime().get().getTime() / 1000
-    calls = sum(t < started for t in sent)
-    assert 0 < calls <= 250, calls
-    got = {r.k: (r.a, r.b, r.c, r.d) for r in pl.read_state(spark, target).collect()}
-    assert got == want
+        def counting(*args, **kwargs):
+            if threading.get_ident() == me:  # not another thread's calls
+                sent.append(time.time())
+            return send(*args, **kwargs)
+
+        group = f"py4j-budget-{name}-{tmp_path.name}"
+        sc.setJobGroup(group, group)
+        gc.collect()
+        gc.disable()  # no collector-driven py4j object releases inside the count
+        client.send_command = counting
+        try:
+            step(parse(raw), 1)
+        finally:
+            client.send_command = send
+            gc.enable()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        first_job = min(sc.statusTracker().getJobIdsForGroup(group))
+        started = sc._jsc.sc().statusStore().job(first_job).submissionTime().get().getTime()
+        return sum(t < started / 1000 for t in sent)
+
+    steps = {"merge": pl._merge_step(4), "scd2": pl._scd2_step(4)}
+    for name, make_step in steps.items():
+        step = make_step(str(tmp_path / name), spec, True)
+        step(parse(first), 0)
+        calls = calls_before_first_job(step, name)
+        assert 0 < calls <= 250, (name, calls)
+
+    state = pl.read_state(spark, str(tmp_path / "merge"))
+    assert {r.k: (r.a, r.b, r.c, r.d) for r in state.collect()} == want
+    # the history has no old-key deletes: key 30 keeps its open version
+    history = pl.read_state(spark, str(tmp_path / "scd2")).where("is_current")
+    assert {int(r.key): (r.a, r.b, r.c, r.d) for r in history.collect()} == {**want, 30: row30}
 
 
 def test_tables_sharing_payload_names_keep_their_own_types(spark, tmp_path):
-    """Plan pieces built once are shared only where everything they
-    depend on is equal: one multi-table run maps two tables whose
-    payload columns share names but whose payload and key types differ.
+    """Each route builds its own plan pieces: one multi-table run maps
+    two tables whose payload columns share names but whose payload and
+    key types differ.
     Each target keeps its own types and equals the batch snapshot of
     its own changelog."""
     import json
@@ -1473,9 +1487,8 @@ def test_crash_after_sink_commit_resumes_and_stays_idempotent(spark, tmp_path, m
     real_merge = pl._merge_compacted_versioned
     merged_batches: list[int] = []
 
-    def crash_after_commit(bspark, target_dir, compacted, *args):
-        batch_id = args[-1]
-        real_merge(bspark, target_dir, compacted, *args)
+    def crash_after_commit(*args, batch_id):
+        real_merge(*args, batch_id=batch_id)
         merged_batches.append(batch_id)
         if batch_id == 1:
             raise RuntimeError("simulated crash after sink commit of batch 1")
@@ -1738,8 +1751,9 @@ def test_kafka_fake_drives_cdc_merge_end_to_end(spark, tmp_path):
     def apply_batches(src, target, first_batch_id, max_batches=None):
         """The foreachBatch body, driven by fake pulls: pulled rows →
         the kafka-shape frame `_open_stream` emits → parse_maxwell →
-        _compact_parsed → _merge_compacted_versioned."""
+        the route's latest-state step."""
         batch_id = first_batch_id
+        step = pl._merge_step(4)(target, pl.TableSpec(schema, ("k",), ("k", "price")), True)
         while max_batches is None or batch_id - first_batch_id < max_batches:
             recs = src.pull_batch()
             if not recs:
@@ -1749,11 +1763,7 @@ def test_kafka_fake_drives_cdc_merge_end_to_end(spark, tmp_path):
                 [(v, p, o) for p, o, v in recs],
                 "value string, src_partition long, src_offset long",
             )
-            parsed = parse_maxwell(raw, "value", schema, ("k",))
-            compacted = pl._compact_parsed(parsed, ["price"])
-            pl._merge_compacted_versioned(
-                spark, target, compacted, schema, ("k",), ("k", "price"), 4, batch_id
-            )
+            step(parse_maxwell(raw, "value", schema, ("k",)), batch_id)
             batch_id += 1
         return batch_id
 
