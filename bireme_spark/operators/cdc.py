@@ -49,6 +49,35 @@ def _ord_struct(order_cols: Sequence[str]):
     return F.struct(*[F.col(c) for c in order_cols])
 
 
+def old_key_deleter(
+    key_cols: Sequence[str],
+    order_cols: Sequence[str],
+    op_col: str,
+    payload_cols: Sequence[str],
+    old_key_col: str | None,
+) -> Callable[[DataFrame], DataFrame]:
+    """A PK-changing UPDATE as bireme folds it (``RowCache.java:194-205``):
+    delete the old key, then write the new one. Each change row yields
+    itself and, when its ``old_key_col`` is set, a synthetic DELETE of
+    that old key with the row's order and payload columns — so in the
+    old key's order it lands where the UPDATE does. One generator over
+    one scan of the batch, no union; the frame returned has the key,
+    op, order and payload columns. With ``old_key_col`` None the
+    changes pass through."""
+    if old_key_col is None:
+        return lambda changes: changes
+    key = key_cols[0]
+    pk = F.posexplode(F.array(F.col(key), F.col(old_key_col))).alias("_syn", "_pk")
+    synthetic = F.col("_syn") == 1
+    kept = ~synthetic | F.col("_pk").isNotNull()
+    out = [
+        F.col("_pk").alias(key),
+        F.when(synthetic, F.lit(OP_DELETE)).otherwise(F.col(op_col)).alias(op_col),
+        *[F.col(c) for c in (*key_cols[1:], *order_cols, *payload_cols)],
+    ]
+    return lambda changes: changes.select("*", pk).where(kept).select(*out)
+
+
 def compactor(
     key_cols: Sequence[str],
     order_cols: Sequence[str],
@@ -61,16 +90,7 @@ def compactor(
     (hundreds of py4j round trips) only once."""
     key_cols = list(key_cols)
     op = F.col(op_col)
-    group: list[Column | str] = list(key_cols)
-    if old_key_col is not None:
-        # one pass over the batch: each row yields itself and, when its
-        # update changed the PK, a synthetic DELETE of the old key,
-        # ordered just before the UPDATE row itself (same order cols)
-        pk = F.posexplode(F.array(F.col(key_cols[0]), F.col(old_key_col))).alias("_syn", "_pk")
-        synthetic = F.col("_syn") == 1
-        kept = ~synthetic | F.col("_pk").isNotNull()
-        op = F.when(synthetic, F.lit(OP_DELETE)).otherwise(op)
-        group[0] = F.col("_pk").alias(key_cols[0])
+    expand = old_key_deleter(key_cols, order_cols, op_col, payload_cols, old_key_col)
     aggs = [
         F.max_by(
             F.struct(op.alias("_op"), *[F.col(c).alias(c) for c in payload_cols]),
@@ -90,9 +110,7 @@ def compactor(
     ]
 
     def fold(changes: DataFrame) -> DataFrame:
-        if old_key_col is not None:
-            changes = changes.select("*", pk).where(kept)
-        return changes.groupBy(*group).agg(*aggs).select(*out)
+        return expand(changes).groupBy(*key_cols).agg(*aggs).select(*out)
 
     return fold
 
@@ -115,7 +133,7 @@ def compact(
     ``old_key_col``: when an UPDATE changes the PK, bireme deletes the
     old key and inserts the new one (``RowCache.java:194-205``). Each
     such row also yields a synthetic delete of its old key before
-    folding — a generator over one scan of the batch.
+    folding (:func:`old_key_deleter`).
     """
     if payload_cols is None:
         skip = set(key_cols) | set(order_cols) | {op_col, old_key_col}
@@ -325,11 +343,13 @@ def scd2_versioner(
     order_cols: Sequence[str],
     op_col: str,
     payload_cols: Sequence[str],
+    old_key_col: str | None = None,
 ) -> Callable[[DataFrame], DataFrame]:
     """:func:`scd2`, built once and applied per frame (see
     :func:`compactor`)."""
     from pyspark.sql import Window
 
+    expand = old_key_deleter(key_cols, order_cols, op_col, payload_cols, old_key_col)
     ts_col = order_cols[0]
     w = Window.partitionBy(*key_cols).orderBy(*[F.col(c) for c in order_cols])
     valid_to = F.lead(F.col(ts_col)).over(w).alias("valid_to")
@@ -343,7 +363,7 @@ def scd2_versioner(
     ]
 
     def version(changes: DataFrame) -> DataFrame:
-        return changes.select("*", valid_to).where(live).select(*out)
+        return expand(changes).select("*", valid_to).where(live).select(*out)
 
     return version
 
@@ -354,11 +374,15 @@ def scd2(
     order_cols: Sequence[str] = ("produce_time_ms", "seq"),
     op_col: str = "op",
     payload_cols: Sequence[str] | None = None,
+    old_key_col: str | None = None,
 ) -> DataFrame:
     """Changelog → SCD Type-2 history: every non-delete change becomes
     a version row valid over [valid_from, valid_to); ``valid_to`` is
     the next change's time for the same key (any op, including the
     closing DELETE), null while current.
+
+    ``old_key_col``: an UPDATE that changes the PK also closes the old
+    key's open version at its time, as :func:`compact` deletes it.
 
     Where ``apply_changes`` mirrors bireme's overwrite merge
     (``ChangeLoader.java:205-330``), this keeps the full history the
@@ -367,9 +391,9 @@ def scd2(
     window sorts within each PK partition, no extra exchange).
     """
     if payload_cols is None:
-        skip = set(key_cols) | set(order_cols) | {op_col}
+        skip = set(key_cols) | set(order_cols) | {op_col, old_key_col}
         payload_cols = [c for c in changes.columns if c not in skip]
-    return scd2_versioner(key_cols, order_cols, op_col, payload_cols)(changes)
+    return scd2_versioner(key_cols, order_cols, op_col, payload_cols, old_key_col)(changes)
 
 
 def dedup_offsets(

@@ -16,7 +16,6 @@ production deploy swaps in PIL/ffmpeg bodies behind the same
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -104,91 +103,6 @@ def extract_image_features(binary_df: DataFrame) -> DataFrame:
             )
 
     return binary_df.mapInPandas(batches, schema=IMAGE_SCHEMA)
-
-
-AUDIO_SCHEMA = (
-    "doc_id long, sample_rate int, n_channels int, n_samples int,"
-    " peak int, mean_sample double, rms double"
-)
-
-
-def extract_audio_features(binary_df: DataFrame) -> DataFrame:
-    """REAL audio-decode stage: each Arrow batch's payloads run
-    through the pure-python WAV/PCM16 codec; emits rate/geometry +
-    amplitude stats. Same mapInPandas shape an ffmpeg/soundfile
-    deployment uses."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, rates, chans, counts, peaks, means, rmss = [], [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                rate, nch, samples = decode_media(bytes(payload), "audio")
-                n = len(samples)
-                ids.append(doc_id)
-                rates.append(rate)
-                chans.append(nch)
-                counts.append(n)
-                peaks.append(max((abs(s) for s in samples), default=0))
-                # int sums are exact; the single float division matches
-                # the oracle's AVG over the same exact integer sums
-                means.append(sum(samples) / n if n else 0.0)
-                rmss.append(math.sqrt(sum(s * s for s in samples) / n) if n else 0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "sample_rate": pd.Series(rates, dtype="int32"),
-                    "n_channels": pd.Series(chans, dtype="int32"),
-                    "n_samples": pd.Series(counts, dtype="int32"),
-                    "peak": pd.Series(peaks, dtype="int32"),
-                    "mean_sample": means,
-                    "rms": rmss,
-                }
-            )
-
-    return binary_df.mapInPandas(batches, schema=AUDIO_SCHEMA)
-
-
-VIDEO_SCHEMA = (
-    "doc_id long, width int, height int, n_frames int,"
-    " fps_num int, fps_den int, peak_luma int, mean_luma double"
-)
-
-
-def extract_video_features(binary_df: DataFrame) -> DataFrame:
-    """REAL video-decode stage: each Arrow batch's payloads run
-    through the pure-python Y4M/YUV420 codec; emits geometry, frame
-    count, frame rate and luma stats. Same mapInPandas shape an
-    ffmpeg/PyAV deployment uses — only the codec body changes."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ws, hs, nfs, fns, fds, peaks, means = [], [], [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, (fn, fd), frames = decode_media(bytes(payload), "video")
-                luma_sum = sum(sum(y) for y, _, _ in frames)  # exact int
-                n_px = w * h * len(frames)
-                ids.append(doc_id)
-                ws.append(w)
-                hs.append(h)
-                nfs.append(len(frames))
-                fns.append(fn)
-                fds.append(fd)
-                peaks.append(max((max(y) for y, _, _ in frames), default=0))
-                means.append(luma_sum / n_px if n_px else 0.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "n_frames": pd.Series(nfs, dtype="int32"),
-                    "fps_num": pd.Series(fns, dtype="int32"),
-                    "fps_den": pd.Series(fds, dtype="int32"),
-                    "peak_luma": pd.Series(peaks, dtype="int32"),
-                    "mean_luma": means,
-                }
-            )
-
-    return binary_df.mapInPandas(batches, schema=VIDEO_SCHEMA)
 
 
 def extract_features(binary_df: DataFrame) -> DataFrame:

@@ -1,4 +1,4 @@
-"""Plan-introspection helpers shared by tests and scripts/plan_audit.
+"""Plan-introspection helpers shared by tests and scripts/dump_plans.
 
 ``explainString`` via PythonSQLUtils is a py4j-private surface that
 shifts across PySpark releases — keep the incantation in ONE place.

@@ -21,7 +21,7 @@ _N_FRAGMENTS = 32
 
 def _scratch(prefix: str) -> str:
     """mkdtemp that is reaped at interpreter exit — these builders run
-    eagerly (gate, plan tests, plan_audit) and would otherwise leave a
+    eagerly (gate, plan tests, plan dumps) and would otherwise leave a
     full table copy in /tmp per invocation."""
     work = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, work, ignore_errors=True)
@@ -365,6 +365,7 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from bireme_spark.sinks.versioned import (
+        Versions,
         bucket_col,
         bucket_dir,
         read_state,
@@ -400,7 +401,7 @@ def sink_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_version(
         bucketed.withColumn("price", F.col("price") + 99), 3, buckets={0, 2, 4, 6}
     )
-    write_manifest(target, {b: 2 for b in range(n_buckets)}, batch_id=2)
+    write_manifest(target, Versions({b: 2 for b in range(n_buckets)}, ddl=o.schema.toDDL()), 2)
 
     stats = vacuum_versions(target, keep=1)
     state = read_state(spark, target)

@@ -14,6 +14,10 @@ an atomic manifest commit:
                                      column DDL; os.replace'd once per
                                      batch (the commit point)
 
+Every read is pinned to the manifest's column DDL (``spark.read.schema``),
+so no read starts a parquet schema-inference job: a manifest that names
+a bucket or a delta without its DDL is corrupt.
+
 The layout dir names ``_sb``/``_sv``/``_delta`` are reserved,
 collision-proof names: user tables may have columns named
 ``bucket``/``v``.
@@ -110,11 +114,10 @@ def bucket_col(key, num_buckets: int):
 class Versions(dict):
     """What one commit records: bucket→version, plus the delta version
     (None: the buckets hold every committed row), the key columns the
-    delta applies on, and the column DDL of the committed rows (None
-    when unknown: readers then infer the schema from the files). The
-    extra fields ride inside the map because the commit is
-    ``write_manifest(target_dir, versions, batch_id)``; a plain dict
-    commits buckets alone."""
+    delta applies on, and the column DDL of the committed rows (every
+    read's schema; None only while nothing is committed). The extra
+    fields ride inside the map because the commit is
+    ``write_manifest(target_dir, versions, batch_id)``."""
 
     def __init__(self, buckets=(), delta: int | None = None, key_cols: Sequence[str] = (),
                  ddl: str | None = None) -> None:
@@ -134,10 +137,11 @@ class Snapshot(NamedTuple):
 
 def snapshot(target_dir: str) -> Snapshot:
     """The last manifest commit. No manifest means nothing is committed
-    (an empty snapshot). A manifest that EXISTS but cannot be parsed
-    raises: guessing from the version dirs would adopt uncommitted
-    orphan versions as committed state — the exact exposure the
-    manifest prevents."""
+    (an empty snapshot). A manifest that EXISTS but cannot be parsed,
+    or names a bucket or a delta without the column DDL, raises:
+    guessing from the version dirs would adopt uncommitted orphan
+    versions as committed state — the exact exposure the manifest
+    prevents."""
     path = os.path.join(target_dir, _MANIFEST)
     if not os.path.exists(path):
         return Snapshot(Versions(), None)
@@ -148,12 +152,15 @@ def snapshot(target_dir: str) -> Snapshot:
         if not isinstance(versions, dict):
             raise ValueError("manifest body is not {versions: {...}}")
         batch, delta = doc.get("committed_batch"), doc.get("delta")
+        ddl = doc.get("ddl")
+        if (versions or delta is not None) and not isinstance(ddl, str):
+            raise ValueError("manifest names committed files but no column ddl")
         return Snapshot(
             Versions(
                 {int(k): int(v) for k, v in versions.items()},
                 int(delta) if delta is not None else None,
                 [str(k) for k in doc.get("key_cols", ())],
-                doc.get("ddl"),
+                ddl,
             ),
             int(batch) if batch is not None else None,
         )
@@ -165,29 +172,25 @@ def snapshot(target_dir: str) -> Snapshot:
         ) from e
 
 
-def write_manifest(target_dir: str, versions: dict[int, int], batch_id: int) -> None:
+def write_manifest(target_dir: str, versions: Versions, batch_id: int) -> None:
     """THE commit point of a batch: the bucket version dirs and the
     delta are staged first, then this single ``os.replace`` (atomic on
     POSIX) flips them all at once. Readers see the whole batch or none
     of it — per-bucket renames alone expose mixed versions to a reader
     that lands mid-batch, and a crash between renames would otherwise
-    make the half-written state look current. ``versions`` is a
-    ``Versions`` or a plain bucket→version dict."""
+    make the half-written state look current."""
     doc = {"committed_batch": batch_id, "versions": {str(k): v for k, v in versions.items()}}
-    for field in ("delta", "key_cols", "ddl"):
-        if getattr(versions, field, None):
-            doc[field] = getattr(versions, field)
+    if versions.delta is not None:
+        doc["delta"] = versions.delta
+    if versions.key_cols:
+        doc["key_cols"] = list(versions.key_cols)
+    if versions.ddl is not None:
+        doc["ddl"] = versions.ddl
     os.makedirs(target_dir, exist_ok=True)
     tmp = os.path.join(target_dir, f".{_MANIFEST}.tmp-{batch_id}")
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(doc, f)
     os.replace(tmp, os.path.join(target_dir, _MANIFEST))
-
-
-def _reader(spark: SparkSession, ddl: str | None):
-    """A parquet reader pinned to ``ddl`` when the manifest recorded it,
-    so a read starts no schema-inference job."""
-    return spark.read if ddl is None else spark.read.schema(ddl)
 
 
 def read_base(
@@ -199,7 +202,7 @@ def read_base(
     """The committed bucket versions of ``buckets`` (every bucket when
     None) with their ``_sb`` bucket column, without the delta; None when
     none of them holds a committed version. The read is pruned to those
-    version dirs."""
+    version dirs and pinned to the manifest's DDL."""
     paths = [
         p
         for b, v in sorted(versions.items())
@@ -207,9 +210,8 @@ def read_base(
     ]
     if not paths:
         return None
-    return (
-        _reader(spark, versions.ddl).option("basePath", target_dir).parquet(*paths).drop("_sv")
-    )
+    reader = spark.read.schema(versions.ddl).option("basePath", target_dir)
+    return reader.parquet(*paths).drop("_sv")
 
 
 def read_delta(spark: SparkSession, target_dir: str, versions: Versions) -> DataFrame | None:
@@ -217,8 +219,8 @@ def read_delta(spark: SparkSession, target_dir: str, versions: Versions) -> Data
     ``_sb``), or None when the commit names no delta."""
     if versions.delta is None:
         return None
-    ddl = None if versions.ddl is None else f"{versions.ddl}, {LIVE} boolean, _sb int"
-    return _reader(spark, ddl).parquet(delta_dir(target_dir, versions.delta))
+    ddl = f"{versions.ddl}, {LIVE} boolean, _sb int"
+    return spark.read.schema(ddl).parquet(delta_dir(target_dir, versions.delta))
 
 
 def apply_delta(base: DataFrame, delta: DataFrame, keys: Sequence[str]) -> DataFrame:

@@ -85,7 +85,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from bireme_spark.config import PipelineConfig, SourceConfig
-from bireme_spark.operators.cdc import KEY_SEP, compactor, key_string, scd2_versioner
+from bireme_spark.operators.cdc import KEY_SEP, compactor, key_string
+from bireme_spark.operators.cdc import old_key_deleter, scd2_versioner
 from bireme_spark.sinks import versioned
 from bireme_spark.sinks.versioned import bucket_col
 from bireme_spark.sinks.versioned import read_state  # noqa: F401 (pl.read_state stays public)
@@ -229,9 +230,10 @@ def _checkpointed(frame: DataFrame, observed: tuple[Column, Column]):
         _release_checkpoint(frame)
 
 
-def _changes(payload_cols: Sequence[str], *extra: Column) -> list[Column]:
+def _changes(payload_cols: Sequence[str], old_key: str | None) -> list[Column]:
     """The select list that makes a parsed batch fold input: key, op,
-    the order columns, any ``extra`` columns, then the payload."""
+    the order columns, the ``old_key`` column when the parse carries
+    one, then the payload."""
     return [
         F.col("key"),
         F.col("op"),
@@ -240,7 +242,7 @@ def _changes(payload_cols: Sequence[str], *extra: Column) -> list[Column]:
         # Kafka: the real broker offset. File: batch-local row id
         # (deterministic for a fixed file list read order).
         F.coalesce(F.col("src_offset"), F.monotonically_increasing_id()).alias("src_offset"),
-        *extra,
+        *([F.col(old_key)] if old_key else []),
         *[F.col(f"data.{c}").alias(c) for c in payload_cols],
     ]
 
@@ -251,7 +253,7 @@ def _fold(payload_cols: Sequence[str], carries_old_key: bool) -> Callable[[DataF
     every sink). ``carries_old_key``: the parse has an ``old_key``
     column (a key-changing update also deletes its old key)."""
     old_key = "old_key" if carries_old_key else None
-    changes = _changes(payload_cols, *([F.col(old_key)] if old_key else []))
+    changes = _changes(payload_cols, old_key)
     fold = compactor(("key",), _ORDER, "op", payload_cols, old_key)
     return lambda parsed: fold(parsed.select(*changes))
 
@@ -498,11 +500,17 @@ def _merge_step(nb: int):
 def _scd2_step(nb: int):
     """The SCD2 step factory (see ``_run``): append the batch's version
     rows and close the open versions of the keys it touches, in the
-    history's ``nb`` buckets. The history has no old-key deletes."""
+    history's ``nb`` buckets. With ``carries_old_key`` a key-changing
+    update also touches its old key: the batch's changes carry that
+    key's synthetic DELETE (``old_key_deleter``), so the old key's
+    open version closes at the update's time and its bucket is
+    rewritten."""
 
-    def make(target_dir: str, spec: TableSpec, _carries_old_key: bool):
+    def make(target_dir: str, spec: TableSpec, carries_old_key: bool):
         payload_cols = spec.payload_cols
-        changes_cols = _changes(payload_cols)
+        old_key = "old_key" if carries_old_key else None
+        changes_cols = _changes(payload_cols, old_key)
+        expand = old_key_deleter(("key",), _ORDER, "op", payload_cols, old_key)
         observed = _observed(bucket_col("key", nb), F.lit(True))
         history = scd2_versioner(("key",), _ORDER, "op", payload_cols)
         first_ts = F.min("produce_time_ms").alias("first_ts")
@@ -546,7 +554,8 @@ def _scd2_step(nb: int):
             # anti-join all read the checkpointed batch: parse it once
             bspark = parsed.sparkSession
             snap = versioned.snapshot(target_dir)
-            with _checkpointed(parsed.select(*changes_cols), observed) as (changes, changed):
+            batch = expand(parsed.select(*changes_cols))
+            with _checkpointed(batch, observed) as (changes, changed):
                 if not changed:
                     return
                 base = versioned.read_base(bspark, target_dir, snap.versions, changed)
@@ -645,7 +654,9 @@ def run_scd2_pipeline(
     window closes versions, and the batch's first change per key
     closes the base's open version at exactly the timestamp lead()
     would have seen (tested; the gate query hash-matches the batch
-    oracle).
+    oracle). A Maxwell update that changes the PK closes the old key's
+    open version at its time, as the latest-state merge deletes that
+    key: the equal batch history is ``scd2(..., old_key_col="old_key")``.
     """
     # the history layout (key, payload, validity) is fixed: no base columns
     spec = TableSpec(data_schema, key_fields, ())

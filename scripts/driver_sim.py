@@ -26,11 +26,8 @@ import duckdb
 ROOT = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
+from bireme_spark.sources.tables import TABLES  # noqa: E402
 from bireme_spark.util import drop_persisted_blocks  # noqa: E402
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings".split()
-)
 
 TIERS = ("/root/testdata/sf0.01", "/root/testdata/sf0.1", str(ROOT / "testdata_sf1"))
 ENTRY = ROOT / "__spark_entry__.py"

@@ -7,18 +7,7 @@ import math
 
 import duckdb
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+from bireme_spark.sources.tables import TABLES
 
 
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:

@@ -116,8 +116,12 @@ def _all_plan_checkable():
 
 @pytest.mark.parametrize("name", _all_plan_checkable())
 def test_no_cartesian_products(spark, name):
+    """No accidental cross join, and no row-at-a-time pickled Python
+    UDF (``BatchEvalPython``): Python crosses the JVM boundary only
+    through the Arrow-batched paths."""
     plan = _plan(spark, name)
     assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
+    assert "BatchEvalPython" not in plan, f"{name}: row-at-a-time Python UDF in plan"
 
 
 def test_whole_stage_codegen_on_flagship(spark):

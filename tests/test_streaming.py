@@ -514,27 +514,37 @@ def test_erase_and_clone_see_the_delta(spark, tmp_path):
 def test_read_state_over_a_committed_target_starts_no_job(spark, tmp_path):
     """The manifest records the column DDL, so building read_state over
     committed buckets and a delta infers no schema: no Spark job starts
-    until the frame is read."""
-    from bireme_spark.sinks.versioned import read_state, snapshot
+    until the frame is read. The same holds for a bucket-only commit
+    staged by hand, as the sink_vacuum_retention gate query does."""
+    from bireme_spark.sinks.versioned import (
+        Versions, read_state, snapshot, version_dir, write_manifest,
+    )
 
     target = str(tmp_path / "t")
     _merge_changes(spark, target, 0, _BASE, nb=2)
     _merge_changes(spark, target, 1, [(1000, "insert", 1.0)], nb=2)
     assert snapshot(target).versions.ddl and _delta_kind(target) == "append"
 
+    by_hand = str(tmp_path / "by_hand")
+    rows = spark.createDataFrame([(k, f"v{k}") for k in range(6)], "k long, val string")
+    for b in (0, 1):
+        rows.where(f"k % 2 = {b}").write.parquet(version_dir(by_hand, b, 1))
+    write_manifest(by_hand, Versions({0: 1, 1: 1}, ddl=rows.schema.toDDL()), 1)
+
     sc = spark.sparkContext
-    group = f"read-state-{tmp_path.name}"
-    sc.setJobGroup(group, "read_state build")
-    try:
-        state = read_state(spark, target)
-        built = sc.statusTracker().getJobIdsForGroup(group)
-        assert state.count() == 201
-        read = sc.statusTracker().getJobIdsForGroup(group)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert list(built) == []
-    assert len(read) > 0
+    for name, path, n in (("merged", target, 201), ("by-hand", by_hand, 6)):
+        group = f"read-state-{name}-{tmp_path.name}"
+        sc.setJobGroup(group, "read_state build")
+        try:
+            state = read_state(spark, path)
+            built = sc.statusTracker().getJobIdsForGroup(group)
+            assert state.count() == n, name
+            read = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert list(built) == [], name
+        assert len(read) > 0, name
 
 
 def _persistent_rdd_ids(spark) -> set[int]:
@@ -758,7 +768,6 @@ def test_a_warm_merge_batch_builds_its_plan_in_few_py4j_calls(spark, tmp_path):
         return spark.createDataFrame(lines, "value string, src_partition long, src_offset long")
 
     first = batch(0, [(k, "insert") for k in range(40)])
-    row30 = want[30]
     raw = batch(1, [(k, "update") for k in range(10)] + [(20, "delete"), (50, "update", 30)])
 
     sc = spark.sparkContext
@@ -800,9 +809,9 @@ def test_a_warm_merge_batch_builds_its_plan_in_few_py4j_calls(spark, tmp_path):
 
     state = pl.read_state(spark, str(tmp_path / "merge"))
     assert {r.k: (r.a, r.b, r.c, r.d) for r in state.collect()} == want
-    # the history has no old-key deletes: key 30 keeps its open version
+    # the key-changing update closes key 30's open version
     history = pl.read_state(spark, str(tmp_path / "scd2")).where("is_current")
-    assert {int(r.key): (r.a, r.b, r.c, r.d) for r in history.collect()} == {**want, 30: row30}
+    assert {int(r.key): (r.a, r.b, r.c, r.d) for r in history.collect()} == want
 
 
 def test_tables_sharing_payload_names_keep_their_own_types(spark, tmp_path):
@@ -1122,10 +1131,74 @@ def test_scd2_pipeline_batch_replay_is_idempotent(spark, tmp_path):
     assert closed[4] is False and closed[3] == opened[2] and opened[4] is True
 
 
+def test_scd2_pipeline_with_pk_changes_equals_the_batch_history(spark, tmp_path):
+    """A Maxwell update that changes the primary key closes the old
+    key's open version at its time, in the stream as in the batch: the
+    streamed history over three micro-batches (key 3 moves to 50, then
+    50 moves back to 3) equals the one-shot batch ``scd2(...,
+    old_key_col="old_key")`` of the concatenated changelog."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from bireme_spark.config import PipelineConfig, SourceConfig
+    from bireme_spark.operators.cdc import scd2
+    from bireme_spark.sinks.versioned import read_state
+    from bireme_spark.sources.maxwell import parse_maxwell
+    from bireme_spark.streaming.pipeline import run_scd2_pipeline
+    from bireme_spark.streaming.replay import stamp_batch_mtime
+
+    def env(op, k, price, ts, old=None):
+        doc = {"database": "d", "table": "t", "type": op, "ts": ts,
+               "data": {"k": k, "price": price}}
+        if old is not None:
+            doc["old"] = {"k": old}
+        return json.dumps(doc)
+
+    batches = [
+        [env("insert", k, 1.0, 100 + k) for k in range(8)],
+        [env("update", 50, 2.0, 200, old=3), env("update", 1, 2.0, 201),
+         env("delete", 2, 1.0, 202)],
+        [env("update", 3, 3.0, 300, old=50), env("update", 60, 3.0, 301, old=4)],
+    ]
+    src = tmp_path / "in"
+    src.mkdir()
+    seen: set[str] = set()
+    for i, lines in enumerate(batches):
+        (src / f"b{i}.txt").write_text("\n".join(lines))
+        stamp_batch_mtime(str(src), i, seen)
+
+    cfg = PipelineConfig(
+        sources=[SourceConfig(name="m", kind="file", path=str(src))],
+        target_dir=str(tmp_path / "target"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        max_events_per_trigger=1,
+        num_buckets=2,
+    )
+    schema = StructType().add("k", "long").add("price", "double")
+    q = run_scd2_pipeline(spark, cfg, schema, key_fields=("k",), available_now=True)
+    q.awaitTermination(120)
+
+    def rows(df):
+        return {(r.key, r.price, r.valid_from, r.valid_to, r.is_current) for r in df.collect()}
+
+    raw = spark.createDataFrame([(line,) for b in batches for line in b], "value string")
+    changes = parse_maxwell(raw, "value", schema, ("k",)).select(
+        "key", "op", "produce_time_ms", "old_key", "data.price"
+    )
+    want = rows(scd2(changes, ("key",), ("produce_time_ms",), old_key_col="old_key"))
+    assert rows(read_state(spark, cfg.target_dir)) == want
+    current = {r[0] for r in want if r[4]}
+    assert current == {"0", "1", "3", "5", "6", "7", "60"}
+
+
 def test_corrupt_manifest_raises_not_falls_back(spark, tmp_path):
-    """A manifest that EXISTS but is unreadable must fail loudly:
-    silently downgrading to the max-version dir scan would adopt
+    """A manifest that EXISTS but is unreadable, or names buckets
+    without their column DDL, must fail loudly: silently downgrading to
+    the max-version dir scan, or to schema inference, would adopt
     uncommitted orphan versions as committed state."""
+    import json
+
     import pytest
 
     from bireme_spark.sinks.versioned import read_state, snapshot, version_dir
@@ -1139,12 +1212,14 @@ def test_corrupt_manifest_raises_not_falls_back(spark, tmp_path):
     spark.createDataFrame([(9, "ORPHAN")], "k long, val string").write.parquet(
         version_dir(target, 0, 2)
     )
-    with open(f"{target}/_manifest.json", "w") as f:
-        f.write("{truncated")
-    with pytest.raises(Exception, match="corrupt sink manifest"):
-        snapshot(target)
-    with pytest.raises(Exception, match="corrupt sink manifest"):
-        read_state(spark, target)
+    no_ddl = json.dumps({"committed_batch": 0, "versions": {"0": 1}})
+    for body in ("{truncated", no_ddl):
+        with open(f"{target}/_manifest.json", "w") as f:
+            f.write(body)
+        with pytest.raises(Exception, match="corrupt sink manifest"):
+            snapshot(target)
+        with pytest.raises(Exception, match="corrupt sink manifest"):
+            read_state(spark, target)
 
 
 def test_first_batch_crash_before_manifest_commits_nothing(spark, tmp_path, monkeypatch):
@@ -1392,7 +1467,7 @@ def test_vacuum_versions_retention_and_orphans(spark, tmp_path):
     with keep=1, and (d) leave read_state's answer unchanged."""
     import os
 
-    from bireme_spark.sinks.versioned import read_state, vacuum_versions, write_manifest
+    from bireme_spark.sinks.versioned import Versions, read_state, vacuum_versions, write_manifest
 
     target = str(tmp_path / "t")
     for b in (0, 1):
@@ -1404,7 +1479,7 @@ def test_vacuum_versions_retention_and_orphans(spark, tmp_path):
     spark.createDataFrame([(99, "ORPHAN")], "k long, val string").write.parquet(
         f"{target}/_sb=0/_sv=4"
     )
-    write_manifest(target, {0: 3, 1: 3}, batch_id=0)
+    write_manifest(target, Versions({0: 3, 1: 3}, ddl="k BIGINT,val STRING"), batch_id=0)
 
     # keep=2: committed + one prior survive; orphan goes
     stats = vacuum_versions(target, keep=2)
